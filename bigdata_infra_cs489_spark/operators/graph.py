@@ -85,37 +85,6 @@ def _release_cached(key) -> None:
             ent[0].unpersist()
 
 
-def _shuffle_partitions(spark: SparkSession) -> int:
-    """The session's shuffle-partition ceiling (scale-adaptive: conf/env
-    driven, AQE coalesces below it) — the partition count the iterative
-    loops pre-partition their cached graph to."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        return max(spark.sparkContext.defaultParallelism, 1)
-
-
-def _acquire_loop_graph(spark: SparkSession, graph: DataFrame):
-    """Cache ``graph`` hash-partitioned on id for an iterative loop.
-
-    MEASURED REJECTION (r16, kept for the record): build_graph ends in a
-    BROADCAST left join, so the cached InMemoryRelation carries no
-    useful output partitioning and every iteration's ranks⋈graph join +
-    received spine join re-exchange the cached graph. Pre-partitioning
-    on id (this helper) removes those graph-side exchanges — ppr_topk
-    dropped 72 -> 63 jobs — but WALL went 4.5 -> 6.9 s at sf0.1: the
-    fixed hash(id, shuffle.partitions) layout forbids AQE from
-    coalescing the iteration-sized frames, so every stage runs
-    shuffle.partitions tiny tasks and task overhead swamps the saved
-    exchange. The AQE-right-sized per-iteration exchange is the better
-    local shape; on a cluster the equivalent win comes from storing the
-    graph bucketed by id (sources/bucketing.py), not from a runtime
-    repartition. Unused by the loops; kept for layout-control callers."""
-    return _acquire_cached(
-        spark, partition_graph(graph, _shuffle_partitions(spark))
-    )
-
-
 def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fixture edge list (src, dst), distinct.
 

@@ -39,6 +39,7 @@ Q3_DATE = "1998-06"
 Q4_DATE = "1998-06"
 Q6_DATE = "1998"
 Q7_DATE = "1998-06-15"
+MONEY = "decimal(15,2)"  # TPC-H money type; q7 sums revenue in it
 IN_NATIONS = (3, 24)  # reference Q5.scala:33 (CANADA / UNITED STATES)
 
 
@@ -191,11 +192,17 @@ def q7(spark: SparkSession, sf_dir: str, date: str = Q7_DATE, k: int = 10) -> Da
     scans; the lineitem⋈orders join shuffles on orderkey; TakeOrderedAndProject
     does per-partition top-k heaps + driver merge (no global sort).
     o_orderpriority substitutes the fixture-absent o_shippriority.
+    The sum runs in DECIMAL (TPC-H's money type) so that a total on a half
+    cent rounds the same on every engine; a double sum can land a hair
+    below the half, where Spark and DuckDB round it differently. The
+    rounded revenue is cast back to DOUBLE.
     """
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = F.col("l_extendedprice").cast(MONEY) * (
+        1 - F.col("l_discount").cast(MONEY)
+    )
     return (
         li.where(F.col("l_shipdate") > F.lit(date).cast("timestamp"))
         .select("l_orderkey", revenue.alias("rev"))
@@ -212,7 +219,7 @@ def q7(spark: SparkSession, sf_dir: str, date: str = Q7_DATE, k: int = 10) -> Da
             date_str("o_orderdate").alias("o_orderdate"),
             "o_orderpriority",
         )
-        .agg(F.round(F.sum("rev"), 2).alias("revenue"))
+        .agg(F.round(F.sum("rev"), 2).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(k)
     )

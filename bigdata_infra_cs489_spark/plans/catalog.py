@@ -133,7 +133,9 @@ register(
     SELECT c_name, o_orderkey,
            strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
            o_orderpriority,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           CAST(round(sum(CAST(l_extendedprice AS {R.MONEY})
+                          * (1 - CAST(l_discount AS {R.MONEY}))), 2)
+                AS DOUBLE) AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
@@ -4815,10 +4817,9 @@ register(
     """,
 )
 
-# --- round-8 rotation: the staged round-7 families register -----------------
-# Each oracle below was written alongside its operator in round 7 and
-# value-verified in its family's test file while staged (the test files
-# now import these single-sourced strings, the DSIR/PII discipline).
+# --- round-8 registrations ----------------------------------------------------
+# Each family's test file imports these single-sourced oracle strings
+# (the DSIR/PII discipline).
 
 from ..operators import curate as CUR  # noqa: E402,F401  (CU already bound)
 from ..operators import extraction as EX  # noqa: E402
@@ -5371,10 +5372,9 @@ register(
     """,
 )
 
-# --- round-9 rotation: the staged round-8 families register -----------------
-# Each oracle below was written alongside its operator in round 8 and
-# value-verified in its family's test file while staged (the test files
-# now import these single-sourced strings, the DSIR/PII discipline).
+# --- round-9 registrations ----------------------------------------------------
+# Each family's test file imports these single-sourced oracle strings
+# (the DSIR/PII discipline).
 
 from ..operators import ccnet as CN  # noqa: E402
 
@@ -5972,9 +5972,8 @@ register(
 )
 
 # ============================================================================
-# Round-10 registrations: the round-9 staged queue (plans/staged.py as of
-# round 9), lifted here with their oracle SQL single-sourced (the staged
-# test files now point at __spark_entry__.oracle_sql()).
+# Round-10 registrations, with their oracle SQL single-sourced (their
+# test files point at __spark_entry__.oracle_sql()).
 # ============================================================================
 
 
@@ -6394,10 +6393,8 @@ register(
 )
 
 # -- the one-card training-run export (operators/curate.py) ------------------
-# Registered in the round-11 rotation from the round-10 staging queue
-# (value-verified + sf0.1-oracle-MATCHed while staged; see
-# tests/test_training_export.py for the reconciliation invariants and
-# the pure-Python replay). The shard spine (round-11 advisory) makes
+# See tests/test_training_export.py for the reconciliation invariants
+# and the pure-Python replay. The shard spine (round-11 advisory) makes
 # the exact reconciliation Σ span_tokens = Σ shard_tokens = T hold even
 # when a single doc out-sizes the shard capacity: shards no doc STARTS
 # in emit explicit zero-doc rows on BOTH engines.
@@ -6467,7 +6464,6 @@ register(
 )
 
 # -- strict-mode decode coverage per modality (operators/multimodal.py) ------
-# Registered in the round-11 rotation from the round-10 staging queue.
 # The oracle derives the expected classification from the fixture
 # construction rule (doc_id % 3 picks the container; only the WAV
 # payloads are complete streams), so any classifier or codec drift
@@ -6492,9 +6488,8 @@ register(
 )
 
 # ============================================================================
-# Round-13 registrations: the round-12 staged queue (plans/staged.py as
-# of round 12), lifted here with their oracle SQL single-sourced (the
-# staged test files now point at __spark_entry__.oracle_sql()).
+# Round-13 registrations, with their oracle SQL single-sourced (their
+# test files point at __spark_entry__.oracle_sql()).
 # ============================================================================
 
 # -- encode->decode round-trip coverage per modality (operators/multimodal.py)
@@ -6681,9 +6676,8 @@ register(
 )
 
 # ============================================================================
-# Round-14 registrations: the round-13 staged queue (plans/staged.py as of
-# round 13), lifted here at the r14 rotation with oracle SQL single-sourced
-# (the staged test files now point at __spark_entry__.oracle_sql()).
+# Round-14 registrations, with their oracle SQL single-sourced (their
+# test files point at __spark_entry__.oracle_sql()).
 # ============================================================================
 
 # -- per-language tokenizer fertility / compression card (operators/bpe.py) --
@@ -6832,8 +6826,7 @@ register(
 # The cross-eval-suite decontamination report: the three registered
 # contamination legs (exact shingles, banded-MinHash fuzzy, position-level
 # spans) aggregated per eval suite (suite = held-out docs' lang), one row
-# per suite. Staged in round 15 (plans/staged.py), registered at the r16
-# rotation; tests/test_contamination_scorecard.py pins a single-suite
+# per suite. tests/test_contamination_scorecard.py pins a single-suite
 # reconciliation against the three registered legs and a crafted corpus.
 
 

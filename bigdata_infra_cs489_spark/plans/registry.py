@@ -14,7 +14,9 @@ Conventions that keep the cross-engine value hash stable:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,385 +34,48 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
         _ORACLES[name] = oracle
 
 
-# The driver's correctness run covers the FIRST 50 entries of queries().
-#
-# Round-12 rotation (round 11 was truncated — 43 turns, one commit — and
-# the pre-committed r11 rotation below NEVER EXECUTED; the driver re-ran
-# the r10 window verbatim, so the r6 cohort blew its lag-5 deadline and
-# training_export / media_strict_coverage were registered without ever
-# holding a slot. This window repays that debt, per the round-11
-# verdict's task #1):
-#   slots 1-2    training_export and media_strict_coverage — registered
-#                in round 11 (catalog.py) with zero driver rows ever;
-#                first so even a truncated driver run covers them.
-#   slots 3-40   the 38 remaining r6-cohort queries whose latest driver
-#                row is CORRECTNESS_r06 (lag 6 — past the bound-5
-#                deadline; the 39th, strip_spans_keep_first, was
-#                consolidated into strip_spans_variants below),
-#                alphabetical: inverted_index_postings .. wordcount.
-#   slots 41-43  the twin-consolidation union cards
-#                (repeated/incremental/strip _spans_variants), new
-#                registrations subsuming 6 deregistered twins.
-#   slots 44-50  the 7 alphabetically-first r7-cohort queries
-#                (bigram_lm_perplexity .. dataset_split), pre-covering
-#                the 50-query r7 cohort whose deadline (extended by the
-#                missed round — see tests/test_registry_contract.py::
-#                _MISSED_ROTATIONS) is now round 13.
-#
-# ROUND-13 CARRIED WORK ITEM — EXECUTED (round 13, at the rotation
-# boundary as planned): every integer-ratio round(x, N) finish migrated
-# to the floor-micro pattern on BOTH engines (catalog.py::_fr,
-# functions/numerics.py::floor_round); full-registry sweeps hash-green
-# after each wave; tests/test_round_finish_policy.py mechanizes the
-# policy (remaining round() uses must match a sanctioned
-# inexact-argument category). The banded-pair sf1 exclusion closed the
-# same round via staged oracle materialization
-# (tools/sf1_pair_oracle.py, SWEEP_SF1_PAIRS.md — 19/19 hash-green).
-#
-# FORWARD SCHEDULE, PRE-COMMITTED (satisfiability through r16 at the
-# post-consolidation registry size of 237 — 240 after the three r13
-# registrations, bound unchanged at max(4, ceil(240/50)) = 5; the
-# missed round consumed all slack, so each window below is forced up
-# to its spare slots):
-#   r13 window = 43 remaining r7-stale + 7 spare (r8-cohort head)
-#
-# R13 WINDOW, EXACT MEMBERSHIP (pre-computed at r12 close so the
-# rotation is a mechanical paste — the round-11 failure mode was an
-# abstract plan that never got executed; this one is concrete).
-# EXECUTED VERBATIM as the first round-13 commit: the three staged
-# cards registered in catalog.py (queue emptied), _DRIVER_WINDOW_FIRST
-# below holds exactly these 50 slots:
-#   slots 1-3   the round-12 staged queue on registration:
-#               media_roundtrip_coverage, incremental_training_export,
-#               bitext_margin_pairs (staged late in round 12; takes the
-#               slot of the displaced r8-head pre-cover
-#               contamination_near, per the displacement rule below)
-#   slots 4-46  the 43 r7-stale (latest row CORRECTNESS_r07),
-#               alphabetical: degree_distribution, doc_fingerprints,
-#               dsir_scores, dsir_topk, error_click_window_counts,
-#               events_apply_changes, events_asof_last_click,
-#               events_cube_counts, events_distinct_users,
-#               events_gap_filled_counts, events_hash_sample,
-#               events_rollup_counts, events_sketch_check,
-#               events_sliding_counts, events_snapshot_diff,
-#               events_tumbling_counts, events_value_percentiles,
-#               gopher_pass_rates, gopher_quality_flags,
-#               ivf_topk_indexed, lang_mixture_sample, media_meta,
-#               order_quartiles, pii_redact, pii_stats,
-#               profile_lineitem, quality_stratified_sample,
-#               repetition_stats, stream_dedup, stream_enriched,
-#               stream_error_click_join, stream_running_counts,
-#               stream_session_windows, stream_sliding_counts,
-#               stream_tumbling_counts, tbl_scan_nation, token_counts,
-#               top_users_by_type, triangle_count, user_event_gaps,
-#               user_funnel, user_rolling_value, user_type_pivot
-#   slots 47-50 the 4 alphabetically-first r8-cohort queries:
-#               bloom_prefilter_check, bpe_merges, bpe_token_counts,
-#               cms_heavy_hitters (contamination_near displaced to the
-#               r14 window by the third staged card)
-# (If round 13 stages MORE new queries before its rotation, they must
-# displace r8-head pre-covers, never r7-stale slots.)
-#   r14 window = 46 remaining r8-stale + the 2-card r13 staged queue +
-#                2 spare (r9-cohort head) — EXACT MEMBERSHIP pre-computed
-#                at r13 close as DATA (_NEXT_WINDOW_PLAN below; the count
-#                is 46, not the 44 the r12 schedule estimated: the r8
-#                cohort measured 50, minus the 4 r13-window pre-covers):
-#     slots 1-2   tokenizer_fertility + repeat_spectrum (the round-13
-#                 staged queue on registration — plans/staged.py,
-#                 oracles in tests/test_tokenizer_fertility.py and
-#                 tests/test_repeat_spectrum.py)
-#     slots 2-47  the 46 r8-stale (latest row CORRECTNESS_r08, after
-#                 the four r13 pre-covers land their rows),
-#                 alphabetical: contamination_near, corpus_curate_v2,
-#                 corpus_report, customer_rfm, dedup_keep_best,
-#                 dsir_resample, dup_line_stats,
-#                 editdist_near_duplicates, embedding_drift,
-#                 events_json_stats, events_quality_gate,
-#                 events_sessionize, html_extract, html_link_edges,
-#                 incremental_dedup_assign, incremental_line_dedup,
-#                 ivf_topk_trained, ivf_train_centroids, ivfpq_topk,
-#                 ivfpq_topk_indexed, jaccard_prefix_join,
-#                 jsonl_roundtrip_events, k_anonymity_report,
-#                 lang_mixture_rates, leakage_safe_split,
-#                 line_dedup_corpus, lsh_topk_indexed,
-#                 minhash_estimate_error, orc_roundtrip_customer,
-#                 pack_manifest, partitioned_day_scan, pq_codes,
-#                 pq_topk, quality_model_report, quality_model_scores,
-#                 quality_model_weights, rp_projected, rp_recall_topk,
-#                 schema_evolution_events, sequence_pack,
-#                 source_dedup_rates, source_lang_entropy, spam_apply,
-#                 spam_ensemble_average, spam_ensemble_vote,
-#                 stream_line_dedup
-#     slots 49-50 the 2 alphabetically-first r9-cohort queries:
-#                 ab_test_zscore, bpe_encode_stats
-#   (Round 14 EXECUTED this window verbatim as its first commit —
-#   _DRIVER_WINDOW_FIRST below — with both staged cards registered.)
-#   r15 window = 47 remaining r9-stale + 3 spare (r11-cohort head) —
-#                EXACT MEMBERSHIP pre-computed at r14 close as DATA;
-#                EXECUTED VERBATIM as the first round-15 commit
-#                (_DRIVER_WINDOW_FIRST below; incremental_repeat_
-#                spectrum registered, staged queue emptied).
-#   r16 window = r11 cohort (45 post-consolidation, deadline r16) minus
-#                r15 pre-covers (2 after incremental_repeat_spectrum
-#                displaced bm25_retrieval) = 43 forced + 6 spare
-#                (r12-cohort head) + the contamination_scorecard staged
-#                card — EXECUTED VERBATIM as the first round-16 commit
-#                (_DRIVER_WINDOW_FIRST below; queue emptied).
-#   r17 window = r12 cohort (50, deadline r17) minus the 6 r16
-#                pre-covers = 44 forced + 6 spare — _NEXT_WINDOW_PLAN
-#                below.
-# Max lag stays ≤ bound (5, +1 for cohorts spanning the missed round
-# 11) for every cohort through r17 iff net new registrations stay ≤ the
-# spare slots above — i.e. ≤7 in r15, ≤7 in r16.
-#
-# Round-10 rotation (executes the window pre-committed in round 9):
-#   slots 1-12   the full round-9-staged queue, registered this round
-#                and never driver-checked: the exact-vs-scoped embedding
-#                recall card, crawl PageRank, the langid confusion
-#                matrix, the cluster-size histogram, the dedup-index
-#                commit step, BPE vocab coverage, the shard manifest,
-#                the per-source perplexity ranking, the streaming
-#                token-drift twin, the quality-signal cross-tab, and the
-#                LSH tuning pair (threshold curve + banding recall).
-#                Each was value-verified in pytest while staged plus a
-#                12-query sf0.1 oracle run (staged_oracle_sf01_r9.log).
-#   slots 13-38  the 26 remaining r5-stale queries (incremental_curate
-#                .. weighted_sample_topn) at their lag-5 deadline —
-#                exactly the cohort the round-9 pre-commitment reserved
-#                these slots for.
-#   slots 39-50  SEMANTIC-CHANGE re-checks + the r6-cohort head:
-#                embedding_near_duplicates and semantic_dedup_keep_best
-#                re-enter because round 10 moved their registered
-#                threshold from the 0.9 operator default (zero pairs in
-#                the random fixtures at every SF — vacuously green) to
-#                REGISTERED_PAIR_THRESHOLD = 0.4 where the pair-finding
-#                path produces non-empty, oracle-matched output
-#                (round-9 verdict, What's wrong #1); both are r6-cohort
-#                members anyway. split_balance_report re-enters because
-#                the deviation_ppm divisor moved to milli-doc rescale
-#                (round-9 advisory: whole-doc flooring over-alarmed on
-#                tiny strata). The remaining 9 slots take the
-#                alphabetical head of the round-6 cohort (bigram_rel_freq
-#                .. inverted_index_df).
-#
-# ROUND-11 WINDOW, PRE-COMMITTED: after this rotation 39 r6-cohort
-# queries remain at lag 4 — they reach lag 5 at round 11 and MUST hold
-# slots. The round-10 staging queue CLOSED AT 2 (plans/staged.py:
-# training_export, media_strict_coverage — both sf0.1-oracle-MATCHed in
-# staged_oracle_sf01_r10.log), so the r11 window = the 39 r6-stale +
-# those 2 newly registered + the 9 alphabetically-first r7-cohort
-# queries. Pre-covering 9 of the r7 cohort is the point: the r7 cohort
-# (50 queries) reaches lag 5 at round 12 and would otherwise consume
-# the ENTIRE r12 window — with 9 pre-covered, r12 = 41 r7-stale + up to
-# 9 slots for round-11-staged registrations. At the resulting
-# 240-query registry the staleness bound stays max(4, ceil(240/50)) = 5; the
-# registry is near rotation saturation (240 of 250 coverable in 5
-# rounds), so net new registrations beyond ~2-3 per round must be paid
-# for by pre-covering future cohorts in spare slots.
-#
-# Round-9 rotation (kept for provenance; new registrations + staleness
-# refresh):
-#   slots 1-15   the full round-8-staged queue (plans/staged.py as of
-#                round 8), registered this round and never
-#                driver-checked: CCNet perplexity terciles ×2, the
-#                temperature mixture plan, split-balance QA, the
-#                crawl-link histogram + frontier, PQ distortion,
-#                contamination spans, CDC chunk dedup, the curation
-#                funnel, container-invariant media dedup, the
-#                cross-method near-dup audit, token drift,
-#                daily-anomaly scan, and bpe_encode_stats. Each was
-#                value-verified in pytest (inline oracle + independent
-#                Python/NumPy reimplementation) while staged, plus a
-#                13-query sf0.1 oracle run (staged_oracle_sf01_r8.log);
-#                the driver row is the remaining external evidence.
-#   slots 16-29  the 14-query r4-stale overflow deferred from round 8
-#                (spam_model_auc .. weekly_active_users), now at lag 5 —
-#                exactly the size-derived staleness bound
-#                max(4, ceil(226/50)) = 5 rounds mechanized by
-#                tests/test_registry_contract.py.
-#   slots 30-50  the 21 alphabetically-first queries of the 47-query
-#                round-5 cohort (ab_test_zscore ..
-#                incremental_agg_refresh; all equally old).
-# The round-8 advisory fix (split_balance_report deviation_ppm int64
-# rescale) changes only a slot entering the window this round.
-#
-# ROUND-10 WINDOW, PRE-COMMITTED (the r10 staleness head-off): the
-# remaining 26 r5-stale queries (incremental_curate ..
-# weighted_sample_topn) MUST hold slots — they reach lag 5 at round 10.
-# That leaves 24 slots for round-9-staged registrations first, then the
-# alphabetical head of the round-6 cohort (50 queries, lag 4 at r10).
-# The r6 cohort's overflow reaches lag 5 at round 11 and fits the
-# following window iff new registrations stay ≤ 24 slots per round at
-# the current registry size — keep the r9 staging queue within that.
-# The round-9 queue closed at 12 (plans/staged.py: embedding_dedup_recall,
-# crawl_pagerank, langid_confusion, dedup_cluster_hist,
-# dedup_index_commit, bpe_vocab_coverage, export_shards,
-# source_perplexity_report, stream_token_drift,
-# quality_signal_agreement, jaccard_threshold_curve,
-# lsh_banding_recall), so the r10 window = 26 r5-stale + 12 newly
-# registered + the 12 alphabetically-first r6-cohort queries; at the
-# resulting 238-query registry the bound is max(4, ceil(238/50)) = 5,
-# and the r6 cohort only reaches lag 5 at round 11 — one full window
-# of slack.
-_DRIVER_WINDOW_FIRST = (
-    # ROUND-16 WINDOW — _NEXT_WINDOW_PLAN (r15 close) executed verbatim
-    # as the first round-16 commit: the staged card registered in
-    # catalog.py (queue emptied), this tuple assigned from the plan.
-    # -- slots 1-43: latest driver row round 11 (deadline r16) ----------
-    "bm25_retrieval",
-    "boolean_retrieval",
-    "bpe_vocab_coverage",
-    "chunk_embed_topk",
-    "cosine_topk",
-    "crawl_pagerank",
-    "dedup_cluster_hist",
-    "dedup_exact",
-    "dedup_index_commit",
-    "embedding_dedup_recall",
-    "embedding_near_duplicates",
-    "export_shards",
-    "hard_negative_pairs",
-    "incremental_curate",
-    "incremental_span_stats",
-    "inverted_index_df",
-    "jaccard_threshold_curve",
-    "label_propagation_communities",
-    "langid_confusion",
-    "lsh_banding_recall",
-    "media_features",
-    "nation_market_share",
-    "pagerank_topk",
-    "ppr_topk",
-    "promo_revenue_share",
-    "quality_signal_agreement",
-    "semantic_dedup_keep_best",
-    "session_cooccurrence",
-    "source_capped_sample",
-    "source_perplexity_report",
-    "source_quality_percentiles",
-    "spam_calibration_bins",
-    "split_balance_report",
-    "stream_token_drift",
-    "top_return_customers",
-    "top_suppliers_by_revenue",
-    "top_terms_per_lang",
-    "user_erasure_audit",
-    "user_rolling_anomalies",
-    "user_value_anomalies",
-    "user_value_deciles",
-    "video_frames",
-    "weighted_sample_topn",
-    # -- slots 44-49: r12-cohort alphabetical head (deadline r17) -------
-    "bigram_lm_perplexity",
-    "boilerplate_fraction",
-    "boilerplate_ngrams",
-    "clean_corpus",
-    "contamination_flags",
-    "customers_without_orders",
-    # -- slot 50: the round-15 staged queue, registered this round ------
-    "contamination_scorecard",
-)
+# The driver checks the first 50 entries of queries() against their
+# oracles each round and records the results in CORRECTNESS_r{N}.json at
+# the repo root. Ordering by each name's latest row in that ledger,
+# oldest first, keeps every query's last check as recent as 50 slots a
+# round allow.
+def read_ledger() -> dict[str, int]:
+    """name -> the latest round N whose CORRECTNESS_rN.json holds a row for it."""
+    latest: dict[str, int] = {}
+    for p in Path(__file__).resolve().parents[2].glob("CORRECTNESS_r*.json"):
+        rnd = int(p.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(p.read_text()):
+            latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
-# THE PRE-COMMITTED R17 WINDOW AS DATA (round-16 close). Round 11 proved
-# a rotation plan that lives only in prose can silently not happen; the
-# r13 rotation was safe because its membership was a paste-able comment.
-# This goes one step further: the next window is a TUPLE the contract
-# suite validates on every run (names resolve against registered+staged,
-# exactly 50 unique slots, and every query whose staleness deadline is
-# the next-next round holds a slot — see tests/test_registry_contract.py
-# ::test_next_window_plan_is_satisfiable). The r17 rotation then simply
-# assigns: _DRIVER_WINDOW_FIRST = _NEXT_WINDOW_PLAN (after lifting any
-# staged queue into catalog.py). 44 of 50 slots are forced by the
-# r12-stale cohort; net new round-16 registrations must stay <= 6 and
-# displace the spare pre-covers below from the TAIL (degree_distribution
-# first), never a stale slot.
-_NEXT_WINDOW_PLAN = (
-    # slots 1-44: the 44 r12-stale (latest row CORRECTNESS_r12; the r12
-    # cohort measured 50, minus the 6 r16-window pre-covers
-    # bigram_lm_perplexity .. customers_without_orders), alphabetical:
-    "dataset_split",
-    "incremental_spans_variants",
-    "inverted_index_postings",
-    "ivf_assignments",
-    "ivf_centroid_norms",
-    "ivf_topk",
-    "knn_label_accuracy",
-    "lang_temperature_rates",
-    "lang_temperature_sample",
-    "language_id",
-    "lsh_codes",
-    "lsh_topk",
-    "media_strict_coverage",
-    "minhash_near_duplicates",
-    "minhash_signatures",
-    "near_duplicate_clusters",
-    "ngram_jaccard_pairs",
-    "phrase_retrieval",
-    "pmi_pairs",
-    "pmi_stripes",
-    "pmi_word_line_counts",
-    "positional_postings",
-    "ppr_graph_edges",
-    "ppr_graph_stats",
-    "ppr_mass_conservation",
-    "prefix_count",
-    "q1_count_shipped",
-    "q2_orders_semijoin_topk",
-    "q3_lineitem_part_supplier",
-    "q4_shipments_by_nation",
-    "q5_monthly_shipments_two_nations",
-    "q6_pricing_summary",
-    "q7_top_revenue_orders",
-    "ranked_retrieval",
-    "repeated_spans_variants",
-    "semantic_search",
-    "simhash_fingerprints",
-    "simhash_near_duplicates",
-    "spam_training_set",
-    "strip_spans_variants",
-    "text_quality",
-    "tfidf_scores",
-    "training_export",
-    "wordcount",
-    # slots 45-50: r13-cohort alphabetical head (pre-cover; r16 staging
-    # displaces these from the tail, never an r12-stale slot). The r13
-    # cohort measures 50, so r18 = 44 forced + 6 spare with these
-    # pre-covers in place.
-    "bitext_margin_pairs",
-    "bloom_prefilter_check",
-    "bpe_merges",
-    "bpe_token_counts",
-    "cms_heavy_hitters",
-    "degree_distribution",
-)
-
-
-def _window_order(names: list[str]) -> list[str]:
-    windowed = set(_DRIVER_WINDOW_FIRST)
-    front = [n for n in _DRIVER_WINDOW_FIRST if n in names]
-    rest = [n for n in names if n not in windowed]
-    return front + rest
+def driver_order(names: Iterable[str], latest: dict[str, int]) -> list[str]:
+    """Oldest driver row first; never-checked names count as round 0;
+    ties break alphabetically."""
+    return sorted(names, key=lambda n: (latest.get(n, 0), n))
 
 
 def queries() -> dict[str, QueryFn]:
     _load_all()
-    return {n: _QUERIES[n] for n in _window_order(list(_QUERIES))}
+    return {n: _QUERIES[n] for n in driver_order(_QUERIES, _LATEST)}
 
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return {n: _ORACLES[n] for n in _window_order(list(_ORACLES))}
+    return {n: _ORACLES[n] for n in driver_order(_ORACLES, _LATEST)}
 
 
 _LOADED = False
+_LATEST: dict[str, int] = {}
 
 
 def _load_all() -> None:
-    """Import every operator module for its registration side effects."""
+    """Import every operator module for its registration side effects
+    and read the driver ledger once."""
     global _LOADED
     if _LOADED:
         return
     from . import catalog  # noqa: F401
 
+    _LATEST.update(read_ledger())
     _LOADED = True

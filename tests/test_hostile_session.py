@@ -106,20 +106,3 @@ def test_loud_failure_message_names_the_conf():
 
     src = inspect.getsource(tables.load)
     assert "nanosAsLong" in src and "raise RuntimeError" in src
-
-
-def test_staged_queue_parity_under_hostile_session(hostile, sf_smoke):
-    """The staged queue holds the same foreign-session bar as the
-    registry BEFORE registration (the r16 rotation lifted
-    contamination_scorecard into catalog slot 50; the r16 queue is
-    empty — round 16 is an optimization round): every queue entry must
-    match its oracle under the non-UTC, AQE-off, shuffle=7 session.
-    Oracle SQL is imported from each card's own test module so this
-    never drifts from the queue's single source."""
-    from bigdata_infra_cs489_spark.plans.staged import staged_queries
-
-    oracles: dict[str, str] = {}
-    qs = staged_queries()
-    assert set(qs) == set(oracles)  # a queue edit must update this map
-    for name, fn in qs.items():
-        assert_matches_oracle(fn(hostile, sf_smoke), oracles[name], sf_smoke)

@@ -140,26 +140,3 @@ def test_no_content_keyed_windows_in_source():
             if pat.search(line):
                 offenders.append(f"{py.name}:{i}: {line.strip()}")
     assert offenders == [], offenders
-
-
-# Round-7 staged operators (registration queued for the next window
-# rotation) — the same plan-hygiene bar applies BEFORE they reach the
-# registry, so the queue can't regress while it waits. The streaming
-# twin and the sequential-SGD trainers follow the ITERATIVE exclusion
-# rationale (post-hoc/loop plans) and are exercised by their own tests.
-def _staged_queries():
-    from bigdata_infra_cs489_spark.plans.staged import staged_queries
-
-    return [(n, fn) for n, fn in staged_queries().items() if n not in ITERATIVE]
-
-
-@pytest.mark.parametrize(
-    "name,fn", _staged_queries(), ids=[n for n, _ in _staged_queries()]
-)
-def test_staged_plan_hygiene(spark, sf_smoke, name, fn):
-    plan = _plan(fn(spark, sf_smoke))
-    assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
-    assert not _global_window_lines(plan), (
-        f"{name} has a single-partition window: {_global_window_lines(plan)}"
-    )
-    assert "Batched: false" not in plan, f"{name} has a non-vectorized scan"

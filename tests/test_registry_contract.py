@@ -2,36 +2,20 @@
 
 from __future__ import annotations
 
+import math
+
 from bigdata_infra_cs489_spark.plans import registry
 
 # Rounds in which the driver ran but NO window rotation executed (the
 # driver re-checked the previous round's 50 queries verbatim, so the
 # round contributed zero new rotation capacity). Round 11 was such a
-# round — truncated at 43 turns, the pre-committed rotation in
-# plans/registry.py was never applied (round-11 VERDICT.md, "What's
-# wrong" #1/#2). A query whose lag-5 deadline spans a missed round gets
-# its deadline extended by exactly the missed rounds in that span:
-# with only 50 driver slots per round the original deadline became
-# mathematically unsatisfiable the moment the rotation was skipped, and
-# silently relaxing the bound for everyone would also excuse FUTURE
-# skipped rotations — this pinned set excuses only the documented one.
+# round. A query whose lag-5 deadline spans a missed round gets its
+# deadline extended by exactly the missed rounds in that span: with only
+# 50 driver slots per round the original deadline became unsatisfiable
+# the moment the rotation was skipped, and silently relaxing the bound
+# for everyone would also excuse FUTURE skipped rotations — this pinned
+# set excuses only the documented one.
 _MISSED_ROTATIONS = frozenset({11})
-
-
-def test_window_names_all_registered():
-    """_window_order silently drops unknown names (deliberate, so new
-    queries can be listed ahead of registration) — but once a round's
-    window is final, every listed name must resolve or a backlog query
-    silently takes the driver slot."""
-    qs = registry.queries()
-    missing = [n for n in registry._DRIVER_WINDOW_FIRST if n not in qs]
-    assert missing == [], f"window names not registered: {missing}"
-    assert len(registry._DRIVER_WINDOW_FIRST) == 50
-
-
-def test_window_has_no_duplicates():
-    w = registry._DRIVER_WINDOW_FIRST
-    assert len(set(w)) == len(w)
 
 
 def test_every_query_has_oracle():
@@ -39,133 +23,63 @@ def test_every_query_has_oracle():
     a deliberate, documented exception (there are currently none)."""
     qs, os_ = registry.queries(), registry.oracle_sql()
     assert set(qs) == set(os_)
+    assert list(qs) == list(os_)
+
+
+def test_driver_order_oldest_first_alphabetical_ties():
+    latest = {"alpha": 9, "beta": 3, "delta": 3, "retired": 1}
+    names = ["alpha", "zeta", "delta", "gamma", "beta"]
+    assert registry.driver_order(names, latest) == [
+        "gamma",  # never checked: round 0, ties broken alphabetically
+        "zeta",
+        "beta",  # oldest row, tie with delta broken alphabetically
+        "delta",
+        "alpha",
+    ]
+
+
+def _next_window() -> tuple[dict[str, int], dict, set[str]]:
+    """Ledger, registered queries and the next driver round's window (the
+    first 50 queries())."""
+    qs = registry.queries()
+    return registry.read_ledger(), qs, set(list(qs)[:50])
 
 
 def test_every_query_driver_checked_or_windowed():
-    """Mechanized rotation contract (hand-maintained for three rounds):
-    every registered query must either already have a driver hash row in
-    some CORRECTNESS_r*.json, or sit inside the next window's first 50
-    slots — otherwise a registration would silently wait unverified."""
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    seen: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        seen |= set(json.loads(p.read_text()))
-    qs = registry.queries()
-    windowed = set(registry._DRIVER_WINDOW_FIRST[:50])
-    orphans = [n for n in qs if n not in seen and n not in windowed]
-    assert orphans == [], (
-        f"registered but never driver-checked and not in the next window: {orphans}"
-    )
+    """Every registered query that was never driver-checked must sit in
+    the next driver round's window, or a registration would silently wait
+    unverified."""
+    latest, qs, window = _next_window()
+    never = [n for n in qs if n not in latest and n not in window]
+    assert never == [], f"never driver-checked and not in the next window: {never}"
 
 
 def test_stale_driver_rows_rotate_oldest_first():
-    """No registered query's LATEST driver row may lag more than
-    ceil(#registered / 50) rounds behind the newest CORRECTNESS file
-    unless it holds a slot in the upcoming window — the
-    staleness-hygiene rule from the round-5 verdict, mechanized.
+    """Every query whose latest driver row would pass its staleness
+    deadline if the next driver round skipped it must sit in that round's
+    window.
 
-    The bound derives from registry size because it is the tightest
+    The lag bound derives from registry size because it is the tightest
     SATISFIABLE one: the driver refreshes exactly 50 queries per round,
-    so a full rotation of N registered queries takes ceil(N/50) rounds —
-    a fixed 3-round bound becomes mathematically impossible past 200
-    queries no matter how the windows are chosen (floor 4 keeps the
-    historical bound while N <= 200)."""
-    import json
-    import math
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    newest = 0
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        newest = max(newest, rnd)
-        for name in json.loads(p.read_text()):
-            latest[name] = max(latest.get(name, 0), rnd)
-    n_registered = len(registry.queries())
-    lag_bound = max(4, math.ceil(n_registered / 50))
-    windowed = set(registry._DRIVER_WINDOW_FIRST[:50])
+    so a full rotation of N registered queries takes ceil(N/50) rounds
+    (floor 4 keeps the historical bound while N <= 200)."""
+    latest, qs, window = _next_window()
+    upcoming = max(latest.values(), default=0) + 1
+    lag_bound = max(4, math.ceil(len(qs) / 50))
 
     def deadline(r: int) -> int:
-        """Round by which query with latest row r must re-enter a window:
+        """Round by which a query with latest row r must be re-checked:
         r + bound, pushed back one round per documented missed rotation
-        inside that span (see _MISSED_ROTATIONS)."""
+        inside that span."""
         d = r + lag_bound
         d += sum(1 for m in _MISSED_ROTATIONS if r < m <= d)
         return d
 
-    stale = [
-        n
-        for n, r in latest.items()
-        if n in registry.queries() and newest >= deadline(r) and n not in windowed
+    due = [
+        n for n in qs if n in latest and deadline(latest[n]) <= upcoming and n not in window
     ]
-    assert stale == [], (
-        f"driver rows past their rotation deadline"
-        f" (bound {lag_bound} for {n_registered} queries,"
-        f" missed rotations {sorted(_MISSED_ROTATIONS)}): {stale}"
-    )
-
-
-def test_next_window_plan_is_satisfiable():
-    """The PRE-COMMITTED next-round window (registry._NEXT_WINDOW_PLAN)
-    must be executable as a mechanical paste when the next rotation
-    lands: exactly 50 unique slots; every name resolves against the
-    registered queries or the staged queue; and — simulating the
-    upcoming driver round giving rows to the CURRENT window — every
-    registered query whose staleness deadline is the next-next round
-    holds a slot. Mechanizes the pre-commitment discipline that the
-    round-11 missed rotation proved necessary (a plan that lives only
-    in prose can silently not happen)."""
-    import json
-    import math
-    import re
-    from pathlib import Path
-
-    from bigdata_infra_cs489_spark.plans.staged import staged_queries
-
-    plan = registry._NEXT_WINDOW_PLAN
-    assert len(plan) == 50
-    assert len(set(plan)) == 50
-
-    qs = registry.queries()
-    staged = staged_queries()
-    unresolved = [n for n in plan if n not in qs and n not in staged]
-    assert unresolved == [], f"plan names neither registered nor staged: {unresolved}"
-    missing_staged = [n for n in staged if n not in plan]
-    assert missing_staged == [], (
-        f"staged queries must hold next-window slots on registration: {missing_staged}"
-    )
-
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    newest = 0
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        newest = max(newest, rnd)
-        for name in json.loads(p.read_text()):
-            latest[name] = max(latest.get(name, 0), rnd)
-    # simulate the upcoming driver round covering the CURRENT window
-    upcoming = newest + 1
-    for name in registry._DRIVER_WINDOW_FIRST:
-        latest[name] = max(latest.get(name, 0), upcoming)
-    n_registered = len(qs) + len(staged)  # post-rotation registry size
-    lag_bound = max(4, math.ceil(n_registered / 50))
-
-    def deadline(r: int) -> int:
-        d = r + lag_bound
-        d += sum(1 for m in _MISSED_ROTATIONS if r < m <= d)
-        return d
-
-    forced = [
-        n
-        for n, r in latest.items()
-        if n in qs and deadline(r) <= upcoming + 1 and n not in plan
-    ]
-    assert forced == [], (
-        f"queries at their deadline in round {upcoming + 1} missing from "
-        f"_NEXT_WINDOW_PLAN: {forced}"
+    assert due == [], (
+        f"driver rows at their round-{upcoming} deadline but not in the next window"
+        f" (bound {lag_bound} for {len(qs)} queries,"
+        f" missed rotations {sorted(_MISSED_ROTATIONS)}): {due}"
     )

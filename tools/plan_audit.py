@@ -37,20 +37,11 @@ def audit(sf_dir: str) -> str:
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    from bigdata_infra_cs489_spark.plans.staged import staged_queries
 
     rows = []
-    staged_rows = []
-    audit_list = [
-        (name, fn, False)
-        for name, fn in registry.queries().items()
-        if name not in ITERATIVE
-    ] + [
-        (name, fn, True)
-        for name, fn in staged_queries().items()
-        if name not in ITERATIVE
-    ]
-    for name, fn, is_staged in audit_list:
+    for name, fn in registry.queries().items():
+        if name in ITERATIVE:
+            continue
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
         n_range = len(re.findall(r"Exchange rangepartitioning", plan))
@@ -61,7 +52,7 @@ def audit(sf_dir: str) -> str:
         n_shj = len(re.findall(r"ShuffledHashJoin", plan))
         n_py = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow", plan))
         pushed = "yes" if re.search(r"PushedFilters: \[(?!\])", plan) else ""
-        (staged_rows if is_staged else rows).append(
+        rows.append(
             (name, n_hash, n_range, n_rr, n_bcast_x, n_bhj, n_smj + n_shj, n_py, pushed)
         )
     lines = [
@@ -102,20 +93,6 @@ def audit(sf_dir: str) -> str:
         "plan begins, so the range column undercounts them (the distsort "
         "cost model lives in operators/distsort.py).",
     ]
-    if staged_rows:
-        lines += [
-            "",
-            "## Staged (registration queued for the next window rotation)",
-            "",
-            "Same columns; these hold the same plan bar via "
-            "`tests/test_plan_hygiene.py::test_staged_plan_hygiene` "
-            "(queue single-sourced in `plans/staged.py`).",
-            "",
-            "| query | hash | range | rr | bx | bj | sj | py | pf |",
-            "|---|---|---|---|---|---|---|---|---|",
-        ]
-        for r in staged_rows:
-            lines.append("| " + " | ".join(str(x) for x in r) + " |")
     return "\n".join(lines) + "\n"
 
 

@@ -4,10 +4,11 @@ For each named query (default: all), runs it at $SPARK_GRAFT_SF_DIR with
 the bench methodology (collect, min of N samples, clearCache between
 samples) and captures the formatted physical plan plus a one-line shape
 summary (exchanges, join strategies, Python eval nodes). Plans land in
---plan-dir when given (e.g. plans/r15/<name>_before.txt).
+--plan-dir when given (e.g. /tmp/plans/<name>_before.txt; keep plan
+dumps out of the repo).
 
 Usage:
-    python -m tools.profile_query [--samples 2] [--plan-dir plans/r15]
+    python -m tools.profile_query [--samples 2] [--plan-dir /tmp/plans]
         [--suffix _before] [names...]
 """
 
