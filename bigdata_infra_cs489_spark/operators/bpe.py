@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 N_MERGES = 8
 
@@ -144,19 +145,10 @@ BPE_VOCAB_VERSION = 1
 
 
 def bpe_vocab_path(sf_dir: str) -> str:
-    """Deterministic standing segmented-vocabulary location for one data
-    generation, keyed on the documents parquet's (size, mtime_ns), the
-    merge count and BPE_VOCAB_VERSION."""
-    import os
-
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"bpevocab_v{BPE_VOCAB_VERSION}_{label}_{sig}_m{N_MERGES}",
+    """Standing segmented-vocabulary location for one data generation of
+    the documents table, keyed on the merge count and BPE_VOCAB_VERSION."""
+    return asset_path(
+        sf_dir, "documents", f"bpevocab_v{BPE_VOCAB_VERSION}", f"m{N_MERGES}"
     )
 
 
@@ -167,30 +159,21 @@ def standing_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer: a model-registry entry, never retrained per batch). Built
     on first touch by the inline train_bpe loop (8 sequential
     pair-count/argmax jobs — the honest training price, paid once per
-    data generation) and published with the dedup-index atomic protocol,
-    then probed as a parquet scan by the encode/coverage/fertility
-    cards. The registered bpe_merges card stays the inline training
-    bootstrap. Values are bit-identical (exact integer counts, string
-    symbol arrays; parquet round-trips both exactly); the DuckDB oracles
-    replay the inline chain, unchanged."""
+    data generation), then probed as a parquet scan by the
+    encode/coverage/fertility cards. The registered bpe_merges card
+    stays the inline training bootstrap. Values are bit-identical (exact
+    integer counts, string symbol arrays; parquet round-trips both
+    exactly); the DuckDB oracles replay the inline chain, unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-
-    path = bpe_vocab_path(sf_dir)
-    sub = os.path.join(path, "vocab")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"vocab.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        _, vocab = train_bpe(spark, sf_dir)
-        vocab.write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    path = ensure(
+        bpe_vocab_path(sf_dir),
+        ("vocab",),
+        lambda tmp: train_bpe(spark, sf_dir)[1].write.parquet(
+            os.path.join(tmp, "vocab")
+        ),
+    )
+    return spark.read.parquet(os.path.join(path, "vocab"))
 
 
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

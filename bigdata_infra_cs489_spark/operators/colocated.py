@@ -25,18 +25,19 @@ from pyspark.sql import functions as F
 
 from ..sources.bucketing import write_bucketed_table
 from ..sources.tables import load
+from .assets import fixture_sig
 
 N_BUCKETS = 16
 TOP_CUSTOMERS = 10
 
 
 def _table_sig(sf_dir: str, name: str) -> str:
-    st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
+    size, mtime_ns = fixture_sig(sf_dir, name)
     label = os.path.basename(os.path.normpath(sf_dir))
     # identifier-safe: a '.' in the label (sf0.001) would parse as a
     # schema separator in the table name
     label = "".join(c if c.isalnum() else "_" for c in label)
-    return f"bkt_{name}_{label}_{st.st_size}_{st.st_mtime_ns}"
+    return f"bkt_{name}_{label}_{size}_{mtime_ns}"
 
 
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:

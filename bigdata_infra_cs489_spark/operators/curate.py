@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h8
 from ..sources.tables import load
-from .dedup import q_exact_dedup, standing_full_clusters
+from . import assets
+from .dedup import dedup_index_path, q_exact_dedup, standing_full_clusters
 from .distsort import with_running_totals
 from .sampling import CLUSTER_SPLIT_SALT, TRAIN_PCT, VAL_PCT
 from .spans import dup_span_stats
@@ -110,22 +111,17 @@ def _curate_plan_key() -> str:
 
 
 def curate_manifest_path(sf_dir: str) -> str:
-    """Deterministic standing-manifest location for one data generation:
-    keyed on the dedup standing-index key (which already encodes the
-    documents fixture's (size, mtime_ns), the MinHash/LSH parameters and
-    DEDUP_INDEX_VERSION — the cluster lineage is an input to curation)
-    plus a digest of the curate-plan constants (_curate_plan_key) and
-    CURATE_MANIFEST_VERSION, so fixture regeneration, a dedup-parameter
-    change, a split/span/gate constant change, or a curate-plan change
-    each invalidate the asset."""
+    """Standing-manifest location for one data generation: keyed on the
+    dedup standing-index key (the cluster lineage is an input to
+    curation) plus a digest of the curate-plan constants
+    (_curate_plan_key) and CURATE_MANIFEST_VERSION, so fixture
+    regeneration, a dedup-parameter change, a split/span/gate constant
+    change, or a curate-plan change each invalidate the asset."""
     import os
-
-    from .dedup import dedup_index_path
-    from .vector_index import INDEX_ROOT
 
     base = os.path.basename(dedup_index_path(sf_dir))
     return os.path.join(
-        INDEX_ROOT,
+        assets.INDEX_ROOT,
         f"curate_v{CURATE_MANIFEST_VERSION}_{base}_k{_curate_plan_key()}",
     )
 
@@ -135,35 +131,27 @@ def standing_packed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted table a recurring training-data job maintains (every
     consumer docstring in this module already describes it as exactly
     that; this makes the description literal). Built on first touch by
-    running the inline corpus_curate lineage once and published with the
-    dedup-index atomic-rename protocol (torn builds rebuilt, concurrent
-    builders race-safe), then probed as a plain parquet scan. The packed
-    manifest is budget-bounded (Σ kept_tokens <= CURATE_TOKEN_BUDGET),
-    so the asset is export-sized — tiny relative to the corpus — and the
-    probe is O(export), which is the 100 TB-correct recurring shape:
-    export_shards / training_export / incremental_training_export are
-    manifest READERS, not corpus re-curators. Output is bit-identical to
-    the inline lineage by construction (same plan, materialized once;
-    parquet round-trips int64/double/string exactly); the DuckDB oracles
-    replay the full inline chain, unchanged — every sweep row certifies
-    asset == oracle."""
+    running the inline corpus_curate lineage once, then probed as a
+    plain parquet scan. The packed manifest is budget-bounded
+    (Σ kept_tokens <= CURATE_TOKEN_BUDGET), so the asset is export-sized
+    — tiny relative to the corpus — and the probe is O(export), which is
+    the 100 TB-correct recurring shape: export_shards / training_export
+    / incremental_training_export are manifest READERS, not corpus
+    re-curators. Output is bit-identical to the inline lineage by
+    construction (same plan, materialized once; parquet round-trips
+    int64/double/string exactly); the DuckDB oracles replay the full
+    inline chain, unchanged — every sweep row certifies asset ==
+    oracle."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-
-    path = curate_manifest_path(sf_dir)
-    sub = os.path.join(path, "packed")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"packed.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        corpus_curate(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    path = assets.ensure(
+        curate_manifest_path(sf_dir),
+        ("packed",),
+        lambda tmp: corpus_curate(spark, sf_dir).write.parquet(
+            os.path.join(tmp, "packed")
+        ),
+    )
+    return spark.read.parquet(os.path.join(path, "packed"))
 
 
 def _curate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:

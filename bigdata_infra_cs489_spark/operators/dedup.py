@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.numerics import floor_round
 from ..functions.text import tokenize
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 NUM_HASHES = 16
 NUM_BANDS = 4  # 4 rows per band
@@ -701,27 +702,17 @@ DEDUP_INDEX_VERSION = 1
 
 
 def dedup_index_path(sf_dir: str) -> str:
-    """Deterministic standing-index location for one fixture directory,
-    keyed on the documents parquet's (size, mtime_ns) — the
-    vector_index_path discipline: fixture regeneration changes the key,
-    so probes can never read bands/clusters built from a previous
-    generation of the data. The MinHash/LSH parameters and the
-    DEDUP_INDEX_VERSION code version are part of the key so a constant
-    or implementation change also invalidates."""
-    import os
-
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    # the verify threshold shapes the persisted CLUSTERS (pairs are kept
-    # at jaccard >= threshold before CC), so it must be part of the key
+    """Standing-index location for one data generation of the documents
+    table. The MinHash/LSH parameters and DEDUP_INDEX_VERSION are part
+    of the key so a constant or implementation change also invalidates;
+    the verify threshold shapes the persisted CLUSTERS (pairs are kept
+    at jaccard >= threshold before CC), so it is keyed too."""
     jpct = round(JACCARD_THRESHOLD * 100)
-    return os.path.join(
-        INDEX_ROOT,
-        f"dedupidx_v{DEDUP_INDEX_VERSION}_{label}_{sig}_h{NUM_HASHES}"
-        f"b{NUM_BANDS}n{SHINGLE_N}m{NEW_BATCH_MOD}j{jpct}",
+    return asset_path(
+        sf_dir,
+        "documents",
+        f"dedupidx_v{DEDUP_INDEX_VERSION}",
+        f"h{NUM_HASHES}b{NUM_BANDS}n{SHINGLE_N}m{NEW_BATCH_MOD}j{jpct}",
     )
 
 
@@ -772,122 +763,36 @@ def write_dedup_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     )
 
 
-def _dedup_index_complete(path: str) -> bool:
-    import os
-
-    return all(
-        os.path.exists(os.path.join(path, sub, "_SUCCESS"))
-        for sub in ("clusters", "bands", "shingles")
-    )
-
-
 def ensure_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the standing index iff this data generation doesn't have one
-    yet. The build lands in a private temp directory and is published
-    with ONE atomic rename, so two concurrent builders (pytest +
-    verify_sweep both seeing a missing _SUCCESS) can never interleave
-    writes into the same directory — the loser just discards its temp
-    build. A torn previous build (no complete _SUCCESS set at the final
-    path) is rebuilt the same way."""
-    import os
-    import shutil
-    import uuid
-
-    path = dedup_index_path(sf_dir)
-    if not _dedup_index_complete(path):
-        tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        write_dedup_index(spark, sf_dir, tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # `path` already exists: another builder published first, a
-            # torn dir remains, or an independent asset (clusters_full)
-            # created the directory. Publish per-subdir — keep any
-            # complete subdir already there, replace torn ones — so a
-            # concurrent or sibling publisher is never clobbered.
-            for sub in ("clusters", "bands", "shingles"):
-                _publish_subdir(os.path.join(tmp, sub), os.path.join(path, sub))
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
-def _publish_subdir(src: str, dst: str) -> None:
-    """Publish one complete build subdir at ``dst``, racing safely with
-    concurrent publishers: a dst that already carries _SUCCESS always
-    stands (never deleted out from under a reader); a TORN dst is moved
-    ASIDE by rename (so a reader mid-listing keeps a valid path) and the
-    rename into place is retried, treating "dst now complete" as success
-    — the loser of any race discards its copy instead of raising."""
-    import os
-    import shutil
-    import uuid
-
-    for _ in range(5):
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
-            return
-        try:
-            os.rename(src, dst)
-            return
-        except OSError:
-            # dst exists: complete (another publisher won — done) or
-            # torn (move it aside, then retry the rename).
-            if os.path.exists(os.path.join(dst, "_SUCCESS")):
-                return
-            torn = f"{dst}.torn-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            try:
-                os.rename(dst, torn)
-            except OSError:
-                continue  # a racer moved/replaced dst first; re-check
-            if os.path.exists(os.path.join(torn, "_SUCCESS")):
-                # TOCTOU guard: dst COMPLETED between the _SUCCESS
-                # re-check and the move-aside, so ``torn`` is a complete
-                # copy a reader may already have resolved
-                # (spark.read.parquet lists files lazily at action
-                # time). Publish it back instead of deleting it — this
-                # is what makes the "never deleted out from under a
-                # reader" guarantee hold; if a racer re-occupied dst
-                # meanwhile, keep whichever complete copy stands and
-                # only discard ours once dst carries _SUCCESS.
-                try:
-                    os.rename(torn, dst)
-                    return
-                except OSError:
-                    if os.path.exists(os.path.join(dst, "_SUCCESS")):
-                        shutil.rmtree(torn, ignore_errors=True)
-                        return
-                    # dst torn again: our complete copy becomes the
-                    # publish source and the loop retries the rename.
-                    src = torn
-                    continue
-            shutil.rmtree(torn, ignore_errors=True)
-    raise OSError(f"could not publish {dst}: persistent publish race")
+    yet."""
+    return ensure(
+        dedup_index_path(sf_dir),
+        ("clusters", "bands", "shingles"),
+        lambda tmp: write_dedup_index(spark, sf_dir, tmp),
+    )
 
 
 def standing_full_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus near-dup cluster map (doc_id, cluster_id) served as a
     STANDING asset: the materialized output of q_near_duplicate_clusters,
     built on first touch under the same keyed index directory as the
-    incremental bands/clusters/shingles (own ``clusters_full`` subdir,
-    own _SUCCESS gate, atomic temp-dir publish) and probed as a plain
-    parquet scan afterwards. This is the warm path the curate flagship
-    rides: a recurring 100 TB curation job maintains its cluster map as
-    a table and only the bootstrap pays the iterative CC. Output is
-    bit-identical to the inline lineage by construction (same plan,
-    materialized once); the DuckDB oracles are unchanged."""
+    incremental bands/clusters/shingles (own ``clusters_full`` subdir)
+    and probed as a plain parquet scan afterwards. This is the warm path
+    the curate flagship rides: a recurring 100 TB curation job maintains
+    its cluster map as a table and only the bootstrap pays the iterative
+    CC. Output is bit-identical to the inline lineage by construction
+    (same plan, materialized once); the DuckDB oracles are unchanged."""
     import os
-    import shutil
-    import uuid
 
-    path = dedup_index_path(sf_dir)
-    sub = os.path.join(path, "clusters_full")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        tmp = os.path.join(
-            path, f"clusters_full.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        q_near_duplicate_clusters(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    path = ensure(
+        dedup_index_path(sf_dir),
+        ("clusters_full",),
+        lambda tmp: q_near_duplicate_clusters(spark, sf_dir).write.parquet(
+            os.path.join(tmp, "clusters_full")
+        ),
+    )
+    return spark.read.parquet(os.path.join(path, "clusters_full"))
 
 
 def incremental_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:

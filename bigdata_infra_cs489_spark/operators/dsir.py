@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h8
 from ..functions.text import exploded_tokens
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 DSIR_BUCKETS = 1024  # hashed-ngram feature-space size (fixed at any scale)
 DSIR_TARGET_MOD = 13  # doc_id % MOD == 0 plays the high-quality target set
@@ -211,20 +212,14 @@ DSIR_SCORES_VERSION = 1
 
 
 def dsir_scores_path(sf_dir: str) -> str:
-    """Deterministic standing score-table location for one data
-    generation, keyed on the documents parquet's (size, mtime_ns), the
-    bucket count, the target modulus and DSIR_SCORES_VERSION."""
-    import os
-
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"dsirscores_v{DSIR_SCORES_VERSION}_{label}_{sig}"
-        f"_b{DSIR_BUCKETS}t{DSIR_TARGET_MOD}",
+    """Standing score-table location for one data generation of the
+    documents table, keyed on the bucket count, the target modulus and
+    DSIR_SCORES_VERSION."""
+    return asset_path(
+        sf_dir,
+        "documents",
+        f"dsirscores_v{DSIR_SCORES_VERSION}",
+        f"b{DSIR_BUCKETS}t{DSIR_TARGET_MOD}",
     )
 
 
@@ -234,30 +229,22 @@ def standing_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained per-doc weight column a data-mixing pipeline attaches to
     its corpus once per target definition and every selection/resample
     job reads (Xie et al. 2023 compute weights once, then draw). Built
-    on first touch by the inline dsir_scores lineage, published with the
-    dedup-index atomic protocol, probed as a parquet scan by the
-    selection and resampling cards; the registered dsir_scores card
-    stays the inline bootstrap. Values bit-identical (exact int64
-    score_micro/n_tokens; avg_logratio is the floor-micro double, which
-    parquet round-trips exactly); the DuckDB oracles replay the inline
-    chain, unchanged."""
+    on first touch by the inline dsir_scores lineage, probed as a
+    parquet scan by the selection and resampling cards; the registered
+    dsir_scores card stays the inline bootstrap. Values bit-identical
+    (exact int64 score_micro/n_tokens; avg_logratio is the floor-micro
+    double, which parquet round-trips exactly); the DuckDB oracles
+    replay the inline chain, unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-
-    path = dsir_scores_path(sf_dir)
-    sub = os.path.join(path, "scores")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"scores.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        dsir_scores(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    path = ensure(
+        dsir_scores_path(sf_dir),
+        ("scores",),
+        lambda tmp: dsir_scores(spark, sf_dir).write.parquet(
+            os.path.join(tmp, "scores")
+        ),
+    )
+    return spark.read.parquet(os.path.join(path, "scores"))
 
 
 def dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

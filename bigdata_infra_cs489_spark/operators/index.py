@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 N_BUCKETS = 64
 
@@ -331,40 +332,24 @@ LOOKUP_TERMS = ("fast", "table", "window")
 def q_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered build-once/probe-many form of the MapFile/HBase point
     lookup family (SURVEY §2.1 S5-S7): postings persisted hash-bucketed
-    by term (write_bucketed_index), then pruned point Gets for a fixed
-    probe set, unioned. Each probe's foldable bucket predicate prunes the
-    scan to 1/N_BUCKETS of the files before the term filter runs — the
-    BooleanRetrievalCompressed.java:106-128 seek, as partition pruning.
-    The oracle recomputes the same postings directly, so hash parity
-    proves the sink+lookup path loses nothing.
-
-    Since round 10 the index is a REAL standing asset: keyed on the
-    documents parquet's content (the dedup/vector index discipline —
-    fixture regeneration changes the key), built once behind a _SUCCESS
-    gate, and published atomically from a private temp directory. The
-    previous form rebuilt into a fixed temp path on EVERY call with a
-    direct overwrite — both a per-call rebuild the write-once story
-    says shouldn't happen and the concurrent-overwrite race the
-    round-10 parallel sweep exposed on the vector index."""
+    by term (write_bucketed_index) as a standing asset keyed on the
+    documents table's data generation, then pruned point Gets for a
+    fixed probe set, unioned. Each probe's foldable bucket predicate
+    prunes the scan to 1/N_BUCKETS of the files before the term filter
+    runs — the BooleanRetrievalCompressed.java:106-128 seek, as
+    partition pruning. The oracle recomputes the same postings directly,
+    so hash parity proves the sink+lookup path loses nothing."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        INDEX_ROOT,
-        f"termidx_{sf_tag}_{st.st_size}_{st.st_mtime_ns}_b{N_BUCKETS}",
+    path = ensure(
+        asset_path(sf_dir, "documents", "termidx", f"b{N_BUCKETS}"),
+        ("postings",),
+        lambda tmp: write_bucketed_index(
+            postings(spark, sf_dir), os.path.join(tmp, "postings")
+        ),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        write_bucketed_index(postings(spark, sf_dir), tmp)
-        _publish_subdir(tmp, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-    out = lookup_term(spark, path, LOOKUP_TERMS[0])
+    idx = os.path.join(path, "postings")
+    out = lookup_term(spark, idx, LOOKUP_TERMS[0])
     for t in LOOKUP_TERMS[1:]:
-        out = out.unionByName(lookup_term(spark, path, t))
+        out = out.unionByName(lookup_term(spark, idx, t))
     return out

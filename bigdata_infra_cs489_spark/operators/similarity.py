@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.numerics import floor_round
 
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -563,20 +564,14 @@ KMEANS_MODEL_VERSION = 1
 def kmeans_model_path(
     sf_dir: str, n_centroids: int, iterations: int
 ) -> str:
-    """Deterministic standing trained-quantizer location for one data
-    generation, keyed on the embeddings parquet's (size, mtime_ns), the
-    centroid count, the iteration count and KMEANS_MODEL_VERSION."""
-    import os
-
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"kmeansmodel_v{KMEANS_MODEL_VERSION}_{label}_{sig}"
-        f"_c{n_centroids}i{iterations}",
+    """Standing trained-quantizer location for one data generation of the
+    embeddings table, keyed on the centroid count, the iteration count
+    and KMEANS_MODEL_VERSION."""
+    return asset_path(
+        sf_dir,
+        "embeddings",
+        f"kmeansmodel_v{KMEANS_MODEL_VERSION}",
+        f"c{n_centroids}i{iterations}",
     )
 
 
@@ -590,31 +585,21 @@ def standing_kmeans_centroids(
     STANDING asset — the model-registry entry a production vector index
     trains once and every probe/build job reads. Built on first touch by
     the inline kmeans_centroids loop (the honest training price, paid
-    once per data generation) and published with the dedup-index atomic
-    protocol, then probed as a parquet scan by the trained-IVF
-    consumers; the registered ivf_train_centroids card stays the inline
-    trainer. Values are bit-identical (the centroid doubles are computed
-    driver-side and parquet round-trips them exactly); the DuckDB
-    oracles replay the unrolled-k-means chain, unchanged."""
+    once per data generation), then probed as a parquet scan by the
+    trained-IVF consumers; the registered ivf_train_centroids card stays
+    the inline trainer. Values are bit-identical (the centroid doubles
+    are computed driver-side and parquet round-trips them exactly); the
+    DuckDB oracles replay the unrolled-k-means chain, unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-
-    path = kmeans_model_path(sf_dir, n_centroids, iterations)
-    sub = os.path.join(path, "centroids")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"centroids.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        kmeans_centroids(
+    path = ensure(
+        kmeans_model_path(sf_dir, n_centroids, iterations),
+        ("centroids",),
+        lambda tmp: kmeans_centroids(
             spark, sf_dir, n_centroids, iterations
-        ).write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+        ).write.parquet(os.path.join(tmp, "centroids")),
+    )
+    return spark.read.parquet(os.path.join(path, "centroids"))
 
 
 N_HYPERPLANES = 16

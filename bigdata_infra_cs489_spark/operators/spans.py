@@ -40,6 +40,7 @@ from ..functions.numerics import floor_round
 
 from ..functions.text import tokenize
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 SPAN_K = 5  # window width in tokens; minimum detectable duplicated span
 SPAN_MIN_COUNT = 2  # corpus-wide occurrences for a window to count as dup
@@ -338,24 +339,16 @@ SPAN_INDEX_VERSION = 1
 
 
 def span_index_path(sf_dir: str) -> str:
-    """Deterministic standing gram-index location for one data
-    generation, keyed on the documents parquet's (size, mtime_ns) plus
-    the parameters that shape the gram set (SPAN_K, the new-batch
-    modulus) and SPAN_INDEX_VERSION — the dedup_index_path discipline:
-    fixture regeneration or a parameter change can never serve a stale
-    index."""
-    import os
-
+    """Standing gram-index location for one data generation of the
+    documents table, keyed on the parameters that shape the gram set
+    (SPAN_K, the new-batch modulus) and SPAN_INDEX_VERSION."""
     from .dedup import NEW_BATCH_MOD
-    from .vector_index import INDEX_ROOT
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"spanidx_v{SPAN_INDEX_VERSION}_{label}_{sig}"
-        f"_k{SPAN_K}m{NEW_BATCH_MOD}",
+    return asset_path(
+        sf_dir,
+        "documents",
+        f"spanidx_v{SPAN_INDEX_VERSION}",
+        f"k{SPAN_K}m{NEW_BATCH_MOD}",
     )
 
 
@@ -364,40 +357,29 @@ def standing_old_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     asset — the maintained table every incremental_spans docstring in
     this module describes. Built on first touch (one explode + distinct
     over the old corpus, the cost a deployment pays once per corpus
-    generation) and published with the dedup-index atomic protocol,
-    then probed as a plain parquet scan by every increment query. Gram
-    STRINGS are stored so the string-keyed oracle twin stays exact; the
-    fingerprint probe derives xxhash64 from the stored strings (an
-    index-sized projection — at 100 TB the persisted table would store
-    the 8-byte fingerprints directly, as repeated_spans_fp's contract
-    notes). Output is bit-identical to the inline distinct by
+    generation), then probed as a plain parquet scan by every increment
+    query. Gram STRINGS are stored so the string-keyed oracle twin stays
+    exact; the fingerprint probe derives xxhash64 from the stored
+    strings (an index-sized projection — at 100 TB the persisted table
+    would store the 8-byte fingerprints directly, as repeated_spans_fp's
+    contract notes). Output is bit-identical to the inline distinct by
     construction; the DuckDB oracles replay the inline chain,
     unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import NEW_BATCH_MOD, _publish_subdir
+    from .dedup import NEW_BATCH_MOD
 
-    path = span_index_path(sf_dir)
-    sub = os.path.join(path, "grams_old")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"grams_old.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-        (
-            _grams(spark, sf_dir)
-            .where(~is_new)
-            .select("gram")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
+    path = ensure(
+        span_index_path(sf_dir),
+        ("grams_old",),
+        lambda tmp: _grams(spark, sf_dir)
+        .where(~is_new)
+        .select("gram")
+        .distinct()
+        .write.parquet(os.path.join(tmp, "grams_old")),
+    )
+    return spark.read.parquet(os.path.join(path, "grams_old"))
 
 
 def _incremental_hits(
@@ -898,24 +880,16 @@ SPECTRUM_INDEX_VERSION = 1
 
 
 def spectrum_index_path(sf_dir: str) -> str:
-    """Deterministic standing context-index location for one data
-    generation, keyed on the documents parquet's (size, mtime_ns) plus
-    the parameters that shape the id sets (REPEAT_LEVELS, the new-batch
-    modulus) and SPECTRUM_INDEX_VERSION — the span_index_path
-    discipline: fixture regeneration or a parameter change can never
-    serve a stale index."""
-    import os
-
+    """Standing context-index location for one data generation of the
+    documents table, keyed on the parameters that shape the id sets
+    (REPEAT_LEVELS, the new-batch modulus) and SPECTRUM_INDEX_VERSION."""
     from .dedup import NEW_BATCH_MOD
-    from .vector_index import INDEX_ROOT
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"spectrumidx_v{SPECTRUM_INDEX_VERSION}_{label}_{sig}"
-        f"_l{REPEAT_LEVELS}m{NEW_BATCH_MOD}",
+    return asset_path(
+        sf_dir,
+        "documents",
+        f"spectrumidx_v{SPECTRUM_INDEX_VERSION}",
+        f"l{REPEAT_LEVELS}m{NEW_BATCH_MOD}",
     )
 
 
@@ -924,24 +898,15 @@ def standing_old_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     every doubling width — repeat_spectrum's per-width vocabulary as a
     persisted asset. Built on first touch (one doubling chain over the
     old corpus, the cost a deployment pays once per corpus generation),
-    published with the dedup-index atomic protocol, PARTITIONED BY
-    width so each increment probe prunes to exactly its level's
-    directory, then served as a plain parquet scan. Output is
+    PARTITIONED BY width so each increment probe prunes to exactly its
+    level's directory, then served as a plain parquet scan. Output is
     bit-identical to the inline per-level distinct by construction; the
     DuckDB oracle replays the inline chain, unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import NEW_BATCH_MOD, _publish_subdir
+    from .dedup import NEW_BATCH_MOD
 
-    path = spectrum_index_path(sf_dir)
-    sub = os.path.join(path, "contexts_old")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"contexts_old.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
+    def build(tmp: str) -> None:
         is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
         docs = (
             load(spark, sf_dir, "documents", parallelize=True)
@@ -957,15 +922,17 @@ def standing_old_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = per_level[0]
         for fr in per_level[1:]:
             out = out.unionByName(fr)
-        out.write.mode("overwrite").partitionBy("width").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
+        out.write.partitionBy("width").parquet(os.path.join(tmp, "contexts_old"))
+
+    path = ensure(spectrum_index_path(sf_dir), ("contexts_old",), build)
     # explicit schema: an all-new-batch corpus yields zero rows at every
     # width, and the partitionBy write then leaves no data file to infer
     # from — schema'd read returns the well-typed empty frame instead of
     # throwing (partition column `width` resolves from directory names
     # when partitions exist)
-    return spark.read.schema("id string, width bigint").parquet(sub)
+    return spark.read.schema("id string, width bigint").parquet(
+        os.path.join(path, "contexts_old")
+    )
 
 
 def incremental_repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:

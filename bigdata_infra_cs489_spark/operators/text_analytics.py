@@ -30,6 +30,7 @@ from ..functions.numerics import floor_round
 
 from ..functions.text import tokenize
 from ..sources.tables import load
+from .assets import asset_path, ensure
 
 MIN_COUNT = 10  # reference threshold (PairsPMI.java:107, CooccurrencePairs.java:126)
 PMI_TOKEN_CAP = 100  # PairsPMI.java:56 (first 100 non-empty cleaned tokens)
@@ -344,21 +345,13 @@ LM_SCORES_VERSION = 1
 
 
 def lm_scores_path(sf_dir: str) -> str:
-    """Deterministic standing LM-score-table location for one data
-    generation, keyed on the documents parquet's (size, mtime_ns), the
-    smoothing mass and LM_SCORES_VERSION — fixture regeneration or a
-    model change can never serve stale scores."""
-    import os
-
-    from .vector_index import INDEX_ROOT
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    kpm = round(LM_K * 1000)
-    return os.path.join(
-        INDEX_ROOT,
-        f"lmscores_v{LM_SCORES_VERSION}_{label}_{sig}_k{kpm}",
+    """Standing LM-score-table location for one data generation of the
+    documents table, keyed on the smoothing mass and LM_SCORES_VERSION."""
+    return asset_path(
+        sf_dir,
+        "documents",
+        f"lmscores_v{LM_SCORES_VERSION}",
+        f"k{round(LM_K * 1000)}",
     )
 
 
@@ -376,22 +369,15 @@ def standing_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips the double exactly); the DuckDB oracles replay the
     inline chain, unchanged."""
     import os
-    import shutil
-    import uuid
 
-    from .dedup import _publish_subdir
-
-    path = lm_scores_path(sf_dir)
-    sub = os.path.join(path, "scores")
-    if not os.path.exists(os.path.join(sub, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(
-            path, f"scores.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        )
-        bigram_lm_perplexity(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        _publish_subdir(tmp, sub)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(sub)
+    path = ensure(
+        lm_scores_path(sf_dir),
+        ("scores",),
+        lambda tmp: bigram_lm_perplexity(spark, sf_dir).write.parquet(
+            os.path.join(tmp, "scores")
+        ),
+    )
+    return spark.read.parquet(os.path.join(path, "scores"))
 
 
 TOP_TERMS_K = 10

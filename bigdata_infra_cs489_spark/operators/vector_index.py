@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .assets import asset_path, ensure
 from .similarity import (
     LSH_BAND_BITS,
     LSH_N_BANDS,
@@ -54,25 +55,12 @@ from .similarity import (
     lsh_codes,
 )
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-INDEX_ROOT = os.environ.get(
-    "SPARK_GRAFT_INDEX_DIR", os.path.join(_REPO_ROOT, "spark-warehouse")
-)
-
 
 def vector_index_path(sf_dir: str) -> str:
-    """Deterministic index location for one fixture directory, keyed on
-    the embeddings parquet's (size, mtime_ns): fixture regeneration
-    changes the key, so probes can never read buckets built from a
-    previous generation of the data."""
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"vecidx_{label}_{sig}_c{N_CENTROIDS}_h{N_HYPERPLANES}",
+    """Index location for one data generation of the embeddings table,
+    keyed on the centroid and hyperplane counts."""
+    return asset_path(
+        sf_dir, "embeddings", "vecidx", f"c{N_CENTROIDS}_h{N_HYPERPLANES}"
     )
 
 
@@ -113,33 +101,12 @@ def write_vector_index(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the index iff this data generation doesn't have one yet.
-    The _SUCCESS-gated check makes a torn previous build rebuild.
-
-    The build lands in a private temp directory and publishes per-subdir
-    through the shared atomic-rename helper — the round-10 parallel
-    sweep caught the previous direct ``mode("overwrite")`` into the
-    FINAL path racing against a concurrent prober (two callers both see
-    a missing _SUCCESS, both overwrite the same directory, and a reader
-    mid-scan gets a torn layout): the exact publish race the round-9
-    advisory flagged on the dedup index, which this module had too."""
-    import shutil
-    import uuid
-
-    from .dedup import _publish_subdir
-
-    path = vector_index_path(sf_dir)
-    if not all(
-        os.path.exists(os.path.join(path, sub, "_SUCCESS"))
-        for sub in ("ivf", "lsh")
-    ):
-        tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        write_vector_index(spark, sf_dir, tmp)
-        os.makedirs(path, exist_ok=True)
-        for sub in ("ivf", "lsh"):
-            _publish_subdir(os.path.join(tmp, sub), os.path.join(path, sub))
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    """Build the index iff this data generation doesn't have one yet."""
+    return ensure(
+        vector_index_path(sf_dir),
+        ("ivf", "lsh"),
+        lambda tmp: write_vector_index(spark, sf_dir, tmp),
+    )
 
 
 def append_to_vector_index(

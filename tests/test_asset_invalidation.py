@@ -1,4 +1,4 @@
-"""Standing-asset invalidation keys, pinned (round-13 verdict #4).
+"""Standing-asset invalidation keys, pinned.
 
 Every write-once asset is keyed on (fixture size, mtime_ns) + the
 value-shaping parameters + a bumpable ``*_VERSION`` constant. These
@@ -129,3 +129,28 @@ def test_curate_plan_constants_are_keyed(tmp_path, monkeypatch):
     assert curate.curate_manifest_path(sf_dir) != before
     monkeypatch.undo()
     assert curate.curate_manifest_path(sf_dir) == before
+
+
+def test_asset_mechanism_lives_in_one_module():
+    """The key signature, the temp-build naming and the publish helper
+    exist only in operators/assets.py; every asset reaches them through
+    asset_path / ensure."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bigdata_infra_cs489_spark",
+    )
+    owner = os.path.join("operators", "assets.py")
+    offenders = []
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            rel = os.path.relpath(os.path.join(d, f), pkg)
+            if not f.endswith(".py") or rel == owner:
+                continue
+            with open(os.path.join(d, f)) as fh:
+                text = fh.read()
+            offenders += [
+                (rel, tok)
+                for tok in ("st_mtime_ns", ".build-", "_publish_subdir")
+                if tok in text
+            ]
+    assert offenders == []

@@ -350,7 +350,7 @@ def test_publish_subdir_race_semantics(tmp_path):
     as success instead of raising."""
     import os
 
-    from bigdata_infra_cs489_spark.operators.dedup import _publish_subdir
+    from bigdata_infra_cs489_spark.operators.assets import _publish_subdir
 
     def build(name: str, marker: bool, payload: str) -> str:
         d = tmp_path / name
@@ -389,7 +389,7 @@ def test_publish_subdir_toctou_complete_copy_survives(tmp_path, monkeypatch):
     _SUCCESS into dst at the move-aside call."""
     import os
 
-    from bigdata_infra_cs489_spark.operators.dedup import _publish_subdir
+    from bigdata_infra_cs489_spark.operators.assets import _publish_subdir
 
     src = tmp_path / "src"
     src.mkdir()

@@ -65,23 +65,28 @@ def _all_queries():
     return [(n, fn) for n, fn in entrymod.queries().items() if n not in ITERATIVE]
 
 
+# The distsort offsets fold: a partition-less window whose order spec is
+# exactly the single private `__ds_pid` key.
+_DS_PID_FOLD = re.compile(r"\], \[__ds_pid#\d+ (?:ASC|DESC) NULLS (?:FIRST|LAST)\]$")
+
+
 def _global_window_lines(plan: str) -> list[str]:
     # A physical Window node prints `Window [exprs], [partSpec], [orderSpec]`,
     # omitting whichever trailing spec is empty. Partition-less = fewer than
     # two trailing groups AND the sole group (if any) is an ORDER spec
     # (contains a sort direction) rather than a partition spec.
     #
-    # SCOPED EXEMPTION (r16): the distsort offsets fold — a running sum
-    # ordered by `__ds_pid` — is a partition-less window BY DESIGN over
-    # the per-partition totals frame, whose row count equals the shuffle
-    # partition COUNT (bounded by config, never by data; it replaced the
-    # r15 driver collect of the same rows). Recognized by its private
-    # order key so every other partition-less window still fails here.
+    # SCOPED EXEMPTION: the distsort offsets fold — a running sum ordered
+    # by `__ds_pid` alone — is a partition-less window BY DESIGN over the
+    # per-partition totals frame, whose row count equals the shuffle
+    # partition COUNT (bounded by config, never by data). Only an order
+    # spec of exactly that one key is exempt; any other partition-less
+    # window, including one ordered by `__ds_pid` plus more keys, fails.
     bad = []
     for ln in plan.splitlines():
         if not re.search(r"(?:^|[- ])Window \[", ln):
             continue
-        if "__ds_pid" in ln:
+        if _DS_PID_FOLD.search(ln.strip()):
             continue
         groups = ln.count("], [")
         if groups >= 2:
@@ -99,6 +104,26 @@ def test_no_row_at_a_time_python(spark, sf_smoke, name, fn):
     assert not _global_window_lines(plan), (
         f"{name} has a single-partition window: {_global_window_lines(plan)}"
     )
+
+
+def test_ds_pid_exemption_matches_only_the_offsets_fold():
+    frame = "specifiedwindowframe(RowFrame, unboundedpreceding$(), -1)"
+    fold = (
+        f"+- Window [sum(__cnt#1L) windowspecdefinition(__ds_pid#2 ASC NULLS "
+        f"FIRST, {frame}) AS _we0#3L], [__ds_pid#2 ASC NULLS FIRST]"
+    )
+    wider = (
+        f"+- Window [sum(__cnt#1L) windowspecdefinition(__ds_pid#2 ASC NULLS "
+        f"FIRST, x#4L ASC NULLS FIRST, {frame}) AS _we0#3L], "
+        f"[__ds_pid#2 ASC NULLS FIRST, x#4L ASC NULLS FIRST]"
+    )
+    leading = wider.replace(
+        "[__ds_pid#2 ASC NULLS FIRST, x#4L ASC NULLS FIRST]",
+        "[x#4L ASC NULLS FIRST, __ds_pid#2 ASC NULLS FIRST]",
+    )
+    assert _global_window_lines(fold) == []
+    assert _global_window_lines(wider) == [wider]
+    assert _global_window_lines(leading) == [leading]
 
 
 # Queries whose source is line-oriented text (.tbl CSV connector) — no
