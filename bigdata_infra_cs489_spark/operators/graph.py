@@ -17,11 +17,15 @@ Spark-first translation:
   linear-space float64: fp64 holds ~15 significant digits, so underflow
   that motivated log-space float32 cannot occur at any realistic graph
   scale (SURVEY §4 risk note); the pytest NumPy oracle pins the numerics.
-- Per-source vectors stay ArrayType(DoubleType) columns; element-wise sum
-  is a higher-order aggregate (zip_with), never a Python UDF.
-- localCheckpoint() each iteration truncates lineage (the reference's
-  SequenceFile round-trip between jobs); on a cluster use checkpoint() to
-  a reliable dir instead.
+- Per-source vectors stay ArrayType(DoubleType) columns, summed per
+  slot by k scalar F.sum aggregates, never a Python UDF.
+- One iteration (_pagerank) serves personalized and uniform PageRank;
+  only the phase-2 jump differs. Each call pins its node records once
+  with localCheckpoint(): the pin belongs to the call, whereas cache()
+  storage is shared by every frame with the same plan, so one caller's
+  unpersist() would drop another's. A lazy localCheckpoint() each
+  iteration truncates lineage (the reference's SequenceFile round-trip
+  between jobs); on a cluster use checkpoint() to a reliable dir instead.
 
 The fixture graph (FIXTURES.md §3): nodes = documents.doc_id (0..n-1),
 edges i -> {(i*k+1) % n : k in 1..(i%5)}, so i%5==0 nodes are dangling and
@@ -30,9 +34,9 @@ exercise missing-mass redistribution. Sources {0, 7}.
 
 from __future__ import annotations
 
-import threading
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -42,47 +46,6 @@ ALPHA = 0.15  # RunPersonalizedPageRankBasic.java ALPHA
 SOURCES = (0, 7)  # FIXTURES.md §3
 DEFAULT_ITERATIONS = 10
 TOP_K = 10
-
-# Spark's CacheManager keys cached data on the ANALYZED PLAN, not the
-# DataFrame object: two drivers that each .cache() the same build_graph
-# plan share ONE storage entry, and either driver's .unpersist() drops it
-# for both — under concurrent execution one loop's cleanup yanks the
-# other's cached graph mid-iteration (the round-14 sf1 parallel-sweep
-# flake: ppr_topk and ppr_mass_conservation in the same batch). The
-# shared entry itself is the right behavior at scale (the graph is
-# cached once, not per driver); what was wrong is the unscoped
-# unpersist. This registry refcounts the shared plan: acquisition caches
-# on first use, release unpersists only when the LAST concurrent holder
-# lets go. Keyed by (session, analyzed-plan text) — our graph builders
-# are deterministic, so concurrent drivers over the same inputs produce
-# byte-identical plan strings.
-_SHARED_CACHE_LOCK = threading.Lock()
-_SHARED_CACHE: dict[tuple[int, str], list] = {}  # key -> [cached_df, refcount]
-
-
-def _acquire_cached(spark: SparkSession, df: DataFrame):
-    """Cache ``df``'s plan shared + refcounted; returns (frame, key).
-
-    Always pair with ``_release_cached(key)`` in a ``finally``."""
-    key = (id(spark), df._jdf.queryExecution().analyzed().toString())
-    with _SHARED_CACHE_LOCK:
-        ent = _SHARED_CACHE.get(key)
-        if ent is None:
-            ent = [df.cache(), 0]
-            _SHARED_CACHE[key] = ent
-        ent[1] += 1
-        return ent[0], key
-
-
-def _release_cached(key) -> None:
-    with _SHARED_CACHE_LOCK:
-        ent = _SHARED_CACHE.get(key)
-        if ent is None:
-            return
-        ent[1] -= 1
-        if ent[1] <= 0:
-            del _SHARED_CACHE[key]
-            ent[0].unpersist()
 
 
 def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,23 +66,28 @@ def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id, adj array<long>, outdeg) node records; dangling nodes keep an
-    empty adj (BuildPersonalizedPageRankRecords.java:81-97)."""
-    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    adj = (
-        graph_edges(spark, sf_dir)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.sort_array(F.collect_list("dst")).alias("adj"))
+def _node_records(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, adj array<long>, outdeg) over an (id) spine and (src, dst)
+    edges; nodes without out-edges keep an empty adj
+    (BuildPersonalizedPageRankRecords.java:81-97). Parallel edges keep
+    their multiplicity: outdeg counts edge rows."""
+    adj = edges.groupBy(F.col("src").alias("id")).agg(
+        F.sort_array(F.collect_list("dst")).alias("adj")
     )
     return (
-        docs.join(adj, "id", "left")
+        nodes.join(adj, "id", "left")
         .select(
             "id",
             F.coalesce("adj", F.array().cast("array<bigint>")).alias("adj"),
         )
         .withColumn("outdeg", F.size("adj"))
     )
+
+
+def build_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Node records of the fixture graph (documents spine, graph_edges)."""
+    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
+    return _node_records(docs, graph_edges(spark, sf_dir))
 
 
 def partition_graph(graph: DataFrame, n_partitions: int) -> DataFrame:
@@ -164,67 +132,24 @@ def graph_with_observed_stats(spark: SparkSession, sf_dir: str):
     return g, obs
 
 
-def _zero_array(k: int):
-    return F.array_repeat(F.lit(0.0).cast("double"), k)
-
-
-def personalized_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    sources: tuple[int, ...] = SOURCES,
-    iterations: int = DEFAULT_ITERATIONS,
-    alpha: float = ALPHA,
-    log_space: bool = False,
-) -> DataFrame:
-    """Run the two-phase iteration; returns (id, mass array<double>) with
-    one slot per source, each summing to ~1.
-
-    ``log_space=True`` switches the mass arithmetic to the reference's
-    log-domain ⊕ (sumLogProbs, RunPersonalizedPageRankBasic.java:617-629)
-    as an underflow escape hatch for graphs large enough that linear fp64
-    (~1e-308 floor) could round tiny masses to zero — see the module
-    docstring for why that is out of reach at any realistic scale. The
-    linear path stays the default: the log path's grouped log-sum-exp
-    needs a max-then-sum pass, one extra co-partitioned join per iteration
-    (no extra shuffle — messages are repartitioned on id once and every
-    downstream agg/join reuses that partitioning)."""
-    if log_space:
-        return _personalized_pagerank_log(
-            spark, sf_dir, sources, iterations, alpha
-        )
-    graph, ckey = _acquire_cached(spark, build_graph(spark, sf_dir))
-    try:
-        return _personalized_pagerank_linear(graph, sources, iterations, alpha)
-    finally:
-        # the final ranks read from the last checkpoint, not the graph —
-        # release this holder's reference so long-lived sessions don't
-        # accumulate pinned storage (the shared entry survives while any
-        # concurrent PPR driver still iterates over it)
-        _release_cached(ckey)
-
-
-def _personalized_pagerank_linear(
+def _pagerank(
     graph: DataFrame,
-    sources: tuple[int, ...],
+    init: list[Column],
     iterations: int,
-    alpha: float,
+    jump: Callable[[int, Column, float], Column],
 ) -> DataFrame:
-    k = len(sources)
+    """The two-phase iteration over pinned node records; returns
+    (id, mass array<double>) with one slot per ``init`` column.
 
-    # initial mass: 1.0 at each source for its own slot (M3)
-    ranks = graph.select(
-        "id",
-        F.array(
-            *[
-                F.when(F.col("id") == s, F.lit(1.0)).otherwise(F.lit(0.0))
-                for s in sources
-            ]
-        ).alias("mass"),
-    )
-
+    Phase 1 sends mass/outdeg along every edge and sums it per node;
+    phase 2 is ``jump(i, mass_i, missing_i)``, where ``missing_i`` is the
+    slot's unreceived mass, 1 - total, clamped at 0 (iteratePageRank
+    :455-465)."""
+    k = len(init)
+    ranks = graph.select("id", F.array(*init).alias("mass"))
     for _ in range(iterations):
         # phase 1: distribute mass along edges, sum per destination. The
-        # per-source contributions are k scalar columns, not an array fold
+        # per-slot contributions are k scalar columns, not an array fold
         # over collect_list: F.sum gets map-side partial aggregation, while
         # collect_list would buffer every incoming message per node (an
         # executor-memory hazard on high-in-degree nodes at scale).
@@ -247,15 +172,11 @@ def _personalized_pagerank_linear(
         # missing-mass aggregate below is then the ONE action per iteration
         # that both computes the shuffle and pins its result, truncating
         # lineage without a second materialization pass. The spine is the
-        # CACHED graph's id column, not ranks: ranks sits behind the
-        # previous checkpoint whose RDD scan hides its partitioning, so a
-        # ranks spine re-shuffles every round, while the cached graph
-        # keeps hash(id) and joins the hash(id)-aggregated msgs
-        # exchange-free (same id set by construction — ranks is always a
-        # narrow map over this spine; guide §2.4). (A persist()-based pin
-        # that would keep ranks' partitioning metadata was tried r16 and
-        # hangs: without plan truncation each iteration embeds the
-        # previous one twice and analysis grows 2^iterations.)
+        # pinned graph's id column (same id set by construction — ranks is
+        # always a narrow map over it), so no spine reads the previous
+        # checkpoint. A persist() pin would keep more partitioning
+        # metadata but truncates no plan: each iteration would embed the
+        # previous one twice and analysis grows 2^iterations.
         received = (
             graph.select("id")
             .join(msgs, "id", "left")
@@ -267,171 +188,45 @@ def _personalized_pagerank_linear(
             )
             .localCheckpoint(eager=False)
         )
-
-        # driver-side scalar: missing mass per source (1 - total received),
-        # clamped at 0 (iteratePageRank :455-465)
         totals = received.agg(
             *[F.sum(F.element_at("mass", i + 1)).alias(f"t{i}") for i in range(k)]
         ).collect()[0]
-        missing = [max(0.0, 1.0 - totals[i]) for i in range(k)]
 
-        # phase 2: jump + dangling mass go only to each slot's source — a
-        # narrow map, left lazy to fuse into the next iteration's join.
-        one_minus = 1.0 - alpha
-        new_mass = F.array(
-            *[
-                F.when(
-                    F.col("id") == sources[i],
-                    F.lit(alpha)
-                    + F.lit(one_minus)
-                    * (F.element_at("mass", i + 1) + F.lit(missing[i])),
-                ).otherwise(F.lit(one_minus) * F.element_at("mass", i + 1))
-                for i in range(k)
-            ]
+        # phase 2: a narrow map, left lazy to fuse into the next
+        # iteration's join
+        ranks = received.select(
+            "id",
+            F.array(
+                *[
+                    jump(i, F.element_at("mass", i + 1), max(0.0, 1.0 - totals[i]))
+                    for i in range(k)
+                ]
+            ).alias("mass"),
         )
-        ranks = received.select("id", new_mass.alias("mass"))
-
     return ranks
 
 
-def _personalized_pagerank_log(
+def personalized_pagerank(
     spark: SparkSession,
     sf_dir: str,
-    sources: tuple[int, ...],
-    iterations: int,
-    alpha: float,
+    sources: tuple[int, ...] = SOURCES,
+    iterations: int = DEFAULT_ITERATIONS,
+    alpha: float = ALPHA,
 ) -> DataFrame:
-    """Log-domain twin of the linear loop (same two phases, same driver
-    scalars). Masses live as log-mass columns; message aggregation is a
-    grouped log-sum-exp: max per destination, then max + log(Σ exp(c−max))
-    — the distributed form of the reference's pairwise sumLogProbs. The
-    final select exponentiates back so downstream consumers see the same
-    (id, mass array<double>) contract."""
-    graph, ckey = _acquire_cached(spark, build_graph(spark, sf_dir))
-    try:
-        return _personalized_pagerank_log_loop(graph, sources, iterations, alpha)
-    finally:
-        _release_cached(ckey)
+    """(id, mass array<double>) with one slot per source, each summing to
+    ~1: initial mass 1.0 at each source for its own slot (M3), and the
+    jump plus the missing mass go only to the slot's source."""
+    graph = build_graph(spark, sf_dir).localCheckpoint()
+    one_minus = 1.0 - alpha
 
+    def jump(i: int, mass: Column, missing: float) -> Column:
+        return F.when(
+            F.col("id") == sources[i],
+            F.lit(alpha) + F.lit(one_minus) * (mass + F.lit(missing)),
+        ).otherwise(F.lit(one_minus) * mass)
 
-def _personalized_pagerank_log_loop(
-    graph: DataFrame,
-    sources: tuple[int, ...],
-    iterations: int,
-    alpha: float,
-) -> DataFrame:
-    import math
-
-    k = len(sources)
-    NEG_INF = float("-inf")
-
-    # log initial mass: log(1)=0 at each source's own slot, -inf elsewhere
-    ranks = graph.select(
-        "id",
-        *[
-            F.when(F.col("id") == s, F.lit(0.0))
-            .otherwise(F.lit(NEG_INF))
-            .alias(f"lm{i}")
-            for i, s in enumerate(sources)
-        ],
-    )
-
-    for _ in range(iterations):
-        contrib = (
-            ranks.join(graph, "id")
-            .where(F.col("outdeg") > 0)
-            .select(
-                F.explode("adj").alias("id"),
-                *[
-                    (F.col(f"lm{i}") - F.log("outdeg")).alias(f"c{i}")
-                    for i in range(k)
-                ],
-            )
-        )
-        # one explicit shuffle; the max agg, the back-join, and the sum agg
-        # below all key on id, so EnsureRequirements reuses this partitioning
-        msgs = contrib.repartition("id")
-        mx = msgs.groupBy("id").agg(
-            *[F.max(f"c{i}").alias(f"x{i}") for i in range(k)]
-        )
-        summed = (
-            msgs.join(mx, "id")
-            .groupBy("id")
-            .agg(
-                *[F.max(f"x{i}").alias(f"x{i}") for i in range(k)],
-                *[
-                    F.sum(F.exp(F.col(f"c{i}") - F.col(f"x{i}"))).alias(f"s{i}")
-                    for i in range(k)
-                ],
-            )
-            .select(
-                "id",
-                *[
-                    # all-(-inf) groups (slot unreachable so far): exp(c-x)
-                    # is NaN there, guard back to log(0)
-                    F.when(F.col(f"x{i}") == NEG_INF, F.lit(NEG_INF))
-                    .otherwise(F.col(f"x{i}") + F.log(F.col(f"s{i}")))
-                    .alias(f"r{i}")
-                    for i in range(k)
-                ],
-            )
-        )
-        received = (
-            ranks.select("id")
-            .join(summed, "id", "left")
-            .select(
-                "id",
-                *[
-                    F.coalesce(F.col(f"r{i}"), F.lit(NEG_INF)).alias(f"lm{i}")
-                    for i in range(k)
-                ],
-            )
-            .localCheckpoint(eager=False)
-        )
-
-        # driver scalars: global log-sum-exp per slot -> linear totals.
-        # Two tiny aggregates over the pinned frame (max pass, sum pass).
-        gmax = received.agg(
-            *[F.max(f"lm{i}").alias(f"x{i}") for i in range(k)]
-        ).collect()[0]
-        sums = received.agg(
-            *[
-                F.sum(
-                    F.when(F.col(f"lm{i}") == NEG_INF, F.lit(0.0)).otherwise(
-                        F.exp(F.col(f"lm{i}") - F.lit(float(gmax[i])))
-                    )
-                ).alias(f"s{i}")
-                for i in range(k)
-            ]
-        ).collect()[0]
-        totals = [
-            0.0 if gmax[i] == NEG_INF else math.exp(gmax[i]) * sums[i]
-            for i in range(k)
-        ]
-        missing = [max(0.0, 1.0 - t) for t in totals]
-
-        one_minus = 1.0 - alpha
-        ranks = received.select(
-            "id",
-            *[
-                F.when(
-                    F.col("id") == sources[i],
-                    F.log(
-                        F.lit(alpha)
-                        + F.lit(one_minus)
-                        * (F.exp(F.col(f"lm{i}")) + F.lit(missing[i]))
-                    ),
-                )
-                .otherwise(F.lit(math.log(one_minus)) + F.col(f"lm{i}"))
-                .alias(f"lm{i}")
-                for i in range(k)
-            ],
-        )
-
-    return ranks.select(
-        "id",
-        F.array(*[F.exp(F.col(f"lm{i}")) for i in range(k)]).alias("mass"),
-    )
+    init = [F.when(F.col("id") == s, F.lit(1.0)).otherwise(F.lit(0.0)) for s in sources]
+    return _pagerank(graph, init, iterations, jump)
 
 
 def ppr_mass_conservation(
@@ -577,47 +372,9 @@ def global_pagerank(
     alpha: float = ALPHA,
 ) -> DataFrame:
     """Classic (non-personalized) PageRank over the fixture graph — the
-    uniform-teleport sibling of the reference's personalized loop: init
-    1/N everywhere; each iteration distributes mass along edges, then
-    dangling + teleport mass spreads UNIFORMLY (alpha/N + dangling/N to
-    every node) instead of re-injecting at a source. Same scale shape as
-    personalized_pagerank: one shuffle + one scalar collect per
-    iteration, lazy localCheckpoint truncating lineage."""
-    graph, ckey = _acquire_cached(spark, build_graph(spark, sf_dir))
-    try:
-        n = graph.count()
-        one_minus = 1.0 - alpha
-        ranks = graph.select("id", F.lit(1.0 / n).alias("mass"))
-        for _ in range(iterations):
-            msgs = (
-                ranks.join(graph, "id")
-                .where(F.col("outdeg") > 0)
-                .select(
-                    F.explode("adj").alias("id"),
-                    (F.col("mass") / F.col("outdeg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("m"))
-            )
-            received = (
-                graph.select("id")
-                .join(msgs, "id", "left")
-                .select("id", F.coalesce(F.col("m"), F.lit(0.0)).alias("mass"))
-                .localCheckpoint(eager=False)
-            )
-            total = received.agg(F.sum("mass")).collect()[0][0]
-            missing = max(0.0, 1.0 - (total or 0.0))
-            ranks = received.select(
-                "id",
-                (
-                    F.lit(alpha / n)
-                    + F.lit(one_minus)
-                    * (F.col("mass") + F.lit(missing / n))
-                ).alias("mass"),
-            )
-        return ranks
-    finally:
-        _release_cached(ckey)
+    uniform-teleport sibling of the reference's personalized loop."""
+    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
+    return pagerank_over_edges(docs, graph_edges(spark, sf_dir), iterations, alpha)
 
 
 def pagerank_over_edges(
@@ -626,64 +383,26 @@ def pagerank_over_edges(
     iterations: int = DEFAULT_ITERATIONS,
     alpha: float = ALPHA,
 ) -> DataFrame:
-    """Uniform-teleport PageRank over an EXPLICIT (src, dst) edge list
-    and (id) node spine — the graph-agnostic core global_pagerank's loop
-    follows, factored out so harvested graphs (the crawl-link graph from
-    html_link_edges) compose with the same iteration machinery. Parallel
-    edges keep their multiplicity (outdeg counts edge rows; a page
-    linking twice sends twice the mass), nodes absent from src (e.g.
-    uncrawled link targets) are dangling and their mass re-enters
-    through the uniform reclaim. Same scale shape as the fixture loop:
-    one shuffle + one scalar collect per iteration, lazy localCheckpoint
-    truncating lineage."""
-    adj = edges.groupBy("src").agg(
-        F.collect_list("dst").alias("adj"),
-        F.count(F.lit(1)).alias("outdeg"),
-    )
-    graph, ckey = _acquire_cached(
-        nodes.sparkSession,
-        nodes.join(adj, nodes["id"] == adj["src"], "left").select(
-            "id", "adj", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
-        ),
-    )
-    try:
-        n = graph.count()
-        if n == 0:
-            # an empty node spine (no documents, no harvested links) has no
-            # mass to distribute — return the empty rank frame instead of
-            # dividing by zero below
-            return nodes.select("id", F.lit(0.0).alias("mass"))
-        one_minus = 1.0 - alpha
-        ranks = graph.select("id", F.lit(1.0 / n).alias("mass"))
-        for _ in range(iterations):
-            msgs = (
-                ranks.join(graph, "id")
-                .where(F.col("outdeg") > 0)
-                .select(
-                    F.explode("adj").alias("id"),
-                    (F.col("mass") / F.col("outdeg")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("m"))
-            )
-            received = (
-                graph.select("id")
-                .join(msgs, "id", "left")
-                .select("id", F.coalesce(F.col("m"), F.lit(0.0)).alias("mass"))
-                .localCheckpoint(eager=False)
-            )
-            total = received.agg(F.sum("mass")).collect()[0][0]
-            missing = max(0.0, 1.0 - (total or 0.0))
-            ranks = received.select(
-                "id",
-                (
-                    F.lit(alpha / n)
-                    + F.lit(one_minus) * (F.col("mass") + F.lit(missing / n))
-                ).alias("mass"),
-            )
-        return ranks
-    finally:
-        _release_cached(ckey)
+    """(id, mass): uniform-teleport PageRank over an (id) node spine and
+    a (src, dst) edge list, so harvested graphs (the crawl-link graph
+    from html_link_edges) share the fixture graph's iteration. Init 1/N
+    everywhere; each jump spreads teleport and missing mass UNIFORMLY
+    (alpha/N + (1-alpha)(mass + missing/N) at every node). Parallel edges
+    keep their multiplicity (a page linking twice sends twice the mass);
+    nodes absent from src (e.g. uncrawled link targets) are dangling."""
+    graph = _node_records(nodes, edges).localCheckpoint()
+    n = graph.count()
+    if n == 0:
+        # an empty node spine has no mass to distribute — return the empty
+        # rank frame instead of dividing by zero below
+        return nodes.select("id", F.lit(0.0).alias("mass"))
+    one_minus = 1.0 - alpha
+
+    def jump(_i: int, mass: Column, missing: float) -> Column:
+        return F.lit(alpha / n) + F.lit(one_minus) * (mass + F.lit(missing / n))
+
+    ranks = _pagerank(graph, [F.lit(1.0 / n)], iterations, jump)
+    return ranks.select("id", F.element_at("mass", 1).alias("mass"))
 
 
 def pagerank_topk(

@@ -606,21 +606,14 @@ register(
 )
 
 
-def _pagerank_topk_sql(
-    iterations: int = G.DEFAULT_ITERATIONS,
-    k: int = G.PAGERANK_TOP_K,
-    alpha: float = G.ALPHA,
-) -> str:
-    """Unrolled DuckDB twin of the global (uniform-teleport) PageRank —
-    the single-mass-column simplification of _ppr_topk_sql."""
+def _uniform_pr_ctes(iterations: int, alpha: float) -> list[str]:
+    """The unrolled uniform-teleport PageRank loop over CTEs named
+    ``edges`` (src, dst), ``nodes`` (id) and ``n`` (c): outdeg, r0, then
+    msg/rec/mis/r per iteration — the single-mass-column simplification
+    of _ppr_topk_sql. The final ranks are ``r{iterations}`` (id, m)."""
     om, al = repr(1.0 - alpha), repr(alpha)
     nn = "(SELECT c FROM n)"
     ctes = [
-        "n AS MATERIALIZED (SELECT count(*) AS c FROM documents)",
-        "nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents)",
-        "edges AS MATERIALIZED (SELECT DISTINCT doc_id AS src,"
-        " (doc_id * k + 1) % (SELECT c FROM n) AS dst"
-        " FROM documents, unnest(range(1, (doc_id % 5) + 1)) AS t(k))",
         "outdeg AS MATERIALIZED (SELECT src AS id, count(*) AS outdeg"
         " FROM edges GROUP BY src)",
         f"r0 AS MATERIALIZED (SELECT id,"
@@ -648,6 +641,23 @@ def _pagerank_topk_sql(
             f" {al} / {nn} + {om} * (m + (SELECT x FROM mis{it}) / {nn}) AS m"
             f" FROM rec{it})"
         )
+    return ctes
+
+
+def _pagerank_topk_sql(
+    iterations: int = G.DEFAULT_ITERATIONS,
+    k: int = G.PAGERANK_TOP_K,
+    alpha: float = G.ALPHA,
+) -> str:
+    """Unrolled DuckDB twin of the global (uniform-teleport) PageRank."""
+    ctes = [
+        "n AS MATERIALIZED (SELECT count(*) AS c FROM documents)",
+        "nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents)",
+        "edges AS MATERIALIZED (SELECT DISTINCT doc_id AS src,"
+        " (doc_id * k + 1) % (SELECT c FROM n) AS dst"
+        " FROM documents, unnest(range(1, (doc_id % 5) + 1)) AS t(k))",
+        *_uniform_pr_ctes(iterations, alpha),
+    ]
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -6024,14 +6034,12 @@ register(
 )
 
 # -- PageRank over the harvested crawl-link graph (operators/extraction.py) --
-# ITERATIVE callable (the pagerank_over_edges loop); the oracle unrolls
-# the fixed iteration count into materialized CTEs, the _pagerank_topk_sql
-# discipline applied to html_link_edges' crawled ∪ frontier node set.
+# ITERATIVE callable (the pagerank_over_edges loop); the oracle is the
+# same _uniform_pr_ctes unrolling as _pagerank_topk_sql, over
+# html_link_edges' crawled ∪ frontier node set.
 
 
 def _crawl_pr_sql() -> str:
-    om, al = repr(1.0 - G.ALPHA), repr(G.ALPHA)
-    nn = "(SELECT c FROM n)"
     ctes = [
         f"d AS MATERIALIZED ({DUCK_HTML_DECORATED})",
         "edges AS MATERIALIZED (SELECT doc_id AS src, CAST(h AS BIGINT)"
@@ -6042,33 +6050,8 @@ def _crawl_pr_sql() -> str:
         " (SELECT doc_id AS id FROM documents"
         "  UNION ALL SELECT dst FROM edges))",
         "n AS MATERIALIZED (SELECT count(*) AS c FROM nodes)",
-        "outdeg AS MATERIALIZED (SELECT src AS id, count(*) AS outdeg"
-        " FROM edges GROUP BY src)",
-        f"r0 AS MATERIALIZED (SELECT id,"
-        f" CAST(1.0 AS DOUBLE) / {nn} AS m FROM nodes)",
+        *_uniform_pr_ctes(EX.CRAWL_PR_ITERATIONS, G.ALPHA),
     ]
-    for it in range(1, EX.CRAWL_PR_ITERATIONS + 1):
-        p = it - 1
-        ctes.append(
-            f"msg{it} AS MATERIALIZED (SELECT e.dst AS id,"
-            f" sum(r.m / o.outdeg) AS c FROM r{p} r"
-            f" JOIN outdeg o ON o.id = r.id JOIN edges e ON e.src = r.id"
-            f" GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"rec{it} AS MATERIALIZED (SELECT nd.id,"
-            f" coalesce(m.c, CAST(0.0 AS DOUBLE)) AS m"
-            f" FROM nodes nd LEFT JOIN msg{it} m ON m.id = nd.id)"
-        )
-        ctes.append(
-            f"mis{it} AS MATERIALIZED (SELECT"
-            f" greatest(CAST(0.0 AS DOUBLE), 1.0 - sum(m)) AS x FROM rec{it})"
-        )
-        ctes.append(
-            f"r{it} AS MATERIALIZED (SELECT id,"
-            f" {al} / {nn} + {om} * (m + (SELECT x FROM mis{it}) / {nn}) AS m"
-            f" FROM rec{it})"
-        )
     return (
         "WITH "
         + ",\n".join(ctes)

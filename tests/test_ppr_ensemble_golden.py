@@ -103,36 +103,6 @@ def test_ppr_top10_matches_reference_5dp_format(spark, sf_smoke):
     assert _fmt(ppr_top_k(spark, sf_smoke).collect()) == GOLDEN
 
 
-def test_ppr_log_space_round_trips_to_same_5dp(spark, sf_smoke):
-    """The log-domain path (reference's sumLogProbs + exp-at-extract,
-    RunPersonalizedPageRankBasic.java:617-629) must render the identical
-    5-decimal display."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from bigdata_infra_cs489_spark.operators.graph import personalized_pagerank
-
-    ranks = personalized_pagerank(spark, sf_smoke, log_space=True)
-    per_source = ranks.select(
-        "id",
-        *[
-            F.round(F.element_at("mass", i + 1), 6).alias(f"m{i}")
-            for i in range(len(SOURCES))
-        ],
-    )
-    got = {}
-    for i, s in enumerate(SOURCES):
-        w = Window.orderBy(F.desc(f"m{i}"), F.asc("id"))
-        rows = (
-            per_source.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= TOP_K)
-            .select("id", f"m{i}")
-            .collect()
-        )
-        got[s] = ["%.5f %d" % (r[f"m{i}"], r.id) for r in rows]
-    assert got == GOLDEN
-
-
 def test_ensemble_ordering_matches_reference(spark, sf_smoke):
     from pyspark.sql import functions as F
 

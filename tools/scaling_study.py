@@ -23,13 +23,14 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIRS = [
     ("sf0.001", "/root/testdata/sf0.001"),
     ("sf0.01", "/root/testdata/sf0.01"),
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", "/root/repo/.fixtures/sf1"),
+    ("sf1", os.path.join(REPO, ".fixtures", "sf1")),
 ]
 
 # registered queries reading ONLY documents/embeddings (sf1-eligible)
@@ -116,8 +117,8 @@ JOIN_QUERIES: dict[str, list[str]] = {
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/SCALING_r12.md")
-    ap.add_argument("--json-out", default="/root/repo/SCALING_r12.json")
+    ap.add_argument("--out", default=os.path.join(REPO, "SCALING_r12.md"))
+    ap.add_argument("--json-out", default=os.path.join(REPO, "SCALING_r12.json"))
     ap.add_argument(
         "--family",
         choices=["all", "join"],

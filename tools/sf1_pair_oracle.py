@@ -18,7 +18,7 @@ from the oracle's own SQL fragments over the sf1 documents parquet —
 Spark never touches the oracle side.
 
 Usage:
-    python -m tools.sf1_pair_oracle [--sf-dir /root/repo/.fixtures/sf1] [names...]
+    python -m tools.sf1_pair_oracle [--sf-dir .fixtures/sf1] [names...]
 
 Default targets are the family the round-12 verdict names: the pair
 finder, the CC clustering, the standing-index commit, and the two
@@ -29,10 +29,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
@@ -134,7 +136,7 @@ def substituted_oracle(sql: str, cache_dir: str) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.fixtures/sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".fixtures", "sf1"))
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     targets = args.names or DEFAULT_TARGETS
@@ -185,7 +187,7 @@ def main() -> int:
 
     # MERGE over the existing record (the verify_sweep convention):
     # a targeted invocation must not drop the other families' rows
-    out = "/root/repo/SWEEP_SF1_PAIRS.json"
+    out = os.path.join(REPO, "SWEEP_SF1_PAIRS.json")
     merged = {}
     try:
         with open(out) as f:

@@ -18,17 +18,19 @@ oracle side. Each executed fragment is asserted to be a VERBATIM
 substring of the registered oracle text (single-sourcing check).
 
 Usage:
-    python -m tools.sf1_spectrum_oracle [--sf-dir /root/repo/.fixtures/sf1]
+    python -m tools.sf1_spectrum_oracle [--sf-dir .fixtures/sf1]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bigdata_infra_cs489_spark.operators import spans as SP  # noqa: E402
 from bigdata_infra_cs489_spark.plans import registry  # noqa: E402
@@ -84,7 +86,7 @@ def _incremental_stats_sql() -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.fixtures/sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".fixtures", "sf1"))
     args = ap.parse_args()
 
     reg_oracle = registry.oracle_sql()["repeat_spectrum"]
@@ -141,7 +143,7 @@ def main() -> int:
         results[qname] = rec
         print(f"{'ok' if match else 'FAIL':>6}  {qname:<30} {rec}", flush=True)
 
-    with open("/root/repo/SWEEP_SF1_SPECTRUM.json", "w") as f:
+    with open(os.path.join(REPO, "SWEEP_SF1_SPECTRUM.json"), "w") as f:
         json.dump(results, f, indent=1)
     fails = sum(1 for r in results.values() if not r["hash_match"])
     print(f"done: {len(results) - fails}/{len(results)} hash-green")

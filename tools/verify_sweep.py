@@ -34,13 +34,13 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bigdata_infra_cs489_spark.plans import registry  # noqa: E402
 from bigdata_infra_cs489_spark.session import get_spark  # noqa: E402
 from tests.oracle import _canon, duck_connection, fragile_duck_columns  # noqa: E402
 
-REPO = "/root/repo"
 PKG = "bigdata_infra_cs489_spark"
 
 # any change here invalidates everything the registry serves — including
@@ -405,7 +405,7 @@ def main() -> int:
     # 173-entry sweep); only a full run rewrites it.
     if args.names:
         try:
-            with open("/root/repo/SWEEP_LOCAL.json") as f:
+            with open(os.path.join(REPO, "SWEEP_LOCAL.json")) as f:
                 merged = json.load(f)
         except FileNotFoundError:
             merged = {}
@@ -423,7 +423,7 @@ def main() -> int:
         merged.update(results)
     else:
         merged = results
-    with open("/root/repo/SWEEP_LOCAL.json", "w") as f:
+    with open(os.path.join(REPO, "SWEEP_LOCAL.json"), "w") as f:
         json.dump(merged, f, indent=1)
     n_ok = sum(1 for r in results.values() if r["hash_match"])
     n_rows_only = sum(1 for r in results.values() if r["err"] == "no_oracle")
