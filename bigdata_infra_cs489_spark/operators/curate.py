@@ -29,12 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import h8
 from ..sources.tables import load
 from . import assets
 from .dedup import dedup_index_path, q_exact_dedup, standing_full_clusters
 from .distsort import with_running_totals
-from .sampling import CLUSTER_SPLIT_SALT, TRAIN_PCT, VAL_PCT
+from .sampling import CLUSTER_SPLIT_SALT, TRAIN_PCT, VAL_PCT, split_col
 from .spans import dup_span_stats
 from .textstats import text_quality
 
@@ -194,18 +193,11 @@ def _curate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("cluster_size"),
         )
     )
-    bucket = (
-        h8(F.concat(F.col("cluster_id").cast("string"), F.lit(CLUSTER_SPLIT_SALT)))
-        % 100
-    )
     reps = best.select(
         "doc_id",
         "cluster_id",
         "cluster_size",
-        F.when(bucket < TRAIN_PCT, "train")
-        .when(bucket < TRAIN_PCT + VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
+        split_col("cluster_id", CLUSTER_SPLIT_SALT).alias("split"),
     )
     spans = dup_span_stats(spark, sf_dir).select("doc_id", "n_tokens", "dup_tokens")
     qual = text_quality(spark, sf_dir).select("doc_id", "quality_score")
@@ -372,10 +364,6 @@ def incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     qual = quality_metrics(docs.where(is_new)).select(
         "doc_id", "quality_score"
     )
-    bucket = (
-        h8(F.concat(F.col("cluster_id").cast("string"), F.lit(CLUSTER_SPLIT_SALT)))
-        % 100
-    )
     verdict = (
         F.when(F.col("exact_dup") == 1, "drop_exact")
         .when(F.col("matched") == 1, "drop_neardup")
@@ -397,10 +385,7 @@ def incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality_score",
             "matched",
             "cluster_id",
-            F.when(bucket < TRAIN_PCT, "train")
-            .when(bucket < TRAIN_PCT + VAL_PCT, "val")
-            .otherwise("test")
-            .alias("split"),
+            split_col("cluster_id", CLUSTER_SPLIT_SALT).alias("split"),
             verdict.alias("verdict"),
         )
     )

@@ -142,7 +142,13 @@ def minhash_signatures_from_shingles(
 ) -> DataFrame:
     """minhash_signatures() over an already-built (doc_id, shingles)
     frame — identical expression tree from the explode down."""
-    idx = shingle_index_from_shingles(sh)
+    return _minhash_of_index(shingle_index_from_shingles(sh), num_hashes)
+
+
+def _minhash_of_index(idx: DataFrame, num_hashes: int) -> DataFrame:
+    """The MinHash body over an exploded (doc_id, s) shingle index; the
+    caller builds the index (see shingle_index for why the explode must
+    stay fused on a live plan)."""
     based = idx.select("doc_id", _h8(F.col("s")).alias("x"))
     hashed = based.select(
         "doc_id",
@@ -165,8 +171,17 @@ def signature_bands_from_shingles(
     num_bands: int = NUM_BANDS,
 ) -> DataFrame:
     """signature_bands() over an already-built (doc_id, shingles) frame."""
+    return _bands_of_signatures(
+        minhash_signatures_from_shingles(sh, num_hashes), num_hashes, num_bands
+    )
+
+
+def _bands_of_signatures(
+    sigs: DataFrame, num_hashes: int, num_bands: int
+) -> DataFrame:
+    """(doc_id, band, band_key) from (doc_id, sig): each signature split
+    into num_bands slices of num_hashes // num_bands values."""
     rows = num_hashes // num_bands
-    sigs = minhash_signatures_from_shingles(sh, num_hashes)
     return sigs.select(
         "doc_id",
         F.posexplode(
@@ -193,21 +208,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     Shape: explode shingles -> base hash + K affine combinations per row,
     all codegen'd -> groupBy(doc).min per hash -> array. min is a partial
     aggregation, so map-side combine applies at any scale."""
-    idx = shingle_index(docs)
-    based = idx.select("doc_id", _h8(F.col("s")).alias("x"))
-    hashed = based.select(
-        "doc_id",
-        *[
-            ((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_params(num_hashes))
-        ],
-    )
-    mins = hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    return _minhash_of_index(shingle_index(docs), num_hashes)
 
 
 def signature_bands(
@@ -219,22 +220,8 @@ def signature_bands(
     band content rendered as the canonical ':'-joined string — the
     equi-join key for both whole-corpus pairing and incremental
     new-batch assignment."""
-    rows = num_hashes // num_bands
-    sigs = minhash_signatures(docs, num_hashes)
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.concat_ws(
-                    ":",
-                    F.transform(
-                        F.slice("sig", b * rows + 1, rows),
-                        lambda v: v.cast("string"),
-                    ),
-                ),
-            )
-        ).alias("band", "band_key"),
+    return _bands_of_signatures(
+        minhash_signatures(docs, num_hashes), num_hashes, num_bands
     )
 
 

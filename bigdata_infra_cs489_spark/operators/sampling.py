@@ -12,7 +12,7 @@ pure map-side filters/projections that parallelize trivially.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h8
@@ -34,20 +34,24 @@ def events_hash_sample(
     return ev.where(bucket < pct).select("event_id", "user_id", "event_type")
 
 
-def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, split): salted-hash assignment of every document to
-    train/val/test (80/10/10). The salt versions the split — bumping it
-    reshuffles membership deterministically, and joining any feature table
-    on doc_id inherits the split without re-deriving it."""
-    docs = load(spark, sf_dir, "documents")
-    bucket = h8(F.concat(F.col("doc_id").cast("string"), F.lit(SPLIT_SALT))) % 100
-    return docs.select(
-        "doc_id",
+def split_col(key: str, salt: str) -> Column:
+    """train/val/test (TRAIN_PCT/VAL_PCT/rest) by h8(key || salt) % 100.
+    The salt versions the split: bumping it reshuffles membership
+    deterministically."""
+    bucket = h8(F.concat(F.col(key).cast("string"), F.lit(salt))) % 100
+    return (
         F.when(bucket < TRAIN_PCT, "train")
         .when(bucket < TRAIN_PCT + VAL_PCT, "val")
         .otherwise("test")
-        .alias("split"),
     )
+
+
+def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, split): salted-hash assignment of every document to
+    train/val/test (80/10/10). Joining any feature table on doc_id
+    inherits the split without re-deriving it."""
+    docs = load(spark, sf_dir, "documents")
+    return docs.select("doc_id", split_col("doc_id", SPLIT_SALT).alias("split"))
 
 
 MIX_SALT = "mix-v1"
@@ -334,21 +338,10 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import standing_full_clusters
 
     clusters = standing_full_clusters(spark, sf_dir)
-    bucket = (
-        h8(
-            F.concat(
-                F.col("cluster_id").cast("string"), F.lit(CLUSTER_SPLIT_SALT)
-            )
-        )
-        % 100
-    )
     return clusters.select(
         "doc_id",
         "cluster_id",
-        F.when(bucket < TRAIN_PCT, "train")
-        .when(bucket < TRAIN_PCT + VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
+        split_col("cluster_id", CLUSTER_SPLIT_SALT).alias("split"),
     )
 
 

@@ -140,22 +140,19 @@ def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def cosine_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = QUERY_VEC_ID,
-    k: int = TOP_K,
+def _exact_rerank(
+    cand: DataFrame, emb: DataFrame, query_vec_id: int, k: int
 ) -> DataFrame:
-    """Exact top-k by cosine against the query vector (brute force).
-
-    The query vector is a 1-row broadcast (crossJoin of a broadcast side is
-    a BroadcastNestedLoopJoin with 1 row — effectively map-side)."""
-    emb = _emb(spark, sf_dir)
+    """The exact tail every top-k family shares: (vec_id, embedding)
+    candidates scored by cosine against the query vector, rounded to 6dp,
+    top k by (cosine desc, vec_id asc). The query vector is a 1-row
+    broadcast (crossJoin of a broadcast side is a BroadcastNestedLoopJoin
+    with 1 row — effectively map-side)."""
     q = emb.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q")
     )
     return (
-        emb.crossJoin(F.broadcast(q))
+        cand.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
             F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
@@ -163,6 +160,17 @@ def cosine_topk(
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def cosine_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    query_vec_id: int = QUERY_VEC_ID,
+    k: int = TOP_K,
+) -> DataFrame:
+    """Exact top-k by cosine against the query vector (brute force)."""
+    emb = _emb(spark, sf_dir)
+    return _exact_rerank(emb, emb, query_vec_id, k)
 
 
 def _model_rows(
@@ -346,19 +354,6 @@ def _rank_centroids_local(
     return [cid for cid, _ in scored[:nprobe]]
 
 
-def probe_centroid_ids(cent_df: DataFrame, q: DataFrame, nprobe: int) -> list[int]:
-    """DataFrame adapter over _rank_centroids_local for callers holding
-    (centroid_id, cvec) / single-row (q) frames rather than collected
-    model rows. Same rule, same ordering."""
-    qrows = q.limit(1).collect()
-    if not qrows:
-        return []
-    cents = [
-        (int(r["centroid_id"]), list(r["cvec"])) for r in cent_df.collect()
-    ]
-    return _rank_centroids_local(cents, list(qrows[0]["q"]), nprobe)
-
-
 def query_embedding(emb: DataFrame, query_vec_id: int) -> list | None:
     """The query row's embedding as a driver-side list, or None when the
     id is absent — probe entry points degrade to an empty result instead
@@ -390,21 +385,11 @@ def ivf_topk(
     with zero joins and zero shuffles before the final top-k."""
     emb = _emb(spark, sf_dir)
     cents, qvec = _model_rows(spark, sf_dir, n_centroids, query_vec_id)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
     probed = (
         _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
     )
-    return (
-        emb.where(_nearest_centroid_col(cents).isin(probed))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    return _exact_rerank(
+        emb.where(_nearest_centroid_col(cents).isin(probed)), emb, query_vec_id, k
     )
 
 
@@ -684,6 +669,24 @@ def lsh_bands(codes: DataFrame) -> DataFrame:
     )
 
 
+def _lsh_query_code(spark: SparkSession, sf_dir: str, query_vec_id: int):
+    """(hyperplane matrix, the query's packed LSH code). The code is
+    computed driver-side with the same float64 matmul and bit weights as
+    lsh_codes_for (a 1-row model-sized computation): referencing the
+    distributed codes subtree again would re-run the whole Python scan to
+    read one row. One _model_rows collect serves both the hyperplanes
+    and the query row."""
+    import numpy as np
+
+    hrows, qrow = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
+    hmat = np.array([v for _, v in hrows], dtype=np.float64)
+    bits = (np.asarray(qrow, dtype=np.float64) @ hmat.T) > 0
+    qcode = int(
+        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
+    )
+    return hmat, qcode
+
+
 def lsh_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -699,26 +702,10 @@ def lsh_topk(
     (vec_id, band, value) rows against a handful of query band rows
     (broadcast), never a distance computation outside the candidate set.
     """
-    import numpy as np
-
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    # the query's band values are computed driver-side from the same
-    # hyperplane matrix and same float64 matmul as lsh_codes (a 1-row
-    # model-sized computation) — referencing the distributed codes subtree
-    # a second time would re-run the whole Python scan just to read one row.
-    # One _model_rows collect serves both the hyperplanes and the query
-    # row; the codes table reuses the same matrix via lsh_codes_for.
-    hrows, qrow = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
-    hmat = np.array([v for _, v in hrows], dtype=np.float64)
+    # the codes table reuses the query's hyperplane matrix via lsh_codes_for
+    hmat, qcode = _lsh_query_code(spark, sf_dir, query_vec_id)
     codes = lsh_codes_for(spark, emb, hmat)
-    qvec = np.asarray(qrow, dtype=np.float64)
-    bits = (qvec @ hmat.T) > 0
-    qcode = int(
-        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
-    )
     # "shares >= 1 band with the query" as a plain OR-of-equalities column
     # predicate over the packed code — same scheme lsh_bands materializes,
     # but with no explode, no join and no distinct: the candidate filter is
@@ -733,16 +720,7 @@ def lsh_topk(
         )
         cond = c if cond is None else (cond | c)
     cand = codes.where(cond).select("vec_id")
-    return (
-        emb.join(cand, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _exact_rerank(emb.join(cand, "vec_id"), emb, query_vec_id, k)
 
 
 def semantic_dedup_keep_best(
@@ -1343,22 +1321,12 @@ def ivf_topk_trained(
         key=lambda t: t[0],
     )
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
     qvec = query_embedding(emb, query_vec_id)
     probed = (
         _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
     )
-    return (
-        emb.where(_nearest_centroid_col(cents).isin(probed))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    return _exact_rerank(
+        emb.where(_nearest_centroid_col(cents).isin(probed)), emb, query_vec_id, k
     )
 
 

@@ -194,10 +194,6 @@ def _pmi_tokens_from(corpus: DataFrame) -> DataFrame:
     ).where(F.size("toks") > 0)
 
 
-def _pmi_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pmi_tokens_from(_corpus(spark, sf_dir))
-
-
 def pmi_word_line_counts_from(
     corpus: DataFrame, min_count: int = MIN_COUNT
 ) -> DataFrame:

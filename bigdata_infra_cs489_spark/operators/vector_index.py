@@ -48,9 +48,10 @@ from .similarity import (
     N_PROBE,
     QUERY_VEC_ID,
     TOP_K,
-    _cosine,
     _emb,
+    _exact_rerank,
     _hyperplanes,
+    _lsh_query_code,
     lsh_bands,
     lsh_codes,
 )
@@ -180,9 +181,6 @@ def ivf_topk_indexed(
 
     path = ensure_vector_index(spark, sf_dir)
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
     cents, qvec = _model_rows(spark, sf_dir, N_CENTROIDS, query_vec_id)
     probed = (
         _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
@@ -190,16 +188,10 @@ def ivf_topk_indexed(
     idx = spark.read.parquet(os.path.join(path, "ivf")).where(
         F.col("centroid_id").isin(probed)
     )
-    return (
-        idx.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    cand = idx.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
+    return _exact_rerank(cand, emb, query_vec_id, k)
 
 
 def lsh_topk_indexed(
@@ -216,22 +208,9 @@ def lsh_topk_indexed(
     LSH_N_BANDS * 2^LSH_BAND_BITS. Candidates arriving from several bands
     dedupe on vec_id before the rerank; embeddings come from the bucket
     itself — no join back to the corpus."""
-    import numpy as np
-
-    from .similarity import _model_rows
-
     path = ensure_vector_index(spark, sf_dir)
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    hrows, qrow = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
-    hmat = np.array([v for _, v in hrows], dtype=np.float64)
-    qvec = np.asarray(qrow, dtype=np.float64)
-    bits = (qvec @ hmat.T) > 0
-    qcode = int(
-        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
-    )
+    _, qcode = _lsh_query_code(spark, sf_dir, query_vec_id)
     mask = (1 << LSH_BAND_BITS) - 1
     cond = None
     for b in range(LSH_N_BANDS):
@@ -242,15 +221,7 @@ def lsh_topk_indexed(
     cand = idx.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).dropDuplicates(["vec_id"])
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _exact_rerank(cand, emb, query_vec_id, k)
 
 
 def ivfpq_topk_indexed(

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..operators import relational as R
 from ..operators import text_analytics as T
-from .registry import register
+from .registry import _ORACLES, register
 
 # DuckDB twin of the reference tokenizer (functions/text.py tokenize()):
 # whitespace split -> lowercase -> strip leading/trailing non-[a-z] -> drop
@@ -28,12 +28,19 @@ def _fr(expr: str, scale: int = 6) -> str:
     functions/numerics.py::floor_round. Used instead of round(x, N)
     wherever the argument is an EXACT integer (or half-integer) ratio:
     those land exactly on .5-at-scale boundaries, where Spark and DuckDB
-    round() break decimal ties differently (round-12 sf1 campaign, DSIR:
-    7 real tie docs). floor(x*10^N + 0.5)/10^N is the same IEEE-754 op
-    sequence on both engines — bit-identical by construction, half-UP at
-    exact ties."""
+    round() break decimal ties differently (7 real tie docs in sf1 DSIR).
+    floor(x*10^N + 0.5)/10^N is the same IEEE-754 op sequence on both
+    engines — bit-identical by construction, half-UP at exact ties."""
     s = 10**scale
     return f"floor(({expr}) * {s} + 0.5) / {s}"
+
+
+def _registered_oracle(name: str) -> str:
+    """The registered oracle SQL of ``name``: twins and derived cards
+    (the stream twins, export_shards over corpus_curate) reuse it
+    verbatim instead of pasting a copy."""
+    return _ORACLES[name]
+
 
 # --- assignment5 relational core (SURVEY §2.2-2.7, reference Q1..Q7) -------
 
@@ -1021,8 +1028,10 @@ register(
     """,
 )
 
-# Shared CTE chain ending in `pairs` = (doc_a, doc_b, jaccard) near-dup
-# pairs above threshold; reused by the clustering oracle below.
+# Shared CTE chain ending in `pairs` = (doc_a, doc_b, jaccard) for every
+# LSH candidate pair; the near-dup closure fragments below cluster it.
+# tools/sf1_pair_oracle.py slices this text verbatim, so every oracle that
+# uses it must contain it unchanged.
 DUCK_MINHASH_PAIR_CTES = f"""{DUCK_SHINGLES},
     sigs AS (
         SELECT doc_id, {DUCK_MINHASH_SIG} AS sig
@@ -1046,6 +1055,57 @@ DUCK_MINHASH_PAIR_CTES = f"""{DUCK_SHINGLES},
         JOIN sh sa ON sa.doc_id = doc_a
         JOIN sh sb ON sb.doc_id = doc_b)"""
 
+
+# The near-dup closure over `pairs` (twin of dedup.connected_components):
+# undirected edges above the Jaccard threshold, `reach` pairs every seed
+# doc with each doc it reaches, and a doc's cluster is the smallest id it
+# reaches. A non-empty `scope` (`_OLD`) keeps only the edges and seed docs
+# on that side of the batch split. Needs WITH RECURSIVE.
+def _near_dup_reach(scope: str = "") -> str:
+    edge_scope = f" AND doc_a {scope} AND doc_b {scope}" if scope else ""
+    seed_scope = f" WHERE doc_id {scope}" if scope else ""
+    return f"""
+    edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        WHERE jaccard >= {D.JACCARD_THRESHOLD}{edge_scope}
+        UNION ALL
+        SELECT doc_b, doc_a FROM pairs
+        WHERE jaccard >= {D.JACCARD_THRESHOLD}{edge_scope}),
+    reach AS (
+        SELECT doc_id AS src, doc_id AS dst FROM documents{seed_scope}
+        UNION
+        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)"""
+
+
+_REACH_MIN = "SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src"
+
+# Full corpus: `cl` = (doc_id, cluster_id) for every document.
+DUCK_NEAR_DUP_CTES = f"""{_near_dup_reach()},
+    cl AS ({_REACH_MIN})"""
+
+# The batch split of the incremental dedup family: the last residue class
+# of doc_id % NEW_BATCH_MOD is the new batch, the rest the standing corpus.
+_OLD = f"% {D.NEW_BATCH_MOD} != {D.NEW_BATCH_MOD - 1}"
+_NEW = f"% {D.NEW_BATCH_MOD} = {D.NEW_BATCH_MOD - 1}"
+
+# Old corpus only: `oldcl` clusters the standing corpus and `best` holds
+# each matched new doc's most similar old doc (ties to the lowest id),
+# twin of dedup.incremental_dedup_assign's probe.
+DUCK_OLD_NEAR_DUP_CTES = f"""{_near_dup_reach(_OLD)},
+    oldcl AS ({_REACH_MIN}),
+    newold AS (
+        SELECT CASE WHEN doc_a {_NEW} THEN doc_a ELSE doc_b END AS new_id,
+               CASE WHEN doc_a {_NEW} THEN doc_b ELSE doc_a END AS old_id,
+               jaccard
+        FROM pairs
+        WHERE jaccard >= {D.JACCARD_THRESHOLD}
+          AND (doc_a {_NEW}) <> (doc_b {_NEW})),
+    best AS (
+        SELECT new_id, old_id FROM (
+          SELECT *, row_number() OVER (PARTITION BY new_id
+                     ORDER BY jaccard DESC, old_id ASC) AS rn
+          FROM newold) WHERE rn = 1)"""
+
 register(
     "minhash_near_duplicates",
     D.q_minhash_near_duplicates,
@@ -1061,19 +1121,8 @@ register(
     "near_duplicate_clusters",
     D.q_near_duplicate_clusters,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-    SELECT src AS doc_id, min(dst) AS cluster_id
-    FROM reach GROUP BY src
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{_near_dup_reach()}
+    {_REACH_MIN}
     """,
 )
 
@@ -1256,15 +1305,15 @@ register(
     _IVF_TOPK_SQL,
 )
 
-# Since round 9 the registered plan is the centroid-SCOPED pair stage
+# The registered plan is the centroid-SCOPED pair stage
 # (SemDeDup's within-cluster candidate discipline): pair compute is
 # Σ_c n_c², never n² in corpus size. The exact block grid
 # (cosine_near_duplicate_pairs) stays as the fixture-scale recall
 # oracle, pinned by the embedding_dedup_recall audit card.
-# Since round 10 both queries register at REGISTERED_PAIR_THRESHOLD
-# (0.4) instead of the 0.9 operator default: at 0.9 the fixtures hold
-# zero qualifying pairs at every SF, so the driver rows were vacuously
-# green — see the SEMANTIC CHANGE note at similarity.py's constant.
+# Both queries register at REGISTERED_PAIR_THRESHOLD (0.4) instead of
+# the 0.9 operator default: at 0.9 the fixtures hold zero qualifying
+# pairs at every SF, so the driver rows would be vacuously green — see
+# the SEMANTIC CHANGE note at similarity.py's constant.
 _EMB_SCOPE_CTES = f"""
     cent AS (SELECT vec_id AS centroid_id, v AS cvec FROM e
              WHERE vec_id < {S.N_CENTROIDS}),
@@ -1831,7 +1880,7 @@ register(
     lambda spark, sf: E.tumbling_counts(spark, sf),
     f"""
     -- exact-cents accounting (events.py::value_cents): avg of a plain
-    -- double sum rounded 4dp flipped on 52 sf1 windows (r12 sweep)
+    -- double sum rounded 4dp flipped on 52 sf1 windows
     WITH w AS (
       SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / {E.TUMBLE_SEC})
                  * {E.TUMBLE_SEC} * 1000000 AS BIGINT)),
@@ -2309,6 +2358,15 @@ register(
 
 from ..operators import sampling as SA  # noqa: E402
 
+
+def _duck_split(key_sql: str, salt: str) -> str:
+    """Twin of sampling.split_col: h8(key || salt) % 100 into
+    train/val/test."""
+    h = DUCK_H8.format(x=f"CAST({key_sql} AS VARCHAR) || '{salt}'")
+    return f"""CASE WHEN {h} % 100 < {SA.TRAIN_PCT} THEN 'train'
+                WHEN {h} % 100 < {SA.TRAIN_PCT + SA.VAL_PCT} THEN 'val'
+                ELSE 'test' END"""
+
 register(
     "events_hash_sample",
     lambda spark, sf: SA.events_hash_sample(spark, sf),
@@ -2696,48 +2754,21 @@ register(
 
 # --- streaming queries in the driver contract -------------------------------
 # The streams run to completion (availableNow) inside the callable and the
-# memory-sink result is hash-checked like any batch query.
+# memory-sink result is hash-checked like any batch query; a stream with a
+# batch twin checks against the batch twin's oracle.
 
 from ..streaming import events_stream as STR  # noqa: E402
 
 register(
     "stream_tumbling_counts",
     STR.q_stream_tumbling_counts,
-    f"""
-    -- exact-cents accounting, in lockstep with the batch twin's oracle
-    WITH w AS (
-      SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / {E.TUMBLE_SEC})
-                 * {E.TUMBLE_SEC} * 1000000 AS BIGINT)),
-             '%Y-%m-%d %H:%M:%S') AS window_start,
-             event_type,
-             CAST(round(value * 100) AS BIGINT) AS vc
-      FROM events),
-    a AS (SELECT window_start, event_type,
-                 count(*) AS n_events,
-                 CAST(sum(vc) AS BIGINT) AS sum_vc
-          FROM w GROUP BY window_start, event_type)
-    SELECT window_start, event_type, n_events,
-           sum_vc / 100.0 AS sum_value,
-           CAST(floor(sum_vc * 100.0 / n_events + 0.5) AS BIGINT) / 10000.0
-               AS avg_value
-    FROM a
-    """,
+    _registered_oracle("events_tumbling_counts"),
 )
 
 register(
     "stream_sliding_counts",
     STR.q_stream_sliding_counts,
-    f"""
-    SELECT strftime(make_timestamp(CAST(
-               (floor((epoch(ts) - off) / {E.SLIDE_WINDOW_SEC})
-                * {E.SLIDE_WINDOW_SEC} + off) * 1000000 AS BIGINT)),
-            '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           count(*) AS n_events
-    FROM events,
-         unnest({list(range(0, E.SLIDE_WINDOW_SEC, E.SLIDE_STEP_SEC))}) AS t(off)
-    GROUP BY window_start, event_type
-    """,
+    _registered_oracle("events_sliding_counts"),
 )
 
 register(
@@ -2833,7 +2864,7 @@ register(
     """,
 )
 
-# --- warehouse analytics / sketches / chunking (round-3 extensions) ----------
+# --- warehouse analytics / sketches / chunking -------------------------------
 
 from ..operators import analytics as AN  # noqa: E402
 from ..operators import sketch as SK  # noqa: E402
@@ -3258,15 +3289,14 @@ register(
 )
 
 # --- warehouse feature-store family (SCD2 / decay / attribution) -------------
-# Late round-3 additions: the dimension-history, freshness-weighting and
-# attribution operators a telemetry warehouse feeds a training pipeline
-# with. All pure window/join SQL on both engines.
+# The dimension-history, freshness-weighting and attribution operators a
+# telemetry warehouse feeds a training pipeline with. All pure
+# window/join SQL on both engines.
 
 # Registered as the O(users) summary (interval count + order-insensitive
 # h8 fingerprint of every rendered interval): the full history is
-# O(attribute changes) — the round-3 scaling study's one output-bound
-# outlier — so the driver-side collect is bounded here while the
-# full-history builder (AN.user_scd2_history) stays pytest-covered.
+# O(attribute changes), the one output-bound outlier at scale, so the
+# driver-side collect is bounded here while the full-history builder (AN.user_scd2_history) stays pytest-covered.
 register(
     "user_scd2_history",
     AN.user_scd2_summary,
@@ -3359,20 +3389,7 @@ register(
     "dedup_keep_best",
     D.dedup_keep_best,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_NEAR_DUP_CTES},
     q AS (SELECT doc_id, CAST(len(text) AS INT) AS n_chars FROM documents),
     r AS (
         SELECT cl.cluster_id, cl.doc_id, q.n_chars,
@@ -3411,32 +3428,13 @@ register(
     """,
 )
 
-_CLUSTER_BUCKET = DUCK_H8.format(
-    x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'"
-)
 register(
     "leakage_safe_split",
     SA.leakage_safe_split,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src)
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_NEAR_DUP_CTES}
     SELECT doc_id, cluster_id,
-           CASE WHEN {_CLUSTER_BUCKET} % 100 < {SA.TRAIN_PCT} THEN 'train'
-                WHEN {_CLUSTER_BUCKET} % 100 < {SA.TRAIN_PCT + SA.VAL_PCT}
-                    THEN 'val'
-                ELSE 'test' END AS split
+           {_duck_split("cluster_id", SA.CLUSTER_SPLIT_SALT)} AS split
     FROM cl
     """,
 )
@@ -3672,41 +3670,11 @@ register(
     """,
 )
 
-_OLD = f"% {D.NEW_BATCH_MOD} != {D.NEW_BATCH_MOD - 1}"
-_NEW = f"% {D.NEW_BATCH_MOD} = {D.NEW_BATCH_MOD - 1}"
 register(
     "incremental_dedup_assign",
     D.incremental_dedup_assign,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        WHERE doc_id {_OLD}
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    oldcl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
-    newold AS (
-        SELECT CASE WHEN doc_a {_NEW} THEN doc_a ELSE doc_b END AS new_id,
-               CASE WHEN doc_a {_NEW} THEN doc_b ELSE doc_a END AS old_id,
-               jaccard
-        FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND (doc_a {_NEW}) <> (doc_b {_NEW})),
-    best AS (
-        SELECT new_id, old_id FROM (
-          SELECT *, row_number() OVER (PARTITION BY new_id
-                     ORDER BY jaccard DESC, old_id ASC) AS rn
-          FROM newold) WHERE rn = 1)
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_OLD_NEAR_DUP_CTES}
     SELECT n.doc_id,
            coalesce(c.cluster_id, n.doc_id) AS cluster_id,
            CAST(b.new_id IS NOT NULL AS INT) AS matched
@@ -3788,7 +3756,7 @@ register(
     WITH j AS (
       -- exact integer ten-thousandth-dollar accounting (price 2dp x
       -- whole-percent discount), mirroring the Spark side: a float sum
-      -- rounded 2dp flipped a cent on one sf1 month (round-12 sweep)
+      -- rounded 2dp flipped a cent on one sf1 month
       SELECT strftime(CAST(l.l_shipdate AS DATE), '%Y-%m') AS ship_month,
              CAST(round(l.l_extendedprice * 100) AS BIGINT)
                * (100 - CAST(round(l.l_discount * 100) AS BIGINT)) AS rev_dm,
@@ -3988,18 +3956,7 @@ register(
 register(
     "jaccard_prefix_join",
     D.jaccard_prefix_join,
-    f"""
-    WITH {DUCK_SHINGLES},
-    ex AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS s FROM sh),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.n_sh AS na, b.n_sh AS nb, count(*) AS c
-        FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY doc_a, doc_b, na, nb)
-    SELECT doc_a, doc_b, floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000 AS jaccard
-    FROM common
-    WHERE floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000 >= {D.PPJOIN_T_NUM / D.PPJOIN_T_DEN}
-    """,
+    _registered_oracle("ngram_jaccard_pairs"),
 )
 
 register(
@@ -4230,13 +4187,11 @@ DUCK_SPAN_CTES = (
     + DUCK_SPAN_TAIL_CTES
 )
 
-# Twin consolidation (round-11 verdict #3): the string-key and
-# fingerprint-key exchanges are row-identical by construction, so they
-# share ONE registry slot as a tagged union card — the oracle derives
-# the 'fp' rows from the string-key semantics, making any fp divergence
-# (plan bug or 64-bit collision) a hash break. The former separate
-# registrations repeated_spans / repeated_spans_fp carried driver rows
-# through CORRECTNESS_r11.
+# Twin consolidation: the string-key and fingerprint-key exchanges are
+# row-identical by construction, so they share ONE registry slot as a
+# tagged union card — the oracle derives the 'fp' rows from the
+# string-key semantics, making any fp divergence (plan bug or 64-bit
+# collision) a hash break.
 register(
     "repeated_spans_variants",
     SP.repeated_spans_variants,
@@ -4288,15 +4243,13 @@ DUCK_STRIP_TAIL = """,
     FROM k
     """
 
-# Twin consolidation (round-11 verdict #3): both STRIP policies in one
+# Twin consolidation: both STRIP policies in one
 # tagged union card — 'all' (conservative strip-every-occurrence) and
 # 'keep_first' (Lee-et-al keep-one-occurrence: per duplicated gram the
 # globally-first occurrence, min (doc_id, pos), is exempt; only later
 # occurrences' merged extents are stripped). Genuinely different
 # semantics, so each leg carries its own oracle SQL; one hash row pins
-# both plans per rotation. The former separate registrations
-# strip_spans / strip_spans_keep_first carried driver rows through
-# CORRECTNESS_r11.
+# both plans per rotation.
 register(
     "strip_spans_variants",
     SP.strip_spans_variants,
@@ -4318,11 +4271,9 @@ register(
     # new-batch grams probed against the standing OLD-corpus gram index
     # (same batch convention, doc_id % 10 == 9, as
     # incremental_dedup_assign), consolidated with its fingerprint-keyed
-    # twin as a tagged union card (round-11 verdict #3) — row-identical
-    # plans share one slot; the oracle derives both variants' rows from
-    # the string-key semantics. The former separate registrations
-    # incremental_spans / incremental_spans_fp carried driver rows
-    # through CORRECTNESS_r11.
+    # twin as a tagged union card — row-identical plans share one slot;
+    # the oracle derives both variants' rows from the string-key
+    # semantics.
     "incremental_spans_variants",
     SP.incremental_spans_variants,
     f"""
@@ -4368,25 +4319,31 @@ register(
 
 from ..operators import curate as CU  # noqa: E402
 
-register(
-    "corpus_curate",
-    CU.corpus_curate,
-    f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_SPAN_TAIL_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
-    chars AS (SELECT doc_id, CAST(len(text) AS INT) AS n_chars FROM documents),
+# The curate gates over `cl`, `toks` and `spans` (twin of
+# curate._curate_gated), in three pieces so curation_funnel can take
+# `chars`, `ex` and the span/quality chain around its narrower `reps`:
+# the cluster representative is the longest doc (ties to the lowest id),
+# `ex` keeps one canonical doc per exact text, `sp` is the span-dup
+# coverage and `tq` the text quality.
+_CURATE_CHARS = (
+    "chars AS (SELECT doc_id, CAST(len(text) AS INT) AS n_chars FROM documents)"
+)
+_CURATE_EX = """ex AS (
+        SELECT doc_id FROM (
+            SELECT doc_id,
+                   min(doc_id) OVER (PARTITION BY md5(text)) AS can
+            FROM documents)
+        WHERE doc_id = can)"""
+_CURATE_SP_TQ = f"""cov AS (SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS dup_tokens
+            FROM spans GROUP BY doc_id),
+    alltoks AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM toks),
+    sp AS (
+        SELECT a.doc_id, a.n_tokens,
+               coalesce(c.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens
+        FROM alltoks a LEFT JOIN cov c USING (doc_id)),
+    tq AS ({_TEXT_QUALITY_SQL})"""
+DUCK_CURATE_GATE_CTES = f"""
+    {_CURATE_CHARS},
     reps AS (
         SELECT cluster_id, doc_id, CAST(cluster_size AS BIGINT) AS cluster_size
         FROM (
@@ -4396,28 +4353,19 @@ register(
                    count(*) OVER (PARTITION BY cl.cluster_id) AS cluster_size
             FROM cl JOIN chars USING (doc_id))
         WHERE rn = 1),
-    ex AS (
-        SELECT doc_id FROM (
-            SELECT doc_id,
-                   min(doc_id) OVER (PARTITION BY md5(text)) AS can
-            FROM documents)
-        WHERE doc_id = can),
+    {_CURATE_EX},
     splits AS (
         SELECT doc_id,
-               CASE WHEN {DUCK_H8.format(x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'")} % 100
-                        < {SA.TRAIN_PCT} THEN 'train'
-                    WHEN {DUCK_H8.format(x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'")} % 100
-                        < {SA.TRAIN_PCT + SA.VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split
+               {_duck_split("cluster_id", SA.CLUSTER_SPLIT_SALT)} AS split
         FROM cl),
-    cov AS (SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS dup_tokens
-            FROM spans GROUP BY doc_id),
-    alltoks AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM toks),
-    sp AS (
-        SELECT a.doc_id, a.n_tokens,
-               coalesce(c.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens
-        FROM alltoks a LEFT JOIN cov c USING (doc_id)),
-    tq AS ({_TEXT_QUALITY_SQL}),
+    {_CURATE_SP_TQ}"""
+
+register(
+    "corpus_curate",
+    CU.corpus_curate,
+    f"""
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_SPAN_TAIL_CTES},
+    {DUCK_NEAR_DUP_CTES},{DUCK_CURATE_GATE_CTES},
     kept AS (
         SELECT r.doc_id, r.cluster_id, r.cluster_size, s.split,
                sp.n_tokens, sp.dup_tokens,
@@ -4473,34 +4421,7 @@ register(
     CU.incremental_curate,
     f"""
     WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_SPAN_GRAM_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        WHERE doc_id {_OLD}
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    oldcl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
-    newold AS (
-        SELECT CASE WHEN doc_a {_NEW} THEN doc_a ELSE doc_b END AS new_id,
-               CASE WHEN doc_a {_NEW} THEN doc_b ELSE doc_a END AS old_id,
-               jaccard
-        FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND (doc_a {_NEW}) <> (doc_b {_NEW})),
-    best AS (
-        SELECT new_id, old_id FROM (
-          SELECT *, row_number() OVER (PARTITION BY new_id
-                     ORDER BY jaccard DESC, old_id ASC) AS rn
-          FROM newold) WHERE rn = 1),
+    {DUCK_OLD_NEAR_DUP_CTES},
     asg AS (
         SELECT n.doc_id,
                coalesce(c.cluster_id, n.doc_id) AS cluster_id,
@@ -4529,11 +4450,7 @@ register(
     tq AS ({_TEXT_QUALITY_SQL})
     SELECT asg.doc_id, sp.n_tokens, sp.dup_old_tokens, tq.quality_score,
            asg.matched, asg.cluster_id,
-           CASE WHEN {DUCK_H8.format(x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'")} % 100
-                    < {SA.TRAIN_PCT} THEN 'train'
-                WHEN {DUCK_H8.format(x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'")} % 100
-                    < {SA.TRAIN_PCT + SA.VAL_PCT} THEN 'val'
-                ELSE 'test' END AS split,
+           {_duck_split("cluster_id", SA.CLUSTER_SPLIT_SALT)} AS split,
            CASE WHEN ex.exact_dup = 1 THEN 'drop_exact'
                 WHEN asg.matched = 1 THEN 'drop_neardup'
                 WHEN tq.quality_score < {CU.CURATE_MIN_QUALITY}
@@ -4827,7 +4744,7 @@ register(
     """,
 )
 
-# --- round-8 registrations ----------------------------------------------------
+# --- curation-shelf registrations ---------------------------------------------
 # Each family's test file imports these single-sourced oracle strings
 # (the DSIR/PII discipline).
 
@@ -5272,11 +5189,8 @@ register(
     """,
 )
 
-# -- corpus_curate_v2 (flagship pipeline + the round-7 families as stages) ---
+# -- corpus_curate_v2 (flagship pipeline + gopher, PII and line-dedup stages)
 
-_V2_SPLIT_HASH = DUCK_H8.format(
-    x=f"CAST(cluster_id AS VARCHAR) || '{SA.CLUSTER_SPLIT_SALT}'"
-)
 _V2_GATE = " AND ".join(f"gof.{r}" for r in CU.CURATE_GOPHER_RULES)
 _V2_GOF_COLS = ", ".join(CU.CURATE_GOPHER_RULES)
 
@@ -5285,50 +5199,7 @@ register(
     CU.corpus_curate_v2,
     f"""
     WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_SPAN_TAIL_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
-    chars AS (SELECT doc_id, CAST(len(text) AS INT) AS n_chars FROM documents),
-    reps AS (
-        SELECT cluster_id, doc_id, CAST(cluster_size AS BIGINT) AS cluster_size
-        FROM (
-            SELECT cl.cluster_id, cl.doc_id,
-                   row_number() OVER (PARTITION BY cl.cluster_id
-                       ORDER BY chars.n_chars DESC, cl.doc_id ASC) AS rn,
-                   count(*) OVER (PARTITION BY cl.cluster_id) AS cluster_size
-            FROM cl JOIN chars USING (doc_id))
-        WHERE rn = 1),
-    ex AS (
-        SELECT doc_id FROM (
-            SELECT doc_id,
-                   min(doc_id) OVER (PARTITION BY md5(text)) AS can
-            FROM documents)
-        WHERE doc_id = can),
-    splits AS (
-        SELECT doc_id,
-               CASE WHEN {_V2_SPLIT_HASH} % 100 < {SA.TRAIN_PCT} THEN 'train'
-                    WHEN {_V2_SPLIT_HASH} % 100 < {SA.TRAIN_PCT + SA.VAL_PCT}
-                        THEN 'val'
-                    ELSE 'test' END AS split
-        FROM cl),
-    cov AS (SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS dup_tokens
-            FROM spans GROUP BY doc_id),
-    alltoks AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM toks),
-    sp AS (
-        SELECT a.doc_id, a.n_tokens,
-               coalesce(c.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens
-        FROM alltoks a LEFT JOIN cov c USING (doc_id)),
-    tq AS ({_TEXT_QUALITY_SQL}),
+    {DUCK_NEAR_DUP_CTES},{DUCK_CURATE_GATE_CTES},
     gof AS (SELECT doc_id, {_V2_GOF_COLS} FROM ({DUCK_GOPHER_FLAGS})),
     piir AS (
         SELECT doc_id,
@@ -5382,7 +5253,7 @@ register(
     """,
 )
 
-# --- round-9 registrations ----------------------------------------------------
+# --- audit cards and reports -------------------------------------------------
 # Each family's test file imports these single-sourced oracle strings
 # (the DSIR/PII discipline).
 
@@ -5470,11 +5341,9 @@ register(
 
 # -- split-balance stratum QA (operators/sampling.py) ------------------------
 # deviation_ppm divides diff*1000 by the MILLI-doc expectation
-# (expected_micro // 1e3): int64-safe to ~9.2e9-doc strata (the round-8
-# advisory) without the whole-doc flooring that inflated deviation for
-# strata expecting < ~2 docs (the round-9 advisory).
+# (expected_micro // 1e3): int64-safe to ~9.2e9-doc strata, without the
+# whole-doc flooring that inflates deviation for strata expecting < ~2 docs.
 
-_SPLIT_H = DUCK_H8.format(x=f"(CAST(doc_id AS VARCHAR) || '{SA.SPLIT_SALT}')")
 _SPLIT_PCT = (
     f"(CASE p.split WHEN 'train' THEN {SA.TRAIN_PCT}"
     f" WHEN 'val' THEN {SA.VAL_PCT}"
@@ -5487,10 +5356,7 @@ register(
     f"""
     WITH s AS (
         SELECT doc_id, lang,
-               CASE WHEN ({_SPLIT_H}) % 100 < {SA.TRAIN_PCT} THEN 'train'
-                    WHEN ({_SPLIT_H}) % 100 < {SA.TRAIN_PCT + SA.VAL_PCT}
-                        THEN 'val'
-                    ELSE 'test' END AS split
+               {_duck_split("doc_id", SA.SPLIT_SALT)} AS split
         FROM documents),
     per AS (SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs
             FROM s GROUP BY split, lang),
@@ -5670,19 +5536,8 @@ register(
     CU.curation_funnel,
     f"""
     WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_SPAN_TAIL_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (SELECT src AS doc_id, min(dst) AS cluster_id
-           FROM reach GROUP BY src),
-    chars AS (SELECT doc_id, CAST(len(text) AS INT) AS n_chars FROM documents),
+    {DUCK_NEAR_DUP_CTES},
+    {_CURATE_CHARS},
     reps AS (
         SELECT doc_id FROM (
             SELECT cl.doc_id,
@@ -5690,20 +5545,8 @@ register(
                        ORDER BY chars.n_chars DESC, cl.doc_id ASC) AS rn
             FROM cl JOIN chars USING (doc_id))
         WHERE rn = 1),
-    ex AS (
-        SELECT doc_id FROM (
-            SELECT doc_id,
-                   min(doc_id) OVER (PARTITION BY md5(text)) AS can
-            FROM documents)
-        WHERE doc_id = can),
-    cov AS (SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS dup_tokens
-            FROM spans GROUP BY doc_id),
-    alltoks AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM toks),
-    sp AS (
-        SELECT a.doc_id, a.n_tokens,
-               coalesce(c.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens
-        FROM alltoks a LEFT JOIN cov c USING (doc_id)),
-    tq AS ({_TEXT_QUALITY_SQL}),
+    {_CURATE_EX},
+    {_CURATE_SP_TQ},
     kept AS (
         SELECT r.doc_id, sp.n_tokens - sp.dup_tokens AS kept_tokens,
                tq.quality_score
@@ -5981,22 +5824,6 @@ register(
     """,
 )
 
-# ============================================================================
-# Round-10 registrations, with their oracle SQL single-sourced (their
-# test files point at __spark_entry__.oracle_sql()).
-# ============================================================================
-
-
-def _registered_oracle(name: str) -> str:
-    """The already-registered oracle SQL for ``name`` — composition
-    helper so derived cards (export_shards over corpus_curate, the
-    stream twin over token_drift_report) reuse the registered text
-    verbatim instead of duplicating it."""
-    from .registry import _ORACLES
-
-    return _ORACLES[name]
-
-
 # -- exact-vs-scoped embedding near-dup recall card (operators/similarity.py)
 # The audit card pinning what the centroid-scoped registered default
 # (embedding_near_duplicates) misses vs the exact block grid at the SAME
@@ -6098,19 +5925,7 @@ register(
     "dedup_cluster_hist",
     D.dedup_cluster_hist,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cl AS (SELECT src AS doc_id, min(dst) AS cluster_id
-           FROM reach GROUP BY src),
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_NEAR_DUP_CTES},
     sizes AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
               FROM cl GROUP BY cluster_id)
     SELECT cluster_size,
@@ -6129,35 +5944,7 @@ register(
     "dedup_index_commit",
     D.dedup_index_commit,
     f"""
-    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND doc_a {_OLD} AND doc_b {_OLD}),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS dst FROM documents
-        WHERE doc_id {_OLD}
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    oldcl AS (
-        SELECT src AS doc_id, min(dst) AS cluster_id
-        FROM reach GROUP BY src),
-    newold AS (
-        SELECT CASE WHEN doc_a {_NEW} THEN doc_a ELSE doc_b END AS new_id,
-               CASE WHEN doc_a {_NEW} THEN doc_b ELSE doc_a END AS old_id,
-               jaccard
-        FROM pairs
-        WHERE jaccard >= {D.JACCARD_THRESHOLD}
-          AND (doc_a {_NEW}) <> (doc_b {_NEW})),
-    best AS (
-        SELECT new_id, old_id FROM (
-          SELECT *, row_number() OVER (PARTITION BY new_id
-                     ORDER BY jaccard DESC, old_id ASC) AS rn
-          FROM newold) WHERE rn = 1),
+    WITH RECURSIVE {DUCK_MINHASH_PAIR_CTES},{DUCK_OLD_NEAR_DUP_CTES},
     nn AS (
         SELECT doc_a, doc_b FROM pairs
         WHERE jaccard >= {D.JACCARD_THRESHOLD}
@@ -6377,7 +6164,7 @@ register(
 
 # -- the one-card training-run export (operators/curate.py) ------------------
 # See tests/test_training_export.py for the reconciliation invariants
-# and the pure-Python replay. The shard spine (round-11 advisory) makes
+# and the pure-Python replay. The shard spine makes
 # the exact reconciliation Σ span_tokens = Σ shard_tokens = T hold even
 # when a single doc out-sizes the shard capacity: shards no doc STARTS
 # in emit explicit zero-doc rows on BOTH engines.
@@ -6470,14 +6257,8 @@ register(
     """,
 )
 
-# ============================================================================
-# Round-13 registrations, with their oracle SQL single-sourced (their
-# test files point at __spark_entry__.oracle_sql()).
-# ============================================================================
-
 # -- encode->decode round-trip coverage per modality (operators/multimodal.py)
-# The non-vacuous decode-evidence card (round-10 verdict #2, carried to
-# round-11 #5): engine-ENCODED synthetic payloads (entropy-coded JPEG,
+# The non-vacuous decode-evidence card: engine-ENCODED synthetic payloads (entropy-coded JPEG,
 # zlib PNG, PCM WAV) run back through the real strict decoders, so each
 # modality reports a non-zero 'decoded' row alongside the constructed
 # truncated-stream / unsupported-codec classes. The oracle derives every
@@ -6508,8 +6289,7 @@ register(
 )
 
 # -- append-only delta shards of the training export (operators/curate.py) ---
-# The incremental twin of training_export (round-10 verdict #8 stretch,
-# carried through round 12): old-batch docs keep their packed positions,
+# The incremental twin of training_export: old-batch docs keep their packed positions,
 # the incremental-curate survivors append after the old total, and only
 # shards the delta touches (shard_id >= t_old // cap) are emitted —
 # exactly reconciled against the full card by
@@ -6658,11 +6438,6 @@ register(
     _bitext_oracle(),
 )
 
-# ============================================================================
-# Round-14 registrations, with their oracle SQL single-sourced (their
-# test files point at __spark_entry__.oracle_sql()).
-# ============================================================================
-
 # -- per-language tokenizer fertility / compression card (operators/bpe.py) --
 # The cross-language tokenizer-selection audit: aggregates the REGISTERED
 # bpe_encode_stats per-doc counters by documents.lang with exact integer
@@ -6749,7 +6524,7 @@ register(
 # asset (spans.py::standing_old_contexts — keyed, atomically published,
 # rebuilt only on fixture/version change). The probe prunes to one width
 # partition per doubling level; at cluster scale the standing asset is
-# the increment-sized path (SCALING_r14.md: flat sf0.1 -> sf1 warmed).
+# the increment-sized path (flat from sf0.1 to sf1 once warm).
 # The oracle replays the identical md5 doubling chain INLINE over all
 # documents and derives the old-corpus distinct sets per width — the
 # asset is an execution strategy, not a semantic input, so the oracle

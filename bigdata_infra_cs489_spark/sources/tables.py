@@ -105,13 +105,3 @@ def load(
     if parallelize:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql() use."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

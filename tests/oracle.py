@@ -7,18 +7,7 @@ import math
 
 import duckdb
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from bigdata_infra_cs489_spark.sources.tables import TABLE_NAMES as TABLES
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

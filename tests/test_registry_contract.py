@@ -83,3 +83,18 @@ def test_stale_driver_rows_rotate_oldest_first():
         f" (bound {lag_bound} for {len(qs)} queries,"
         f" missed rotations {sorted(_MISSED_ROTATIONS)}): {due}"
     )
+
+
+_CLOSURE_STEP = "SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src"
+
+
+def test_near_dup_closure_written_once():
+    """The recursive near-dup closure is one fragment in catalog.py, and
+    every oracle that clusters the pair set is built from it."""
+    import inspect
+
+    from bigdata_infra_cs489_spark.plans import catalog
+
+    assert inspect.getsource(catalog).count(_CLOSURE_STEP) == 1
+    users = [n for n, sql in registry.oracle_sql().items() if _CLOSURE_STEP in sql]
+    assert len(users) == 13, sorted(users)

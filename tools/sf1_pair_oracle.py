@@ -36,19 +36,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb  # noqa: E402
-
 from bigdata_infra_cs489_spark.plans import registry  # noqa: E402
 from bigdata_infra_cs489_spark.plans.catalog import (  # noqa: E402
     DUCK_MINHASH_PAIR_CTES,
 )
 from bigdata_infra_cs489_spark.session import get_spark  # noqa: E402
-from tests.oracle import _canon, fragile_duck_columns  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tests.oracle import _canon, duck_connection, fragile_duck_columns  # noqa: E402
 
 DEFAULT_TARGETS = [
     "minhash_near_duplicates",
@@ -142,12 +135,7 @@ def main() -> int:
     targets = args.names or DEFAULT_TARGETS
     cache_dir = f"{args.sf_dir}_pair_oracle"
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = duck_connection(args.sf_dir)
     print("materializing staged pair oracle ...", flush=True)
     stage_secs = materialize(con, cache_dir)
 
