@@ -13,12 +13,15 @@ Stages meet only through doc_id-keyed narrow joins (no text column
 crosses a stage boundary): the MinHash/CC lineage, the k-gram span
 lineage, and the quality lineage each scan the corpus once and reduce to
 per-doc scalars before joining. The expensive iterative cluster
-assignment is computed ONCE and feeds both keep-best selection and the
-split (composing the standalone operators would pay it twice — see the
-inline note); per-stage semantics stay bit-identical to the standalone
-oracled operators, pinned by tests/test_curate.py. The single
-total-order step (greedy packing) rides the range-partitioned prefix
-machinery, never a partition-less window.
+assignment is computed ONCE and feeds both keep-best selection
+(dedup.dedup_keep_best) and the split (a hash of the kept rep's
+cluster_id, not a second cluster lineage); per-stage semantics stay
+bit-identical to the standalone oracled operators, pinned by
+tests/test_curate.py. The single total-order step (greedy packing,
+_pack) rides the range-partitioned prefix machinery, never a
+partition-less window; the quality and span-budget gates are written
+once (quality_ok, span_budget_ok) for the bootstrap chain, the funnel
+and the incremental verdict.
 
 No reference counterpart (north-star extension family); the DuckDB twin
 replays the identical chain in plans/catalog.py.
@@ -26,12 +29,12 @@ replays the identical chain in plans/catalog.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load
 from . import assets
-from .dedup import dedup_index_path, q_exact_dedup, standing_full_clusters
+from .dedup import dedup_index_path, dedup_keep_best, is_new_batch, q_exact_dedup
 from .distsort import with_running_totals
 from .sampling import CLUSTER_SPLIT_SALT, TRAIN_PCT, VAL_PCT, split_col
 from .spans import dup_span_stats
@@ -42,6 +45,59 @@ CURATE_MIN_QUALITY = 0.5  # keep docs with quality_score >= this
 # so the cross-engine comparison never rides on a rounded fraction
 CURATE_MAX_DUP_DEN = 2  # i.e. drop docs with > 1/2 of tokens duplicated
 CURATE_TOKEN_BUDGET = 12_000  # kept-token budget for the packed corpus
+
+# the packed manifest's per-doc columns (its running total follows);
+# kept_tokens = tokens left after span stripping
+PACKED_COLS = (
+    "doc_id",
+    "cluster_id",
+    "cluster_size",
+    "split",
+    "n_tokens",
+    "dup_tokens",
+    "kept_tokens",
+    "quality_score",
+)
+
+
+def quality_ok() -> Column:
+    """The quality gate: quality_score >= CURATE_MIN_QUALITY (NULL for a
+    NULL score, so a missing score never passes)."""
+    return F.col("quality_score") >= CURATE_MIN_QUALITY
+
+
+def span_budget_ok(dup_col: str = "dup_tokens") -> Column:
+    """The span-budget gate: at most 1/CURATE_MAX_DUP_DEN of n_tokens
+    inside repeated spans, in exact integer arithmetic."""
+    return F.col(dup_col) * CURATE_MAX_DUP_DEN <= F.col("n_tokens")
+
+
+def _kept(gated: DataFrame, *extra: str) -> DataFrame:
+    """PACKED_COLS (plus ``extra``) of the gated rows, kept_tokens derived."""
+    kept_tokens = (F.col("n_tokens") - F.col("dup_tokens")).alias("kept_tokens")
+    return gated.select(
+        *[kept_tokens if c == "kept_tokens" else c for c in PACKED_COLS], *extra
+    )
+
+
+def _pack(
+    kept: DataFrame,
+    cum: str = "cum_kept_tokens",
+    budget: int | None = CURATE_TOKEN_BUDGET,
+) -> DataFrame:
+    """Greedy quality-first pack: the running kept_tokens total ``cum``
+    in pack order (quality desc, doc_id) over the distsort prefix
+    machinery, cut to the rows that fit ``budget`` (no cut when None)."""
+    packed = with_running_totals(
+        kept, [F.desc("quality_score"), F.asc("doc_id")], {cum: "kept_tokens"}
+    )
+    return packed if budget is None else packed.where(F.col(cum) <= budget)
+
+
+def _shard_start(cum: str, shard_tokens: int) -> Column:
+    """Shard of the doc whose span ends at running total ``cum``: the
+    shard where its span STARTS, (cum - kept_tokens) DIV shard_tokens."""
+    return F.expr(f"CAST(({cum} - kept_tokens) DIV {shard_tokens} AS BIGINT)")
 
 
 def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,22 +111,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept_tokens (= tokens remaining after span stripping). The split
     column is the leakage-safe cluster-hashed train/val/test assignment.
     """
-    kept = _curate_gated(spark, sf_dir).select(
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        "split",
-        "n_tokens",
-        "dup_tokens",
-        (F.col("n_tokens") - F.col("dup_tokens")).alias("kept_tokens"),
-        "quality_score",
-    )
-    packed = with_running_totals(
-        kept,
-        [F.desc("quality_score"), F.asc("doc_id")],
-        {"cum_kept_tokens": "kept_tokens"},
-    )
-    return packed.where(F.col("cum_kept_tokens") <= CURATE_TOKEN_BUDGET)
+    return _pack(_kept(_curate_gated(spark, sf_dir)))
 
 
 # Bump on ANY plan-affecting change to the corpus_curate lineage that the
@@ -89,8 +130,8 @@ def _curate_plan_key() -> str:
     percentages (leakage-safe split), the span-gate window parameters,
     and the gate/budget constants. Centralized in one tuple so adding a
     constant to the lineage has one obvious place to key it — a missed
-    CURATE_MANIFEST_VERSION bump after changing any of these no longer
-    serves a stale manifest (round-13 advisory). Literal formula edits
+    CURATE_MANIFEST_VERSION bump after changing any of these cannot
+    serve a stale manifest. Literal formula edits
     (e.g. inside text_quality) still need the version bump."""
     import hashlib
 
@@ -158,42 +199,17 @@ def _curate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical-copy ∩ keep-best rep, cluster-hashed split, span and
     quality lineages joined as per-doc scalars, quality + span-budget
     gates applied. corpus_curate packs this directly; corpus_curate_v2
-    joins the round-7 audit lineages and adds its gates on top."""
+    joins its audit lineages and adds its gates on top."""
     exact_ok = (
         q_exact_dedup(spark, sf_dir).where(~F.col("is_duplicate")).select("doc_id")
     )
-    # The iterative MinHash/CC cluster assignment is the expensive stage,
-    # and composing the standalone dedup_keep_best + leakage_safe_split
-    # operators would run it TWICE (each re-derives clusters; the
-    # checkpointed iterative lineage is opaque to Catalyst's subplan
-    # sharing). Since round 9 the cluster map is served from the STANDING
-    # asset (dedup.standing_full_clusters — built once per data
-    # generation, probed as a parquet scan afterwards: the warm path a
-    # recurring curation job actually pays; outputs bit-identical, same
-    # oracle). Keep-best is a partial-aggregatable max_by argmax on top
-    # (NOT a cluster-partitioned window — a mega-cluster of mass
-    # duplicates would pin one task, and AQE splits skewed joins, never
-    # skewed windows; same hardening as dedup.dedup_keep_best), and the
-    # split is a pure hash expression on the surviving rep's cluster_id
-    # — no second lineage, no extra join. Semantic equality with the
-    # standalone operators is pinned by tests/test_curate.py::
-    # test_stages_agree_with_standalone_operators.
-    clusters = standing_full_clusters(spark, sf_dir)
-    chars = load(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("n_chars")
-    )
-    best = (
-        clusters.join(chars, "doc_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.max_by(
-                F.col("doc_id"),
-                F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("nid")),
-            ).alias("doc_id"),
-            F.count(F.lit(1)).cast("bigint").alias("cluster_size"),
-        )
-    )
-    reps = best.select(
+    # The iterative MinHash/CC cluster assignment is the expensive stage;
+    # dedup_keep_best reads it from the STANDING cluster asset
+    # (dedup.standing_full_clusters — built once per data generation,
+    # probed as a parquet scan afterwards), and the split is a pure hash
+    # expression on the surviving rep's cluster_id, so the cluster
+    # lineage is paid once: no second lineage, no extra join.
+    reps = dedup_keep_best(spark, sf_dir).select(
         "doc_id",
         "cluster_id",
         "cluster_size",
@@ -205,10 +221,7 @@ def _curate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         reps.join(exact_ok, "doc_id")
         .join(spans, "doc_id")
         .join(qual, "doc_id")
-        .where(
-            (F.col("quality_score") >= CURATE_MIN_QUALITY)
-            & (F.col("dup_tokens") * CURATE_MAX_DUP_DEN <= F.col("n_tokens"))
-        )
+        .where(quality_ok() & span_budget_ok())
     )
 
 
@@ -221,9 +234,10 @@ CURATE_GOPHER_RULES: tuple[str, ...] = ("flag_word_count",)
 
 
 def corpus_curate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus_curate + the round-7 curation families as first-class
-    stages: the Gopher rule gate (CURATE_GOPHER_RULES must all hold) and
-    two audit lineages every production corpus card carries — n_redactions
+    """corpus_curate + the Gopher, PII and line-dedup families as
+    first-class stages: the Gopher rule gate (CURATE_GOPHER_RULES must
+    all hold) and two audit lineages every production corpus card
+    carries — n_redactions
     (PII substitutions the export stage applies, counted on the
     decorated fixture twin per the pii.py convention) and dup_lines
     (pseudo-line occurrences this doc loses to corpus line dedup's
@@ -235,12 +249,11 @@ def corpus_curate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_redactions is counted AFTER budget packing, on the packed subset
     only (a left-semi prune feeds the PII lineage): redaction is an
-    export-time decoration, so only exported docs need the (measured-
-    dominant — 11.3 s of v2's 21.9 s at sf1, the round-11 verdict-#7
-    slope) corpus-wide regex scan. Values are identical — the PII count
-    is per-doc and packing doesn't depend on it — but the regex leg's
-    cost now tracks the EXPORT size, not the corpus size, which is the
-    100 TB-correct shape."""
+    export-time decoration, so only exported docs need the
+    (measured-dominant — 11.3 s of v2's 21.9 s at sf1) corpus-wide regex
+    scan. Values are identical — the PII count is per-doc and packing
+    doesn't depend on it — but the regex leg's cost tracks the EXPORT
+    size, not the corpus size, which is the 100 TB-correct shape."""
     from .docquality import gopher_metrics
     from .linededup import dedup_lines_keep_first, token_window_lines
     from .pii import decorate_with_pii, redaction_counts
@@ -255,28 +268,13 @@ def corpus_curate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in CURATE_GOPHER_RULES:
         c = F.col(r)
         gate_ok = c if gate_ok is None else (gate_ok & c)
-    kept = (
+    gated = (
         _curate_gated(spark, sf_dir)
         .join(gates, "doc_id")
         .where(gate_ok)
         .join(lines, "doc_id")
-        .select(
-            "doc_id",
-            "cluster_id",
-            "cluster_size",
-            "split",
-            "n_tokens",
-            "dup_tokens",
-            (F.col("n_tokens") - F.col("dup_tokens")).alias("kept_tokens"),
-            "quality_score",
-            "dup_lines",
-        )
     )
-    packed = with_running_totals(
-        kept,
-        [F.desc("quality_score"), F.asc("doc_id")],
-        {"cum_kept_tokens": "kept_tokens"},
-    ).where(F.col("cum_kept_tokens") <= CURATE_TOKEN_BUDGET)
+    packed = _pack(_kept(gated, "dup_lines"))
     # the packed set is export-sized (token budget / min doc size rows);
     # the lazy local checkpoint materializes the curate lineage ONCE and
     # both consumers below (the PII prune and the final join) read it —
@@ -289,14 +287,7 @@ def corpus_curate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return packed.join(pii, "doc_id", "left").select(
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        "split",
-        "n_tokens",
-        "dup_tokens",
-        "kept_tokens",
-        "quality_score",
+        *PACKED_COLS,
         F.coalesce("n_redactions", F.lit(0)).cast("bigint").alias("n_redactions"),
         "dup_lines",
         "cum_kept_tokens",
@@ -332,21 +323,20 @@ def incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterates over the old corpus except the standing-cluster rebuild,
     which on a real deployment is the maintained table this fixture
     recomputes for a self-contained oracle."""
-    from ..operators.dedup import NEW_BATCH_MOD, incremental_dedup_assign
+    from ..operators.dedup import incremental_dedup_assign
     from ..operators.spans import incremental_span_stats
 
     # parallelize: the quality leg below tokenizes the increment per-row
     # (the same reason textstats._docs opts in) — a single-file fixture
-    # would otherwise run that scan as one task (round-13 advisory)
+    # would otherwise run that scan as one task
     docs = load(spark, sf_dir, "documents", parallelize=True).select(
         "doc_id", "text"
     )
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
     old_digests = (
-        docs.where(~is_new).select(F.md5("text").alias("dig")).distinct()
+        docs.where(~is_new_batch()).select(F.md5("text").alias("dig")).distinct()
     )
     exact = (
-        docs.where(is_new)
+        docs.where(is_new_batch())
         .select("doc_id", F.md5("text").alias("dig"))
         .join(old_digests.withColumn("hit", F.lit(1)), "dig", "left")
         .select("doc_id", F.coalesce("hit", F.lit(0)).alias("exact_dup"))
@@ -361,17 +351,16 @@ def incremental_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was not increment-sized)
     from .textstats import quality_metrics
 
-    qual = quality_metrics(docs.where(is_new)).select(
+    qual = quality_metrics(docs.where(is_new_batch())).select(
         "doc_id", "quality_score"
     )
+    # a NULL score makes ~quality_ok() NULL: the row falls through to
+    # the next `when`
     verdict = (
         F.when(F.col("exact_dup") == 1, "drop_exact")
         .when(F.col("matched") == 1, "drop_neardup")
-        .when(F.col("quality_score") < CURATE_MIN_QUALITY, "drop_quality")
-        .when(
-            F.col("dup_old_tokens") * CURATE_MAX_DUP_DEN > F.col("n_tokens"),
-            "drop_spans",
-        )
+        .when(~quality_ok(), "drop_quality")
+        .when(~span_budget_ok("dup_old_tokens"), "drop_spans")
         .otherwise("kept")
     )
     return (
@@ -422,12 +411,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors re-packed by the same (quality desc, doc_id) running
     total and budget), not by invoking corpus_curate — the f4 set IS
     corpus_curate's kept set by definition, so the packed subsets
-    coincide while the duplicate CC + span + quality lineage the old
-    plan paid (the round-12 bench's widest row, ~2.6 s of 5.0 s at
-    sf0.1) disappears. tests/test_curate.py still pins f5 ==
+    coincide without paying a second CC + span + quality lineage (~2.6 s
+    of 5.0 s at sf0.1). tests/test_curate.py still pins f5 ==
     corpus_curate membership INDEPENDENTLY by running both."""
-    from .dedup import dedup_keep_best
-
     docs = load(spark, sf_dir, "documents").select("doc_id")
     toks = dup_span_stats(spark, sf_dir).select("doc_id", "n_tokens", "dup_tokens")
     exact_ok = (
@@ -439,8 +425,12 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     qual = text_quality(spark, sf_dir).select(
         "doc_id",
         "quality_score",
-        (F.col("quality_score") >= CURATE_MIN_QUALITY).alias("q"),
+        quality_ok().alias("q"),
     )
+    f1 = F.col("e").isNotNull()
+    f2 = f1 & F.col("r").isNotNull()
+    f3 = f2 & F.coalesce("q", F.lit(False))
+    f4 = f3 & span_budget_ok()
     flags = (
         docs.join(toks, "doc_id")
         .join(exact_ok, "doc_id", "left")
@@ -451,19 +441,10 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "quality_score",
             (F.col("n_tokens") - F.col("dup_tokens")).alias("kept_tokens"),
-            F.col("e").isNotNull().alias("f1"),
-            (F.col("e").isNotNull() & F.col("r").isNotNull()).alias("f2"),
-            (
-                F.col("e").isNotNull()
-                & F.col("r").isNotNull()
-                & F.coalesce("q", F.lit(False))
-            ).alias("f3"),
-            (
-                F.col("e").isNotNull()
-                & F.col("r").isNotNull()
-                & F.coalesce("q", F.lit(False))
-                & (F.col("dup_tokens") * CURATE_MAX_DUP_DEN <= F.col("n_tokens"))
-            ).alias("f4"),
+            f1.alias("f1"),
+            f2.alias("f2"),
+            f3.alias("f3"),
+            f4.alias("f4"),
         )
         # one narrow materialization: the packed-membership derivation
         # below and the stage aggregate both read this frame, and the
@@ -471,17 +452,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # must not replay per consumer (graph.py reuse discipline)
         .localCheckpoint(eager=False)
     )
-    packed = (
-        with_running_totals(
-            flags.where(F.col("f4")).select(
-                "doc_id", "kept_tokens", "quality_score"
-            ),
-            [F.desc("quality_score"), F.asc("doc_id")],
-            {"cum_kept_tokens": "kept_tokens"},
-        )
-        .where(F.col("cum_kept_tokens") <= CURATE_TOKEN_BUDGET)
-        .select("doc_id", F.lit(1).alias("p"))
-    )
+    packed = _pack(
+        flags.where(F.col("f4")).select("doc_id", "kept_tokens", "quality_score")
+    ).select("doc_id", F.lit(1).alias("p"))
     f = flags.join(packed, "doc_id", "left").select(
         "n_tokens",
         "f1",
@@ -557,10 +530,7 @@ def export_shards(
     sharded = packed.select(
         "doc_id",
         "kept_tokens",
-        F.expr(
-            f"CAST((cum_kept_tokens - kept_tokens) DIV {shard_tokens}"
-            " AS BIGINT)"
-        ).alias("shard_id"),
+        _shard_start("cum_kept_tokens", shard_tokens).alias("shard_id"),
     )
     return sharded.groupBy("shard_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -620,12 +590,12 @@ def incremental_training_export(
     """(shard_id, n_docs, shard_tokens, new_docs, new_tokens,
     span_tokens, first_seq_id, n_seqs): the INCREMENTAL form of
     training_export — new/changed shards only, for an append-only
-    increment (the round-10 verdict's #8 stretch).
+    increment.
 
     Stream semantics: the STANDING export is the packed corpus
-    restricted to pre-batch documents (corpus_curate rows with
-    doc_id % NEW_BATCH_MOD != NEW_BATCH_MOD-1, running totals
-    recomputed over the restriction — the fixture's self-contained
+    restricted to pre-batch documents (corpus_curate rows outside
+    dedup.is_new_batch, running totals recomputed over the
+    restriction — the fixture's self-contained
     stand-in for the persisted manifest the previous run published);
     the increment is incremental_curate's verdict='kept' documents
     (kept_tokens = n_tokens - dup_old_tokens, the tokens surviving
@@ -646,18 +616,14 @@ def incremental_training_export(
     is training_export_core's — integer projections, one partial-agg
     groupBy(shard_id), broadcast 1-row totals. At 100 TB the recurring
     job touches standing ASSETS plus the increment, never old-vs-old."""
-    from .dedup import NEW_BATCH_MOD
-
-    is_old = (F.col("doc_id") % NEW_BATCH_MOD) != (NEW_BATCH_MOD - 1)
-    old_packed = with_running_totals(
-        standing_packed_corpus(spark, sf_dir)
-        .where(is_old)
-        .select("doc_id", "split", "kept_tokens", "quality_score"),
-        [F.desc("quality_score"), F.asc("doc_id")],
-        {"cum_kept_tokens": "kept_tokens"},
     # the standing stream feeds the boundary total AND the append
     # stream; the source is already an export-sized parquet probe
     # (standing_packed_corpus), so the pin only spares the re-window
+    old_packed = _pack(
+        standing_packed_corpus(spark, sf_dir)
+        .where(~is_new_batch())
+        .select("doc_id", "split", "kept_tokens", "quality_score"),
+        budget=None,
     ).localCheckpoint(eager=False)
     kept_new = (
         incremental_curate(spark, sf_dir)
@@ -669,11 +635,7 @@ def incremental_training_export(
             "quality_score",
         )
     )
-    new_packed = with_running_totals(
-        kept_new,
-        [F.desc("quality_score"), F.asc("doc_id")],
-        {"cum_new": "kept_tokens"},
-    )
+    new_packed = _pack(kept_new, "cum_new", budget=None)
     t_old = old_packed.agg(
         F.coalesce(F.sum("kept_tokens"), F.lit(0)).cast("bigint").alias("t_old")
     )
@@ -700,10 +662,7 @@ def incremental_training_export(
         new_packed.crossJoin(F.broadcast(t_old))
         .select(
             "kept_tokens",
-            F.expr(
-                f"CAST((cum_new + t_old - kept_tokens) DIV {shard_tokens}"
-                " AS BIGINT)"
-            ).alias("shard_id"),
+            _shard_start("cum_new + t_old", shard_tokens).alias("shard_id"),
         )
         .groupBy("shard_id")
         .agg(
@@ -759,10 +718,7 @@ def training_export_core(
         "doc_id",
         "split",
         "kept_tokens",
-        F.expr(
-            f"CAST((cum_kept_tokens - kept_tokens) DIV {shard_tokens}"
-            " AS BIGINT)"
-        ).alias("shard_id"),
+        _shard_start("cum_kept_tokens", shard_tokens).alias("shard_id"),
     )
 
     def _split(s: str) -> F.Column:
@@ -786,15 +742,15 @@ def training_export_core(
     total = packed.agg(
         F.sum("kept_tokens").cast("bigint").alias("total_tokens")
     )
-    # Full shard spine 0..last (round-11 advisory): a doc with
+    # Full shard spine 0..last: a doc with
     # kept_tokens > cap spans shards no doc STARTS in; without spine
     # rows those shards vanish and Σ span_tokens = T silently breaks —
     # the exact reconciliation the card exists to enforce. The spine is
     # one sequence() over the broadcast 1-row total (n_shards rows —
     # shards are release-artifact-sized, so the array stays tiny even
     # at 100 TB), left-joining the doc aggregate with zero fills.
-    # last = max(ceil(T/cap)-1, max assigned shard_id) — round-12
-    # advisory: a ZERO-kept-token doc whose span starts exactly at T
+    # last = max(ceil(T/cap)-1, max assigned shard_id): a ZERO-kept-token
+    # doc whose span starts exactly at T
     # (T an exact multiple of cap) is assigned shard_id = T DIV cap =
     # n_shards; a spine cut at n_shards-1 would silently drop that doc
     # from the manifest. Extending the spine keeps it as an explicit

@@ -244,6 +244,15 @@ def lsh_candidate_pairs(
     )
 
 
+def set_jaccard(a: str, b: str) -> Column:
+    """True Jaccard of two shingle-set array columns, 6dp. floor_round,
+    not F.round: intersect/union is an exact integer ratio, so its
+    half-up ties must round the same way on both engines."""
+    return floor_round(
+        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6
+    )
+
+
 def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Attach true shingle-set Jaccard to (doc_a, doc_b) pairs."""
     sh = shingles(docs)
@@ -252,17 +261,7 @@ def jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            # floor_round, not F.round: intersect/union is an exact
-            # integer ratio (the round-12-proven tie class)
-            floor_round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", set_jaccard("sh_a", "sh_b").alias("jaccard"))
     )
 
 
@@ -680,6 +679,14 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NEW_BATCH_MOD = 10  # doc_id % 10 == 9 plays the freshly-crawled batch
 
+
+def is_new_batch() -> Column:
+    """True for the freshly crawled batch (doc_id modulo NEW_BATCH_MOD
+    is NEW_BATCH_MOD - 1); every other document is the standing corpus.
+    The one definition of the split every incremental operator uses."""
+    return (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
+
+
 # Code-version component of the standing-index key: BUMP whenever the
 # tokenize/shingle/minhash IMPLEMENTATION changes in a value-affecting
 # way (the numeric constants are in the key already, but a code change
@@ -721,9 +728,7 @@ def write_dedup_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     to pre-shuffle the big side once)."""
     import os
 
-    docs = _docs(spark, sf_dir)
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    old_docs = docs.where(~is_new)
+    old_docs = _docs(spark, sf_dir).where(~is_new_batch())
 
     old_pairs = minhash_near_duplicates(old_docs).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -813,9 +818,7 @@ def incremental_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ob = spark.read.parquet(os.path.join(path, "bands"))
     sb = spark.read.parquet(os.path.join(path, "shingles"))
 
-    docs = _docs(spark, sf_dir)
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    new_docs = docs.where(is_new)
+    new_docs = _docs(spark, sf_dir).where(is_new_batch())
 
     nb = signature_bands(new_docs).select(
         F.col("doc_id").alias("new_id"), "band", "band_key"
@@ -831,15 +834,7 @@ def incremental_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = (
         cand.join(sa, "new_id")
         .join(sb, "old_id")
-        .select(
-            "new_id",
-            "old_id",
-            floor_round(
-                F.size(F.array_intersect("sh_n", "sh_o"))
-                / F.size(F.array_union("sh_n", "sh_o")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("new_id", "old_id", set_jaccard("sh_n", "sh_o").alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     best = verified.groupBy("new_id").agg(
@@ -876,11 +871,10 @@ def jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is LOSSLESS. Candidates additionally pass the length filter
     (J >= t implies t*|B| <= |A| for |A| <= |B|) before the distinct.
 
-    The round-3 build paid a full-index shuffle join on the skewed raw
-    shingle key plus a whole-index window — those are gone (see
-    _ordered_sets: broadcast hot-vocab join + in-array sort), which
-    removes the structural cause of the round-3 driver blowup (62.6 s
-    vs 7.5 s local: spilling window sort over the full index).
+    No full-index shuffle join on the skewed raw shingle key and no
+    whole-index window (see _ordered_sets: broadcast hot-vocab join +
+    in-array sort): the spilling window sort over the full index is
+    what made that shape 62.6 s vs 7.5 s locally.
 
     Honest perf note, measured at sf0.1: THIS corpus has no shingle
     skew (max df = 25 over a 27k vocab), so the regime prefix
@@ -939,7 +933,7 @@ def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     the verify join), but do NOT pin it: the three subtrees share their
     exchanges via ReuseExchange (byte-identical subplans), so the chain
     executes once already — a localCheckpoint here was measured 3x
-    SLOWER at sf0.1 (r15: 4.6 s -> 13.4 s), paying an RDD
+    SLOWER at sf0.1 (4.6 s -> 13.4 s), paying an RDD
     materialization barrier for sharing Catalyst provided for free."""
     per_doc = _ordered_sets(docs)
     cand = _prefix_candidates(per_doc)
@@ -951,17 +945,7 @@ def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     verified = (
         cand.join(aa, "doc_a")
         .join(bb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            # floor_round, not F.round: intersect/union is an exact
-            # integer ratio (the round-12-proven tie class)
-            floor_round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", set_jaccard("sh_a", "sh_b").alias("jaccard"))
     )
     thr = PPJOIN_T_NUM / PPJOIN_T_DEN
     return verified.where(F.col("jaccard") >= thr)
@@ -983,9 +967,9 @@ def _ordered_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, ordered array<struct<odf,s>>, n_sh, prefix_len): each
     doc's shingle set sorted by the capped ascending-frequency order.
 
-    The round-3 shape (full shingle-df shuffle join on the skewed raw
-    shingle key + per-doc row_number window over the whole index) cost
-    4x the unfiltered pair join it claims to beat. Here the full index
+    A full shingle-df shuffle join on the skewed raw shingle key + a
+    per-doc row_number window over the whole index costs 4x the
+    unfiltered pair join it claims to beat. Here the full index
     appears only in one map-side-combined groupBy (the df count, capped
     to the PPJOIN_HOT_VOCAB most frequent shared shingles and
     BROADCAST back); ordering happens inside each doc's array
@@ -1075,6 +1059,38 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAM_NEAR_THRESHOLD = 0.5
 
 
+def contamination_near_pairs(
+    bands: DataFrame, sh: DataFrame, eval_docs: DataFrame
+) -> DataFrame:
+    """(doc_id, eval_id, jaccard): every corpus doc whose LSH ``bands``
+    (doc_id, band, band_key) collide with an eval doc's, verified by
+    true Jaccard of the corpus ``sh`` (doc_id, shingles) against the
+    eval doc's shingle set. The eval side is benchmark-sized, so its
+    bands and shingle arrays broadcast. Callers pass corpus frames that
+    do not explode a named shingle array on a live plan (the fused
+    signature_bands, or bands derived from a pinned shingle relation),
+    which keeps the InferFiltersFromGenerate trap of shingle_index out
+    of the plan."""
+    eb = signature_bands(eval_docs).select(
+        F.col("doc_id").alias("eval_id"), "band", "band_key"
+    )
+    cand = (
+        bands.join(F.broadcast(eb), ["band", "band_key"])
+        .select("doc_id", "eval_id")
+        .distinct()
+    )
+    sh_e = shingles(eval_docs).select(
+        F.col("doc_id").alias("eval_id"), F.col("shingles").alias("sh_e")
+    )
+    return (
+        cand.join(sh, "doc_id")
+        .join(F.broadcast(sh_e), "eval_id")
+        .select(
+            "doc_id", "eval_id", set_jaccard("shingles", "sh_e").alias("jaccard")
+        )
+    )
+
+
 def contamination_near_flags(
     corpus: DataFrame,
     eval_docs: DataFrame,
@@ -1096,28 +1112,8 @@ def contamination_near_flags(
     self-join, no shuffle of corpus text. Ties on jaccard resolve to the
     smallest eval_id via the (jaccard, -eval_id) max_by ordering; docs
     with no candidate band collision report (-1, 0.0, false)."""
-    cb = signature_bands(corpus)
-    eb = signature_bands(eval_docs).select(
-        F.col("doc_id").alias("eval_id"), "band", "band_key"
-    )
-    cand = (
-        cb.join(F.broadcast(eb), ["band", "band_key"])
-        .select("doc_id", "eval_id")
-        .distinct()
-    )
-    sh_c = shingles(corpus)
-    sh_e = shingles(eval_docs).select(
-        F.col("doc_id").alias("eval_id"), F.col("shingles").alias("sh_e")
-    )
-    jac = floor_round(
-        F.size(F.array_intersect("shingles", "sh_e"))
-        / F.size(F.array_union("shingles", "sh_e")),
-        6,
-    )
-    verified = (
-        cand.join(sh_c, "doc_id")
-        .join(F.broadcast(sh_e), "eval_id")
-        .select("doc_id", "eval_id", jac.alias("jaccard"))
+    verified = contamination_near_pairs(
+        signature_bands(corpus), shingles(corpus), eval_docs
     )
     best = verified.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
@@ -1419,9 +1415,7 @@ def dedup_index_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "cluster_id", F.lit("assigned").alias("origin")
     )
     unmatched = assign.where(F.col("matched") == 0).select("doc_id")
-    docs = _docs(spark, sf_dir)
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    new_docs = docs.where(is_new)
+    new_docs = _docs(spark, sf_dir).where(is_new_batch())
     nn_pairs = (
         minhash_near_duplicates(new_docs)
         .join(unmatched.select(F.col("doc_id").alias("doc_a")), "doc_a")

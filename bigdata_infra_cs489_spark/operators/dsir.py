@@ -136,11 +136,11 @@ def dsir_doc_scores(target: DataFrame, raw: DataFrame) -> DataFrame:
             # integer ratio, so EXACT .5-micro ties are common (7 docs
             # at sf1, e.g. -218876/56 = -3908.5) and Spark/DuckDB break
             # decimal ties differently; floor(x + 0.5) is one identical
-            # IEEE op on both engines (round-12 sf1 oracle sweep).
-            # Convention note (round-13 advisory): floor(x + 0.5) is
+            # IEEE op on both engines.
+            # Convention note: floor(x + 0.5) is
             # round-half-UP toward +inf, so negative exact ties go UP
             # (-3908.5 -> -3908) — deliberate, mirrored in the DuckDB
-            # twin and now the repo-wide floor_round standard
+            # twin and the repo-wide floor_round standard
             # (functions/numerics.py)
             (
                 F.floor(
@@ -335,7 +335,7 @@ def token_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a scraper regression, language flip, or spam flood shows up as a
     step change in total-variation / Jensen-Shannon distance long
     before any downstream eval moves). Slices follow the
-    incremental-family convention (doc_id % NEW_BATCH_MOD).
+    incremental-family convention (dedup.is_new_batch).
 
     Determinism/scale design (the dsir_logratios discipline): both
     distributions come from ONE tagged token-stream pass partially
@@ -346,13 +346,12 @@ def token_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a float sum over buckets would make the report depend on
     accumulation order, which DuckDB's unordered aggregate does not
     pin. Zero-token slices degrade to an all-zeros row."""
-    from .dedup import NEW_BATCH_MOD
+    from .dedup import is_new_batch
 
     docs = load(spark, sf_dir, "documents", parallelize=True).select(
         "doc_id", "text"
     )
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    tagged = docs.select(is_new.cast("int").alias("side"), "text")
+    tagged = docs.select(is_new_batch().cast("int").alias("side"), "text")
     toks = exploded_tokens(tagged, keep=("side",))
     counts = (
         toks.select("side", (h8(F.col("word")) % DSIR_BUCKETS).alias("bucket"))

@@ -210,11 +210,11 @@ def incremental_line_dedup(
     sep: str = " ",
 ) -> DataFrame:
     """(doc_id, n_lines, dup_lines, clean_text) for each NEW-batch
-    document (doc_id % NEW_BATCH_MOD == NEW_BATCH_MOD - 1, the
-    incremental_dedup_assign convention): lines already present in the
-    standing OLD-corpus line set are dropped, the rest reassemble in
-    order — the recurring production shape at 100 TB, where the distinct
-    line set is a maintained asset and each increment only PROBES it
+    document (dedup.is_new_batch, the incremental_dedup_assign
+    convention): lines already present in the standing OLD-corpus line
+    set are dropped, the rest reassemble in order — the recurring
+    production shape at 100 TB, where the distinct line set is a
+    maintained asset and each increment only PROBES it
     (one semi-join, cost ∝ increment size), never re-scanning
     old-vs-old. Only new-vs-old duplication counts here; repeats within
     the batch are the batch's own intra-run keep-first pass
@@ -224,7 +224,7 @@ def incremental_line_dedup(
     asset and the semi-join exchange carry 8-byte keys instead of line
     text, pinned output-identical to the string path by test. Here it
     rebuilds from the fixture so the DuckDB oracle is self-contained."""
-    from .dedup import NEW_BATCH_MOD
+    from .dedup import is_new_batch
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     lines = token_window_lines(docs)
@@ -235,16 +235,15 @@ def incremental_line_dedup(
         probe_keys = ["line_fp", "line_len"]
     else:
         probe_keys = ["line"]
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
+    is_new = is_new_batch()
     standing = lines.where(~is_new).select(*probe_keys).distinct()
     new_lines = lines.where(is_new)
-    # single new-side pass (round-13 slope fix, SCALING_r12's worst row):
-    # a LEFT join against the standing key set with a hit marker lets
-    # ONE doc-keyed aggregate produce n_lines, kept_lines, AND the
-    # kept-only clean_text — the previous shape exploded the corpus
-    # three times (standing, kept-anti-join, totals) and aggregated the
-    # new side twice. The standing distinct stays a partial-aggregated
-    # groupBy (skew-safe), never a per-line window.
+    # single new-side pass: a LEFT join against the standing key set
+    # with a hit marker lets ONE doc-keyed aggregate produce n_lines,
+    # kept_lines, AND the kept-only clean_text, instead of exploding the
+    # corpus three times (standing, kept-anti-join, totals) and
+    # aggregating the new side twice. The standing distinct stays a
+    # partial-aggregated groupBy (skew-safe), never a per-line window.
     hit = standing.withColumn("dup_hit", F.lit(1))
     marked = new_lines.join(hit, probe_keys, "left")
     is_kept = F.col("dup_hit").isNull()

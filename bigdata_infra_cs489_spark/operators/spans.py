@@ -41,6 +41,7 @@ from ..functions.numerics import floor_round
 from ..functions.text import tokenize
 from ..sources.tables import load
 from .assets import asset_path, ensure
+from .dedup import NEW_BATCH_MOD, is_new_batch
 
 SPAN_K = 5  # window width in tokens; minimum detectable duplicated span
 SPAN_MIN_COUNT = 2  # corpus-wide occurrences for a window to count as dup
@@ -179,20 +180,22 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", parallelize=True).select(
         "doc_id", F.size(tokenize("text")).cast("bigint").alias("n_tokens")
     )
-    cov = (
-        _merged_spans(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.sum("span_len").alias("dup_tokens"))
-    )
-    return docs.join(cov, "doc_id", "left").select(
+    return _span_coverage(docs, _merged_spans(spark, sf_dir), "dup_tokens")
+
+
+def _span_coverage(spine: DataFrame, spans: DataFrame, dup_col: str) -> DataFrame:
+    """(doc_id, n_tokens, <dup_col>, dup_fraction): every ``spine`` doc
+    (doc_id, n_tokens) with the summed span_len of its merged ``spans``
+    as dup_col; a doc without spans scores exact zeros."""
+    cov = spans.groupBy("doc_id").agg(F.sum("span_len").alias(dup_col))
+    dup = F.coalesce(dup_col, F.lit(0))
+    return spine.join(cov, "doc_id", "left").select(
         "doc_id",
         "n_tokens",
-        F.coalesce("dup_tokens", F.lit(0)).cast("bigint").alias("dup_tokens"),
-        floor_round(
-            F.coalesce("dup_tokens", F.lit(0))
-            / F.greatest(F.col("n_tokens"), F.lit(1)),
-            6,
-        ).alias("dup_fraction"),
+        dup.cast("bigint").alias(dup_col),
+        floor_round(dup / F.greatest(F.col("n_tokens"), F.lit(1)), 6).alias(
+            "dup_fraction"
+        ),
     )
 
 
@@ -307,9 +310,9 @@ def strip_spans_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, span_start, span_end, span_len): for each document of a
-    NEW crawl batch (doc_id % NEW_BATCH_MOD == NEW_BATCH_MOD - 1, the
-    same convention as dedup.incremental_dedup_assign), the maximal token
-    ranges whose content already occurs in the OLD corpus — the
+    NEW crawl batch (dedup.is_new_batch, the same split as
+    dedup.incremental_dedup_assign), the maximal token ranges whose
+    content already occurs in the OLD corpus — the
     production shape of span dedup at 100 TB, where the corpus's distinct
     k-gram set is a maintained asset and each increment only probes it,
     never re-scanning old-vs-old.
@@ -342,8 +345,6 @@ def span_index_path(sf_dir: str) -> str:
     """Standing gram-index location for one data generation of the
     documents table, keyed on the parameters that shape the gram set
     (SPAN_K, the new-batch modulus) and SPAN_INDEX_VERSION."""
-    from .dedup import NEW_BATCH_MOD
-
     return asset_path(
         sf_dir,
         "documents",
@@ -367,14 +368,11 @@ def standing_old_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged."""
     import os
 
-    from .dedup import NEW_BATCH_MOD
-
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
     path = ensure(
         span_index_path(sf_dir),
         ("grams_old",),
         lambda tmp: _grams(spark, sf_dir)
-        .where(~is_new)
+        .where(~is_new_batch())
         .select("gram")
         .distinct()
         .write.parquet(os.path.join(tmp, "grams_old")),
@@ -396,10 +394,7 @@ def _incremental_hits(
     work against a persisted index, the recurring shape every consumer
     docstring promises (previously the old corpus was re-exploded and
     re-distinct-ed inline per query)."""
-    from .dedup import NEW_BATCH_MOD
-
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    g = _grams(spark, sf_dir).where(is_new)
+    g = _grams(spark, sf_dir).where(is_new_batch())
     old_index = standing_old_grams(spark, sf_dir)
     if narrow_key:
         g = g.select("doc_id", "n_tokens", "pos", F.xxhash64("gram").alias("gram"))
@@ -430,12 +425,11 @@ def repeated_spans_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(variant, doc_id, span_start, span_end, span_len): BOTH
     repeated-span plan variants — the string-key exchange ('string') and
     the xxhash64 fingerprint exchange ('fp') — in one card, so a single
-    driver hash row externally pins both plans every rotation (the
-    round-11 verdict's twin consolidation: the pair is row-identical by
-    construction, so two separate registry slots bought no extra
-    evidence). The oracle derives the 'fp' rows from the string-key
-    semantics; an fp divergence (plan bug or 64-bit collision) breaks
-    the hash."""
+    driver hash row externally pins both plans every rotation (the pair
+    is row-identical by construction, so two separate registry slots
+    would buy no extra evidence). The oracle derives the 'fp' rows from
+    the string-key semantics; an fp divergence (plan bug or 64-bit
+    collision) breaks the hash."""
     return _tagged_union(
         repeated_spans(spark, sf_dir), "string",
         repeated_spans_fp(spark, sf_dir), "fp",
@@ -472,28 +466,13 @@ def incremental_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing corpus already contains — the per-increment complement of
     dup_span_stats, and the gate signal incremental_curate thresholds
     on. Docs shorter than SPAN_K trivially score 0."""
-    from .dedup import NEW_BATCH_MOD
-
-    docs = load(spark, sf_dir, "documents", parallelize=True).where(
-        (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    )
-    newtoks = docs.select(
-        "doc_id", F.size(tokenize("text")).cast("bigint").alias("n_tokens")
-    )
-    cov = (
-        _merge_intervals(_incremental_hits(spark, sf_dir))
-        .groupBy("doc_id")
-        .agg(F.sum("span_len").alias("dup_old_tokens"))
-    )
-    return newtoks.join(cov, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("dup_old_tokens", F.lit(0)).cast("bigint").alias("dup_old_tokens"),
-        floor_round(
-            F.coalesce("dup_old_tokens", F.lit(0))
-            / F.greatest(F.col("n_tokens"), F.lit(1)),
-            6,
-        ).alias("dup_fraction"),
+    docs = load(spark, sf_dir, "documents", parallelize=True).where(is_new_batch())
+    return _span_coverage(
+        docs.select(
+            "doc_id", F.size(tokenize("text")).cast("bigint").alias("n_tokens")
+        ),
+        _merge_intervals(_incremental_hits(spark, sf_dir)),
+        "dup_old_tokens",
     )
 
 
@@ -620,10 +599,9 @@ def contamination_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         CONTAM_NEAR_THRESHOLD,
         SHINGLE_N,
         _shingle_expr,
+        contamination_near_pairs,
         shingle_index,
         shingle_index_from_shingles,
-        shingles,
-        signature_bands,
         signature_bands_from_shingles,
     )
 
@@ -636,8 +614,8 @@ def contamination_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.where(~is_eval).select("doc_id", "text")
     evald = docs.where(is_eval).select("doc_id", "text")
 
-    # Share the TRAIN-side token and shingle relations across the legs
-    # (r16): the three legs' derivations diverge before any exchange, so
+    # Share the TRAIN-side token and shingle relations across the legs:
+    # the three legs' derivations diverge before any exchange, so
     # AQE exchange reuse cannot share them, and the unpinned form
     # tokenized the full train corpus five times (shingle index, band
     # signatures, verify arrays, gram stream, token total) and ran the
@@ -664,29 +642,10 @@ def contamination_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # near leg: band candidates -> exact-Jaccard verify -> per-(suite, doc)
-    # best -> threshold count (contamination_near's plan, suite-grouped)
-    cb = signature_bands_from_shingles(sh_t)
-    eb = signature_bands(evald).select(
-        F.col("doc_id").alias("eval_id"), "band", "band_key"
-    )
-    cand = (
-        cb.join(F.broadcast(eb), ["band", "band_key"])
-        .select("doc_id", "eval_id")
-        .distinct()
-    )
-    sh_e = shingles(evald).select(
-        F.col("doc_id").alias("eval_id"), F.col("shingles").alias("sh_e")
-    )
-    jac = floor_round(
-        F.size(F.array_intersect("shingles", "sh_e"))
-        / F.size(F.array_union("shingles", "sh_e")),
-        6,
-    )
+    # near leg: contamination_near's verified pairs over the pinned
+    # shingle relation -> per-(suite, doc) best -> threshold count
     near = (
-        cand.join(sh_t, "doc_id")
-        .join(F.broadcast(sh_e), "eval_id")
-        .select("doc_id", "eval_id", jac.alias("jaccard"))
+        contamination_near_pairs(signature_bands_from_shingles(sh_t), sh_t, evald)
         .join(
             F.broadcast(suites.select(F.col("doc_id").alias("eval_id"), "suite")),
             "eval_id",
@@ -824,14 +783,13 @@ def repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokenize("text").alias("toks")
     )
     # ONE width-tagged union + ONE groupBy instead of a per-level
-    # groupBy + global agg pair (r16): the nine levels' stats shuffled
-    # the same bytes through nine hash exchanges and nine
-    # single-partition aggs (≈18 AQE stages of fixed overhead); tagging
-    # each level's (id) rows with their width and aggregating
-    # (width, id) once computes identical exact-integer counts through
-    # two exchanges. The width spine (2^0..2^(L-1), in-plan) restores
-    # the all-zero rows empty levels used to emit from their per-level
-    # global aggs.
+    # groupBy + global agg pair: the per-level form shuffles the same
+    # bytes through nine hash exchanges and nine single-partition aggs
+    # (≈18 AQE stages of fixed overhead); tagging each level's (id) rows
+    # with their width and aggregating (width, id) once computes
+    # identical exact-integer counts through two exchanges. The width
+    # spine (2^0..2^(L-1), in-plan) supplies the all-zero rows of empty
+    # levels.
     levels = [
         cur.select(F.lit(width).cast("bigint").alias("width"), "id")
         for width, cur in _doubling_levels(_token_contexts(docs))
@@ -883,8 +841,6 @@ def spectrum_index_path(sf_dir: str) -> str:
     """Standing context-index location for one data generation of the
     documents table, keyed on the parameters that shape the id sets
     (REPEAT_LEVELS, the new-batch modulus) and SPECTRUM_INDEX_VERSION."""
-    from .dedup import NEW_BATCH_MOD
-
     return asset_path(
         sf_dir,
         "documents",
@@ -904,13 +860,10 @@ def standing_old_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the inline chain, unchanged."""
     import os
 
-    from .dedup import NEW_BATCH_MOD
-
     def build(tmp: str) -> None:
-        is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
         docs = (
             load(spark, sf_dir, "documents", parallelize=True)
-            .where(~is_new)
+            .where(~is_new_batch())
             .select("doc_id", tokenize("text").alias("toks"))
         )
         per_level = [
@@ -938,8 +891,8 @@ def standing_old_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(width, new_positions, dup_old_positions, dup_old_ppm): for each
     window width 1, 2, 4, ..., 2^(REPEAT_LEVELS-1) tokens, how much of
-    the NEW crawl batch's position mass (doc_id % NEW_BATCH_MOD ==
-    NEW_BATCH_MOD - 1, the family convention) is text whose exact token
+    the NEW crawl batch's position mass (dedup.is_new_batch, the family
+    convention) is text whose exact token
     content ALREADY occurs in the standing corpus at that width —
     repeat_spectrum's recurring-path twin, completing the spectrum
     family the way incremental_spans completes the fixed-k span family:
@@ -959,24 +912,21 @@ def incremental_repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; the DuckDB oracle replays the full inline chain and
     stays self-contained, and the asset==inline equality is pinned by
     tests/test_incremental_repeat_spectrum.py."""
-    from .dedup import NEW_BATCH_MOD
-
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
     docs = (
         load(spark, sf_dir, "documents", parallelize=True)
-        .where(is_new)
+        .where(is_new_batch())
         .select("doc_id", tokenize("text").alias("toks"))
     )
     old = standing_old_contexts(spark, sf_dir)
-    # Per-level PRUNED probes + ONE width-tagged union + ONE groupBy
-    # (r16): each level keeps its directory-pruned, broadcast-friendly
+    # Per-level PRUNED probes + ONE width-tagged union + ONE groupBy:
+    # each level keeps its directory-pruned, broadcast-friendly
     # join against exactly its width partition of the asset (a single
     # (width, id) mega-join was A/B-measured ~5% slower — it trades the
     # pruned broadcast probes for one shuffled join), but the nine
     # per-level single-partition aggs collapse into one groupBy(width)
     # over the unioned (width, hit) rows — identical exact-integer
-    # counts, ~9 fewer stage barriers. The width spine restores empty
-    # levels' zero rows the per-level global aggs used to emit.
+    # counts, ~9 fewer stage barriers. The width spine supplies empty
+    # levels' zero rows.
     levels = []
     for width, cur in _doubling_levels(_token_contexts(docs)):
         old_w = old.where(F.col("width") == width).select(

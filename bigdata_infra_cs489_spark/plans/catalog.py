@@ -4278,10 +4278,9 @@ register(
     SP.incremental_spans_variants,
     f"""
     WITH toks AS (SELECT doc_id, {DUCK_TOKS} AS toks FROM documents),{DUCK_SPAN_GRAM_CTES},
-    old_index AS (SELECT DISTINCT gram FROM grams
-                  WHERE doc_id % {D.NEW_BATCH_MOD} != {D.NEW_BATCH_MOD - 1}),
+    old_index AS (SELECT DISTINCT gram FROM grams WHERE doc_id {_OLD}),
     hits AS (SELECT g.doc_id, g.n_tokens, g.pos FROM grams g
-             WHERE g.doc_id % {D.NEW_BATCH_MOD} = {D.NEW_BATCH_MOD - 1}
+             WHERE g.doc_id {_NEW}
                AND g.gram IN (SELECT gram FROM old_index)),{DUCK_SPAN_MERGE_CTES},
     base AS (SELECT doc_id, span_start, span_end, span_len FROM spans)
     SELECT v.variant, b.doc_id, b.span_start, b.span_end, b.span_len
@@ -4846,12 +4845,10 @@ register(
     """,
 )
 
-_LD_NEW_PRED = f"doc_id % {D.NEW_BATCH_MOD} = {D.NEW_BATCH_MOD - 1}"
-
 _INCR_LINE_DEDUP_SQL = f"""
     WITH {DUCK_LINE_CTES},
-    standing AS (SELECT DISTINCT line FROM lines WHERE NOT ({_LD_NEW_PRED})),
-    nl AS (SELECT * FROM lines WHERE {_LD_NEW_PRED}),
+    standing AS (SELECT DISTINCT line FROM lines WHERE NOT (doc_id {_NEW})),
+    nl AS (SELECT * FROM lines WHERE doc_id {_NEW}),
     kept AS (SELECT * FROM nl
              WHERE line NOT IN (SELECT line FROM standing)),
     pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS kept_lines,
@@ -4865,7 +4862,7 @@ _INCR_LINE_DEDUP_SQL = f"""
            CAST(coalesce(tot.n_lines, 0) - coalesce(pd.kept_lines, 0)
                 AS BIGINT) AS dup_lines,
            coalesce(pd.clean_text, '') AS clean_text
-    FROM (SELECT doc_id FROM documents WHERE {_LD_NEW_PRED}) d
+    FROM (SELECT doc_id FROM documents WHERE doc_id {_NEW}) d
     LEFT JOIN tot USING (doc_id)
     LEFT JOIN pd USING (doc_id)
 """
@@ -5706,15 +5703,13 @@ register(
 
 # -- old-vs-new-batch token drift card (operators/dsir.py) -------------------
 
-_DRIFT_NEW_PRED = f"doc_id % {D.NEW_BATCH_MOD} = {D.NEW_BATCH_MOD - 1}"
-
 register(
     "token_drift_report",
     DS.token_drift_report,
     f"""
     WITH toks AS (SELECT doc_id, {DUCK_TOKS} AS toks FROM documents),
     words AS (SELECT doc_id, unnest(toks) AS word FROM toks),
-    b AS (SELECT CASE WHEN {_DRIFT_NEW_PRED} THEN 1 ELSE 0 END AS side,
+    b AS (SELECT CASE WHEN doc_id {_NEW} THEN 1 ELSE 0 END AS side,
                  {DUCK_H8.format(x='word')} % {DS.DSIR_BUCKETS} AS bucket
           FROM words),
     c AS (SELECT side, bucket, count(*) AS n FROM b GROUP BY side, bucket),
@@ -6298,7 +6293,7 @@ register(
 
 
 def _delta_export_oracle() -> str:
-    cap, seq, mod = CU.SHARD_TOKENS, TS.SEQ_LEN, D.NEW_BATCH_MOD
+    cap, seq = CU.SHARD_TOKENS, TS.SEQ_LEN
     win = ("sum(kept_tokens) OVER (ORDER BY quality_score DESC, doc_id"
            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
     return f"""
@@ -6306,7 +6301,7 @@ def _delta_export_oracle() -> str:
     old_packed AS (
         SELECT doc_id, split, kept_tokens, quality_score,
                {win} AS cum_kept_tokens
-        FROM cc WHERE doc_id % {mod} != {mod - 1}),
+        FROM cc WHERE doc_id {_OLD}),
     inc AS ({_registered_oracle("incremental_curate")}),
     kept_new AS (
         SELECT doc_id, split, n_tokens - dup_old_tokens AS kept_tokens,
@@ -6534,7 +6529,6 @@ register(
 
 
 def _incremental_repeat_spectrum_oracle() -> str:
-    m, nw = D.NEW_BATCH_MOD, D.NEW_BATCH_MOD - 1
     ctes = [
         f"toks AS (SELECT doc_id, {DUCK_TOKS} AS toks FROM documents)",
         "t0 AS (SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos,"
@@ -6558,8 +6552,8 @@ def _incremental_repeat_spectrum_oracle() -> str:
            CAST(count(*) AS BIGINT) AS new_positions,
            CAST(coalesce(sum(CASE WHEN o.id IS NOT NULL THEN 1 END), 0)
                 AS BIGINT) AS dup_old_positions
-    FROM (SELECT id FROM t{lvl} WHERE doc_id % {m} = {nw}) n
-    LEFT JOIN (SELECT DISTINCT id FROM t{lvl} WHERE doc_id % {m} <> {nw}) o
+    FROM (SELECT id FROM t{lvl} WHERE doc_id {_NEW}) n
+    LEFT JOIN (SELECT DISTINCT id FROM t{lvl} WHERE doc_id {_OLD}) o
         ON o.id = n.id"""
         )
         width *= 2

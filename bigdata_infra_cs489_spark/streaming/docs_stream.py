@@ -94,11 +94,9 @@ def line_dedup_stream(
     stateless stream-static left join against the standing distinct-line
     index, then one complete-mode aggregation per document (count,
     dup sum, in-order reassembly of the surviving lines)."""
-    from ..operators.dedup import NEW_BATCH_MOD
+    from ..operators.dedup import is_new_batch
 
-    docs = stream_documents(spark, sf_dir).where(
-        (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
-    )
+    docs = stream_documents(spark, sf_dir).where(is_new_batch())
     lines = _windows_outer(docs)
     # no broadcast hint: the fixture index broadcasts on its own under
     # the threshold, but a real standing corpus index is arbitrarily
@@ -133,14 +131,14 @@ def q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: build the standing index from the fixture's
     old corpus (on a deployment: the persisted table), run the stream to
     completion, return the complete table."""
-    from ..operators.dedup import NEW_BATCH_MOD
+    from ..operators.dedup import is_new_batch
     from ..sources.tables import load
     from .events_stream import STREAM_STATE_PARTITIONS
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     standing = (
         token_window_lines(docs)
-        .where((F.col("doc_id") % NEW_BATCH_MOD) != (NEW_BATCH_MOD - 1))
+        .where(~is_new_batch())
         .select("line")
         .distinct()
     )
@@ -171,13 +169,13 @@ def q_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow fixture run is its terminal state)."""
     from ..functions.hashing import h8
     from ..functions.text import exploded_tokens
-    from ..operators.dedup import NEW_BATCH_MOD
+    from ..operators.dedup import is_new_batch
     from ..operators.dsir import DSIR_BUCKETS, drift_card_from_counts
     from ..sources.tables import load
     from .events_stream import STREAM_STATE_PARTITIONS, run_to_memory
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    is_new = (F.col("doc_id") % NEW_BATCH_MOD) == (NEW_BATCH_MOD - 1)
+    is_new = is_new_batch()
     old_counts = (
         exploded_tokens(docs.where(~is_new).select("text"))
         .select((h8(F.col("word")) % DSIR_BUCKETS).alias("bucket"))

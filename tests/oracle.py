@@ -20,7 +20,9 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     down with it (round-14, OOM-killed twice). Capped, DuckDB spills
     instead; the sf0.01 driver-gate workloads never come near the cap."""
     import os
+    import shutil
     import tempfile
+    import weakref
 
     con = duckdb.connect()
     cap_gb = int(os.environ.get("SPARK_GRAFT_DUCK_MEM_GB", "20"))
@@ -29,10 +31,11 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # INSTANCE-LOCAL counter (duckdb_temp_storage-0.tmp, ...), so two
     # connections spilling into one shared dir collide and corrupt each
     # other's oracle queries (parallel sweeps, pytest -n). mkdtemp gives
-    # each connection its own namespace; the OS tmp reaper cleans up.
-    con.execute(
-        "SET temp_directory='" + tempfile.mkdtemp(prefix="duck_spill_") + "'"
-    )
+    # each connection its own namespace, removed once the connection is
+    # garbage-collected.
+    spill = tempfile.mkdtemp(prefix="duck_spill_")
+    weakref.finalize(con, shutil.rmtree, spill, True)
+    con.execute(f"SET temp_directory='{spill}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -413,3 +413,24 @@ def test_publish_subdir_toctou_complete_copy_survives(tmp_path, monkeypatch):
     assert os.path.exists(dst / "_SUCCESS")
     # and no stray torn directory leaks next to it
     assert [p for p in os.listdir(tmp_path) if ".torn-" in p] == []
+
+
+def test_new_batch_split_and_jaccard_verify_written_once():
+    """The new-batch split (dedup.is_new_batch) and the exact shingle-set
+    Jaccard (dedup.set_jaccard) are each written once, in dedup.py;
+    every operator and stream reaches them through those names.
+    index.py's phrase-position intersection is a different mechanism
+    (no size ratio), so the Jaccard pattern is its size-of-intersect
+    numerator."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_infra_cs489_spark"
+    owner = pkg / "operators" / "dedup.py"
+    for pattern in ("% NEW_BATCH_MOD", "size(F.array_intersect("):
+        hits = {
+            str(py.relative_to(pkg)): py.read_text().count(pattern)
+            for d in ("operators", "streaming")
+            for py in (pkg / d).rglob("*.py")
+        }
+        hits = {k: n for k, n in hits.items() if n}
+        assert hits == {str(owner.relative_to(pkg)): 1}, (pattern, hits)

@@ -50,3 +50,18 @@ def test_fragile_detector_catches_hugeint():
         )
     finally:
         con.close()
+
+
+def test_duck_connection_removes_its_spill_dir():
+    """Each connection's private spill dir goes with the connection."""
+    import gc
+    import os
+
+    con = duck_connection(SF_DIR)
+    spill = con.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+    assert os.path.basename(spill).startswith("duck_spill_")
+    assert os.path.isdir(spill)
+    con.close()
+    del con
+    gc.collect()
+    assert not os.path.exists(spill)

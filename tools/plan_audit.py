@@ -31,6 +31,7 @@ EXCLUDED_NOTE = (
 
 def audit(sf_dir: str) -> str:
     from tests.test_plan_hygiene import ITERATIVE
+    from tools.profile_query import plan_shape
 
     from bigdata_infra_cs489_spark.plans import registry
     from bigdata_infra_cs489_spark.session import get_spark
@@ -43,17 +44,20 @@ def audit(sf_dir: str) -> str:
         if name in ITERATIVE:
             continue
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        n_hash = len(re.findall(r"Exchange hashpartitioning", plan))
-        n_range = len(re.findall(r"Exchange rangepartitioning", plan))
-        n_rr = len(re.findall(r"Exchange RoundRobinPartitioning", plan))
-        n_bcast_x = len(re.findall(r"BroadcastExchange", plan))
-        n_bhj = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan))
-        n_smj = len(re.findall(r"SortMergeJoin", plan))
-        n_shj = len(re.findall(r"ShuffledHashJoin", plan))
-        n_py = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow", plan))
+        s = plan_shape(plan)
         pushed = "yes" if re.search(r"PushedFilters: \[(?!\])", plan) else ""
         rows.append(
-            (name, n_hash, n_range, n_rr, n_bcast_x, n_bhj, n_smj + n_shj, n_py, pushed)
+            (
+                name,
+                s["hash_exchange"],
+                s["range_exchange"],
+                s["rr_exchange"],
+                s["bcast_exchange"],
+                s["bhj"],
+                s["smj"] + s["shj"],
+                s["py_eval"],
+                pushed,
+            )
         )
     lines = [
         "# PLAN_AUDIT — physical-plan shape of every registered query",
