@@ -29,6 +29,42 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def warm_up(spark, query, sf_dir: str) -> None:
+    """Run ``query`` once (JVM + codegen + parquet footer caches) and one
+    tiny applyInPandas, then drop any cached subtrees.
+
+    The Arrow/Python worker pool needs its own warm-up: the first
+    applyInPandas / applyInPandasWithState of a session pays daemon +
+    worker spin-up (~2-4 s), which otherwise lands on whatever Arrow-stage
+    query runs first after a window rotation and reads as a once-per-round
+    regression (stream_running_counts r7, events_sketch_check r8).
+    """
+    query(spark, sf_dir).collect()
+    spark.createDataFrame([(i,) for i in range(32)], "k bigint").groupBy(
+        "k"
+    ).applyInPandas(lambda pdf: pdf, "k bigint").collect()
+    spark.catalog.clearCache()
+
+
+def sample_seconds(spark, run, samples: int = 2) -> list[float]:
+    """Wall seconds of ``samples`` back-to-back calls ``run(i)``; callers
+    report the min (the steady-state cost of the plan).
+
+    Isolation: operators may cache subtrees reused inside their own plan;
+    dropping them after every sample keeps each measurement independent
+    and stops storage-memory buildup over a full-registry run (leaked
+    cache entries live in the CacheManager for the whole session
+    otherwise).
+    """
+    secs = []
+    for i in range(samples):
+        t0 = time.time()
+        run(i)
+        secs.append(time.time() - t0)
+        spark.catalog.clearCache()
+    return secs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -43,33 +79,13 @@ def main() -> None:
 
     qs = entrymod.queries()
 
-    # warmup: JVM + codegen + parquet footer caches
-    next(iter(qs.values()))(spark, sf_dir).collect()
-
-    # warm the Arrow/Python worker pool too: the first applyInPandas /
-    # applyInPandasWithState of a session pays daemon + worker spin-up
-    # (~2-4 s), which otherwise lands on whatever Arrow-stage query runs
-    # first after a window rotation and reads as a once-per-round
-    # regression (stream_running_counts r7, events_sketch_check r8)
-    spark.createDataFrame([(i,) for i in range(32)], "k bigint").groupBy(
-        "k"
-    ).applyInPandas(lambda pdf: pdf, "k bigint").collect()
+    warm_up(spark, next(iter(qs.values())), sf_dir)
 
     timings: dict[str, float] = {}
     t_all = time.time()
     for name, fn in qs.items():
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).collect()
-            best = min(best, time.time() - t0)
-            # isolation: operators may cache subtrees reused inside their
-            # own plan; dropping them between samples and queries keeps
-            # each measurement independent and stops storage-memory
-            # buildup over the full-registry run (leaked cache entries
-            # live in the CacheManager for the whole session otherwise)
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
+        secs = sample_seconds(spark, lambda _: fn(spark, sf_dir).collect())
+        timings[name] = round(min(secs), 3)
     total = round(sum(timings.values()), 3)
     wall = round(time.time() - t_all, 3)
 

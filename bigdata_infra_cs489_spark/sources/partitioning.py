@@ -11,7 +11,7 @@ correctness (tests pin it via the plan's PartitionFilters instead).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -25,10 +25,6 @@ def write_date_partitioned(
         .partitionBy(date_col)
         .parquet(path)
     )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def scan_is_partition_pruned(df: DataFrame) -> bool:

@@ -21,25 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..operators.linededup import LINE_W, token_window_lines
+from ..sources.tables import SCHEMAS
 from .events_stream import run_to_memory
-
-_DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +32,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     source wants a directory; glob-filter down to the single fixture
     file, the stream_events convention)."""
     return (
-        spark.readStream.schema(_DOCS_SCHEMA)
+        spark.readStream.schema(SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
         .select("doc_id", "text")

@@ -20,74 +20,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
 
 from ..operators.events import SESSION_GAP_SEC, SLIDE_STEP_SEC, SLIDE_WINDOW_SEC, TUMBLE_SEC
+from ..sources.tables import read_events
 
 WATERMARK = "10 minutes"
 
-# events.parquet's ts physical type has flipped between fixture
-# generations (TIMESTAMP(NANOS) -> long under nanosAsLong vs
-# TIMESTAMP(MICROS, isAdjustedToUTC=false) -> TIMESTAMP_NTZ), so the
-# stream schema is picked per-directory by probing the footer through a
-# 0-row batch read — mirroring the dual-path normalization in
-# sources/tables.py::load. Both forms normalize to the session-TZ
-# TIMESTAMP (UTC pin makes the NTZ cast a wall-clock identity).
-def _events_schema(ts_is_long: bool) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", LongType() if ts_is_long else TimestampNTZType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unbounded events source over the fixture directory."""
-    import os
-
-    # same foreign-session UTC pin as sources/tables.py::load — the NTZ
-    # cast and window/date_format rendering below assume it
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        # static conf on some builds — the probe check below fails loudly
-        # if this fixture generation actually needs it (nanos ts)
-        pass
-    # footer probe: schema-only batch read (no data scan) tells us which
-    # physical form this fixture generation uses
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    probe_ts = dict(probe.dtypes).get("ts")
-    if probe_ts not in ("bigint", "timestamp_ntz", "timestamp"):
-        raise RuntimeError(
-            f"events.ts read as unsupported type {probe_ts!r}; this "
-            "session could not apply spark.sql.legacy.parquet."
-            "nanosAsLong=true (static conf). Build the session with "
-            "get_spark(), or set that conf at session construction."
-        )
-    ts_is_long = probe_ts == "bigint"
-    raw = (
-        spark.readStream.schema(_events_schema(ts_is_long))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if ts_is_long:
-        # nanos epoch as int64: integer-divide to micros (ns epochs exceed
-        # double's 2^53 mantissa, so float math would corrupt timestamps)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    """Unbounded events source over the fixture directory (``ts``
+    normalized exactly as the batch ``tables.load``)."""
+    return read_events(spark, sf_dir, stream=True)
 
 
 def tumbling_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

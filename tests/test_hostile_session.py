@@ -1,8 +1,8 @@
 """Foreign-session hardening: the driver runs queries in ITS OWN
 SparkSession — none of session.py's engine confs apply unless the
-engine re-asserts them at load time (sources/tables.py,
-streaming/events_stream.py re-pin the UTC session timezone; everything
-else must be expressed per-query).
+engine re-asserts them at load time (sources/tables.py::read_events,
+behind both the batch and the streaming events reads, re-pins the UTC
+session timezone; everything else must be expressed per-query).
 
 This test builds a deliberately HOSTILE session — same SparkContext,
 fresh SQLConf via newSession(), timezone forced to America/New_York,
@@ -104,5 +104,5 @@ def test_loud_failure_message_names_the_conf():
 
     from bigdata_infra_cs489_spark.sources import tables
 
-    src = inspect.getsource(tables.load)
+    src = inspect.getsource(tables.read_events)
     assert "nanosAsLong" in src and "raise RuntimeError" in src

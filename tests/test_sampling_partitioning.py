@@ -84,7 +84,6 @@ def test_partitioned_sink_prunes(spark, sf_correct, tmp_path):
     from pyspark.sql import functions as F
 
     from bigdata_infra_cs489_spark.sources.partitioning import (
-        read_partitioned,
         scan_is_partition_pruned,
         write_date_partitioned,
     )
@@ -95,7 +94,7 @@ def test_partitioned_sink_prunes(spark, sf_correct, tmp_path):
     write_date_partitioned(ev, path)
 
     day = "2024-01-05"
-    pruned = read_partitioned(spark, path).where(
+    pruned = spark.read.parquet(path).where(
         F.col("event_date") == F.lit(day)
     )
     assert scan_is_partition_pruned(pruned)
@@ -104,7 +103,7 @@ def test_partitioned_sink_prunes(spark, sf_correct, tmp_path):
     assert pruned.count() == expect and expect > 0
 
     # an unfiltered read must NOT claim pruning (guards the helper itself)
-    assert not scan_is_partition_pruned(read_partitioned(spark, path))
+    assert not scan_is_partition_pruned(spark.read.parquet(path))
 
 
 def test_stratified_sample_rates_decrease_with_quality(spark, sf_correct):

@@ -33,9 +33,15 @@ def audit(sf_dir: str) -> str:
     from tests.test_plan_hygiene import ITERATIVE
     from tools.profile_query import plan_shape
 
+    from bigdata_infra_cs489_spark.operators.assets import INDEX_ROOT
     from bigdata_infra_cs489_spark.plans import registry
     from bigdata_infra_cs489_spark.session import get_spark
 
+    # asset keys carry the fixture dir's basename (assets.asset_path)
+    label = f"_{os.path.basename(os.path.normpath(sf_dir))}_"
+    n_assets = sum(
+        label in d for d in (os.listdir(INDEX_ROOT) if os.path.isdir(INDEX_ROOT) else ())
+    )
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -64,6 +70,10 @@ def audit(sf_dir: str) -> str:
         "",
         f"Generated by `python -m tools.plan_audit` at `{sf_dir}`. "
         + EXCLUDED_NOTE,
+        "",
+        f"Asset root: {'warm' if n_assets else 'cold'} ({n_assets} "
+        "standing-asset directories for this fixture dir when the audit "
+        "started; a cold root gets its assets built during the audit).",
         "",
         "Columns: hash/range/rr = data exchanges by partitioning kind; "
         "bx = broadcast exchanges; bj = broadcast joins; sj = shuffle "

@@ -1,11 +1,11 @@
 """Per-query profiler for the optimization rounds.
 
 For each named query (default: all), runs it at $SPARK_GRAFT_SF_DIR with
-the bench methodology (collect, min of N samples, clearCache between
-samples) and captures the formatted physical plan plus a one-line shape
-summary (exchanges, join strategies, Python eval nodes). Plans land in
---plan-dir when given (e.g. /tmp/plans/<name>_before.txt; keep plan
-dumps out of the repo).
+bench.py's warm-up and sampling loop (collect, min of N samples,
+clearCache between samples) and captures the formatted physical plan
+plus a one-line shape summary (exchanges, join strategies, Python eval
+nodes). Plans land in --plan-dir when given (e.g.
+/tmp/plans/<name>_before.txt; keep plan dumps out of the repo).
 
 Usage:
     python -m tools.profile_query [--samples 2] [--plan-dir /tmp/plans]
@@ -51,6 +51,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from bench import sample_seconds, warm_up
     from bigdata_infra_cs489_spark.plans import registry
     from bigdata_infra_cs489_spark.session import get_spark
 
@@ -63,31 +64,24 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    # warmup identical to bench.py
-    next(iter(qs.values()))(spark, args.sf_dir).collect()
-    spark.createDataFrame([(i,) for i in range(32)], "k bigint").groupBy(
-        "k"
-    ).applyInPandas(lambda pdf: pdf, "k bigint").collect()
-    spark.catalog.clearCache()
+    warm_up(spark, next(iter(qs.values())), args.sf_dir)
 
     out = {}
     for name in names:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"profile: {name}")
-        best = float("inf")
-        n_jobs = None
-        for i in range(args.samples):
-            group = f"profile:{name}:{i}"
-            spark.sparkContext.setJobGroup(group, name)
-            t0 = time.time()
+
+        def run(i: int) -> None:
+            spark.sparkContext.setJobGroup(f"profile:{name}:{i}", name)
             fn(spark, args.sf_dir).collect()
-            sec = time.time() - t0
-            if sec < best:
-                best = sec
-                n_jobs = len(
-                    spark.sparkContext.statusTracker().getJobIdsForGroup(group)
-                )
-            spark.catalog.clearCache()
+
+        secs = sample_seconds(spark, run, args.samples)
+        best = min(secs)
+        n_jobs = len(
+            spark.sparkContext.statusTracker().getJobIdsForGroup(
+                f"profile:{name}:{secs.index(best)}"
+            )
+        )
         # split DataFrame-construction + planning time from execution:
         # construction may itself run jobs (asset probes, model collects)
         t0 = time.time()

@@ -142,16 +142,13 @@ def main() -> None:
     from bigdata_infra_cs489_spark.session import get_spark
 
     import __spark_entry__ as entrymod
+    from bench import sample_seconds, warm_up
 
     spark = get_spark(app_name="scaling_study")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    # JVM/codegen/Arrow warmup (the bench.py discipline)
-    qs["wordcount"](spark, SF_DIRS[0][1]).collect()
-    spark.createDataFrame([(i,) for i in range(32)], "k bigint").groupBy(
-        "k"
-    ).applyInPandas(lambda pdf: pdf, "k bigint").collect()
+    warm_up(spark, qs["wordcount"], SF_DIRS[0][1])
 
     results: dict[str, dict[str, float]] = {}
 
@@ -182,13 +179,8 @@ def main() -> None:
                 if os.path.exists(os.path.join(d, table)):
                     eligible += names
         for name in eligible:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                qs[name](spark, d).collect()
-                best = min(best, time.time() - t0)
-                spark.catalog.clearCache()
-            record(name, sf, best)
+            secs = sample_seconds(spark, lambda _: qs[name](spark, d).collect())
+            record(name, sf, min(secs))
 
     if args.family == "join":
         merged: dict[str, dict[str, float]] = {}
