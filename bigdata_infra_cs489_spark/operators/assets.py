@@ -20,6 +20,10 @@ only place that knows them:
    ``_publish_subdir``, which keeps a complete copy already there and
    moves a torn one aside, so concurrent first-touch builds never
    interleave writes or delete a directory under a reader.
+
+Consumers read a published subdir back through ``read`` with the DDL
+each asset declares beside its version constant, so a warm probe also
+launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -69,6 +73,13 @@ def ensure(path: str, subs: tuple[str, ...], build: Callable[[str], None]) -> st
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path
+
+
+def read(spark, path: str, sub: str, ddl: str):
+    """One published subdir ``path/<sub>`` as a DataFrame, read with its
+    declared DDL so no schema-inference job runs (partition columns come
+    last in the DDL and resolve from directory names)."""
+    return spark.read.schema(ddl).parquet(os.path.join(path, sub))
 
 
 def _publish_subdir(src: str, dst: str) -> None:

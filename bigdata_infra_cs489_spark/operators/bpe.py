@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 
 N_MERGES = 8
 
@@ -142,6 +142,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the inline training against the asset so a missed bump still fails CI
 # on the test fixtures.
 BPE_VOCAB_VERSION = 1
+BPE_VOCAB_SCHEMA = "word STRING, cnt BIGINT, syms ARRAY<STRING>"
 
 
 def bpe_vocab_path(sf_dir: str) -> str:
@@ -173,7 +174,7 @@ def standing_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(tmp, "vocab")
         ),
     )
-    return spark.read.parquet(os.path.join(path, "vocab"))
+    return read(spark, path, "vocab", BPE_VOCAB_SCHEMA)
 
 
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

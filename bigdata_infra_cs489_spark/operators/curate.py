@@ -122,6 +122,11 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the inline lineage against the asset so a missed bump still fails CI
 # on the test fixtures.
 CURATE_MANIFEST_VERSION = 1
+CURATE_MANIFEST_SCHEMA = (
+    "doc_id BIGINT, cluster_id BIGINT, cluster_size BIGINT, split STRING,"
+    " n_tokens BIGINT, dup_tokens BIGINT, kept_tokens BIGINT,"
+    " quality_score DOUBLE, cum_kept_tokens BIGINT"
+)
 
 
 def _curate_plan_key() -> str:
@@ -191,7 +196,7 @@ def standing_packed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(tmp, "packed")
         ),
     )
-    return spark.read.parquet(os.path.join(path, "packed"))
+    return assets.read(spark, path, "packed", CURATE_MANIFEST_SCHEMA)
 
 
 def _curate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:

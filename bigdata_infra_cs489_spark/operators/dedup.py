@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.numerics import floor_round
 from ..functions.text import tokenize
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 
 NUM_HASHES = 16
 NUM_BANDS = 4  # 4 rows per band
@@ -693,6 +693,12 @@ def is_new_batch() -> Column:
 # to h8/shingles/tokenize would otherwise leave a stale on-disk index
 # that surfaces as confusing sweep failures instead of a rebuild).
 DEDUP_INDEX_VERSION = 1
+DEDUP_INDEX_SCHEMAS = {
+    "clusters": "old_id BIGINT, cluster_id BIGINT",
+    "bands": "old_id BIGINT, band INT, band_key STRING",
+    "shingles": "old_id BIGINT, sh_o ARRAY<STRING>",
+    "clusters_full": "doc_id BIGINT, cluster_id BIGINT",
+}
 
 
 def dedup_index_path(sf_dir: str) -> str:
@@ -784,7 +790,7 @@ def standing_full_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(tmp, "clusters_full")
         ),
     )
-    return spark.read.parquet(os.path.join(path, "clusters_full"))
+    return read(spark, path, "clusters_full", DEDUP_INDEX_SCHEMAS["clusters_full"])
 
 
 def incremental_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,12 +817,10 @@ def incremental_dedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-contained rebuild (same inputs, same plan from the persisted
     frames; the DuckDB oracle is unchanged).
     """
-    import os
-
     path = ensure_dedup_index(spark, sf_dir)
-    old_clusters = spark.read.parquet(os.path.join(path, "clusters"))
-    ob = spark.read.parquet(os.path.join(path, "bands"))
-    sb = spark.read.parquet(os.path.join(path, "shingles"))
+    old_clusters = read(spark, path, "clusters", DEDUP_INDEX_SCHEMAS["clusters"])
+    ob = read(spark, path, "bands", DEDUP_INDEX_SCHEMAS["bands"])
+    sb = read(spark, path, "shingles", DEDUP_INDEX_SCHEMAS["shingles"])
 
     new_docs = _docs(spark, sf_dir).where(is_new_batch())
 
@@ -1399,11 +1403,9 @@ def dedup_index_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the new-new CC runs on the increment only (batch-sized, short
     diameter). Per-doc signatures are deterministic, so banding just
     the increment yields exactly the full run's new-new pairs."""
-    import os
-
     path = ensure_dedup_index(spark, sf_dir)
     old = (
-        spark.read.parquet(os.path.join(path, "clusters"))
+        read(spark, path, "clusters", DEDUP_INDEX_SCHEMAS["clusters"])
         .select(
             F.col("old_id").alias("doc_id"),
             "cluster_id",

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h8
 from ..functions.text import exploded_tokens
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 
 DSIR_BUCKETS = 1024  # hashed-ngram feature-space size (fixed at any scale)
 DSIR_TARGET_MOD = 13  # doc_id % MOD == 0 plays the high-quality target set
@@ -209,6 +209,9 @@ def dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-derives the inline lineage against the asset so a missed bump
 # still fails CI on the test fixtures.
 DSIR_SCORES_VERSION = 1
+DSIR_SCORES_SCHEMA = (
+    "doc_id BIGINT, n_tokens BIGINT, score_micro BIGINT, avg_logratio DOUBLE"
+)
 
 
 def dsir_scores_path(sf_dir: str) -> str:
@@ -244,7 +247,7 @@ def standing_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(tmp, "scores")
         ),
     )
-    return spark.read.parquet(os.path.join(path, "scores"))
+    return read(spark, path, "scores", DSIR_SCORES_SCHEMA)
 
 
 def dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

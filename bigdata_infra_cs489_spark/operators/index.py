@@ -171,6 +171,10 @@ def bm25_retrieval(
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+# The bucketed postings layout: ``bucket`` is the partition column.
+TERM_INDEX_SCHEMA = "term STRING, doc_id BIGINT, tf BIGINT, bucket INT"
+
+
 def write_bucketed_index(df: DataFrame, path: str, n_buckets: int = N_BUCKETS) -> None:
     """Persist postings hash-bucketed by term for pruned point lookup —
     the Parquet analogue of the reference's MapFile partitions
@@ -190,7 +194,7 @@ def lookup_term(
     """Point lookup against a bucketed index: the bucket predicate is
     foldable, so the scan prunes to 1/n_buckets of the files before the
     term filter runs (BooleanRetrievalCompressed.java:106-128 seek)."""
-    idx = spark.read.parquet(path)
+    idx = spark.read.schema(TERM_INDEX_SCHEMA).parquet(path)
     return idx.where(
         (F.col("bucket") == F.pmod(F.hash(F.lit(term)), F.lit(n_buckets)))
         & (F.col("term") == term)
@@ -329,6 +333,12 @@ def doc_keywords(
 LOOKUP_TERMS = ("fast", "table", "window")
 
 
+def term_index_path(sf_dir: str) -> str:
+    """Standing bucketed-postings location for one data generation of the
+    documents table, keyed on the bucket count."""
+    return asset_path(sf_dir, "documents", "termidx", f"b{N_BUCKETS}")
+
+
 def q_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered build-once/probe-many form of the MapFile/HBase point
     lookup family (SURVEY §2.1 S5-S7): postings persisted hash-bucketed
@@ -342,7 +352,7 @@ def q_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = ensure(
-        asset_path(sf_dir, "documents", "termidx", f"b{N_BUCKETS}"),
+        term_index_path(sf_dir),
         ("postings",),
         lambda tmp: write_bucketed_index(
             postings(spark, sf_dir), os.path.join(tmp, "postings")

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.numerics import floor_round
 
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -544,6 +544,7 @@ def kmeans_centroids(
 # re-derives the inline training against the asset so a missed bump
 # still fails CI on the test fixtures.
 KMEANS_MODEL_VERSION = 1
+KMEANS_MODEL_SCHEMA = "centroid_id INT, cvec ARRAY<DOUBLE>"
 
 
 def kmeans_model_path(
@@ -584,7 +585,7 @@ def standing_kmeans_centroids(
             spark, sf_dir, n_centroids, iterations
         ).write.parquet(os.path.join(tmp, "centroids")),
     )
-    return spark.read.parquet(os.path.join(path, "centroids"))
+    return read(spark, path, "centroids", KMEANS_MODEL_SCHEMA)
 
 
 N_HYPERPLANES = 16

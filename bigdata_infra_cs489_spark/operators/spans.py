@@ -40,7 +40,7 @@ from ..functions.numerics import floor_round
 
 from ..functions.text import tokenize
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 from .dedup import NEW_BATCH_MOD, is_new_batch
 
 SPAN_K = 5  # window width in tokens; minimum detectable duplicated span
@@ -339,6 +339,7 @@ def incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-derives the inline distinct against the asset so a missed bump
 # still fails CI on the test fixtures.
 SPAN_INDEX_VERSION = 1
+SPAN_INDEX_SCHEMA = "gram STRING"
 
 
 def span_index_path(sf_dir: str) -> str:
@@ -377,7 +378,7 @@ def standing_old_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .write.parquet(os.path.join(tmp, "grams_old")),
     )
-    return spark.read.parquet(os.path.join(path, "grams_old"))
+    return read(spark, path, "grams_old", SPAN_INDEX_SCHEMA)
 
 
 def _incremental_hits(
@@ -835,6 +836,10 @@ def repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test_standing_contexts_match_inline re-derives the inline per-level
 # distinct against the asset so a missed bump still fails CI.
 SPECTRUM_INDEX_VERSION = 1
+# `width` is the partition column and resolves from directory names; the
+# declared schema also types the empty frame of an all-new-batch corpus,
+# whose partitionBy write leaves no data file to infer from.
+SPECTRUM_INDEX_SCHEMA = "id STRING, width BIGINT"
 
 
 def spectrum_index_path(sf_dir: str) -> str:
@@ -878,14 +883,7 @@ def standing_old_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.partitionBy("width").parquet(os.path.join(tmp, "contexts_old"))
 
     path = ensure(spectrum_index_path(sf_dir), ("contexts_old",), build)
-    # explicit schema: an all-new-batch corpus yields zero rows at every
-    # width, and the partitionBy write then leaves no data file to infer
-    # from — schema'd read returns the well-typed empty frame instead of
-    # throwing (partition column `width` resolves from directory names
-    # when partitions exist)
-    return spark.read.schema("id string, width bigint").parquet(
-        os.path.join(path, "contexts_old")
-    )
+    return read(spark, path, "contexts_old", SPECTRUM_INDEX_SCHEMA)
 
 
 def incremental_repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from ..functions.numerics import floor_round
 
 from ..functions.text import tokenize
 from ..sources.tables import load
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 
 MIN_COUNT = 10  # reference threshold (PairsPMI.java:107, CooccurrencePairs.java:126)
 PMI_TOKEN_CAP = 100  # PairsPMI.java:56 (first 100 non-empty cleaned tokens)
@@ -338,6 +338,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the inline lineage against the asset so a missed bump still fails CI
 # on the test fixtures.
 LM_SCORES_VERSION = 1
+LM_SCORES_SCHEMA = "doc_id BIGINT, n_bigrams BIGINT, avg_nll DOUBLE"
 
 
 def lm_scores_path(sf_dir: str) -> str:
@@ -373,7 +374,7 @@ def standing_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(tmp, "scores")
         ),
     )
-    return spark.read.parquet(os.path.join(path, "scores"))
+    return read(spark, path, "scores", LM_SCORES_SCHEMA)
 
 
 TOP_TERMS_K = 10

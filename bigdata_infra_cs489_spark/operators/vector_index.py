@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .assets import asset_path, ensure
+from .assets import asset_path, ensure, read
 from .similarity import (
     LSH_BAND_BITS,
     LSH_N_BANDS,
@@ -55,6 +55,12 @@ from .similarity import (
     lsh_bands,
     lsh_codes,
 )
+
+
+VECTOR_INDEX_SCHEMAS = {
+    "ivf": "vec_id BIGINT, embedding ARRAY<DOUBLE>, centroid_id INT",
+    "lsh": "vec_id BIGINT, embedding ARRAY<DOUBLE>, band INT, band_val INT",
+}
 
 
 def vector_index_path(sf_dir: str) -> str:
@@ -185,7 +191,7 @@ def ivf_topk_indexed(
     probed = (
         _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
     )
-    idx = spark.read.parquet(os.path.join(path, "ivf")).where(
+    idx = read(spark, path, "ivf", VECTOR_INDEX_SCHEMAS["ivf"]).where(
         F.col("centroid_id").isin(probed)
     )
     cand = idx.select(
@@ -217,7 +223,7 @@ def lsh_topk_indexed(
         qval = (qcode >> (b * LSH_BAND_BITS)) & mask
         c = (F.col("band") == b) & (F.col("band_val") == qval)
         cond = c if cond is None else (cond | c)
-    idx = spark.read.parquet(os.path.join(path, "lsh")).where(cond)
+    idx = read(spark, path, "lsh", VECTOR_INDEX_SCHEMAS["lsh"]).where(cond)
     cand = idx.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).dropDuplicates(["vec_id"])
@@ -257,7 +263,7 @@ def ivfpq_topk_indexed(
     cents = [(i, v) for i, v in rows if i < N_CENTROIDS]
     subc = _subc_from_rows(rows, PQ_M, PQ_K)
     probed = _rank_centroids_local(cents, qvec, nprobe)
-    idx = spark.read.parquet(os.path.join(path, "ivf")).where(
+    idx = read(spark, path, "ivf", VECTOR_INDEX_SCHEMAS["ivf"]).where(
         F.col("centroid_id").isin(probed)
     )
     return (

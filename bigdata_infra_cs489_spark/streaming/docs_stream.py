@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.linededup import LINE_W, token_window_lines
 from ..sources.tables import SCHEMAS
-from .events_stream import run_to_memory
+from .events_stream import _run_contract
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,7 +118,6 @@ def q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion, return the complete table."""
     from ..operators.dedup import is_new_batch
     from ..sources.tables import load
-    from .events_stream import STREAM_STATE_PARTITIONS
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     standing = (
@@ -127,17 +126,12 @@ def q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("line")
         .distinct()
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        run_to_memory(
-            line_dedup_stream(spark, sf_dir, standing),
-            "stream_line_dedup_tbl",
-            "complete",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table("stream_line_dedup_tbl")
+    return _run_contract(
+        spark,
+        lambda: line_dedup_stream(spark, sf_dir, standing),
+        "stream_line_dedup_tbl",
+        "complete",
+    )
 
 
 def q_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,7 +151,6 @@ def q_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import is_new_batch
     from ..operators.dsir import DSIR_BUCKETS, drift_card_from_counts
     from ..sources.tables import load
-    from .events_stream import STREAM_STATE_PARTITIONS, run_to_memory
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     is_new = is_new_batch()
@@ -177,14 +170,6 @@ def q_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        run_to_memory(buckets, "stream_token_drift_tbl", "complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    new = {
-        int(r["bucket"]): int(r["n"])
-        for r in spark.table("stream_token_drift_tbl").collect()
-    }
+    drift = _run_contract(spark, lambda: buckets, "stream_token_drift_tbl", "complete")
+    new = {int(r["bucket"]): int(r["n"]) for r in drift.collect()}
     return drift_card_from_counts(spark, old, new)

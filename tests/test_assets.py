@@ -9,6 +9,7 @@ standing entry point that rides it.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import sys
@@ -17,8 +18,19 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
-from bigdata_infra_cs489_spark.operators import dsir
+from bigdata_infra_cs489_spark.operators import (
+    bpe,
+    curate,
+    dedup,
+    dsir,
+    index,
+    similarity,
+    spans,
+    text_analytics,
+    vector_index,
+)
 from bigdata_infra_cs489_spark.operators.assets import ensure
 from bigdata_infra_cs489_spark.operators.bpe import standing_bpe_vocab
 from bigdata_infra_cs489_spark.operators.curate import standing_packed_corpus
@@ -136,3 +148,69 @@ def test_warm_hit_writes_nothing(spark, sf_smoke, monkeypatch, name):
     monkeypatch.setattr(shutil, "rmtree", forbidden)
     warm = sorted(map(repr, fn(spark, sf_smoke).collect()))
     assert warm == cold
+
+
+def _kmeans_path(sf_dir: str) -> str:
+    return similarity.kmeans_model_path(
+        sf_dir, similarity.N_CENTROIDS, similarity.KMEANS_ITERATIONS
+    )
+
+
+_DEDUP = dedup.DEDUP_INDEX_SCHEMAS
+
+# Every standing entry point's asset key and declared {sub: DDL}.
+DECLARED = {
+    "dedup_index": (
+        dedup.dedup_index_path,
+        {sub: _DEDUP[sub] for sub in ("clusters", "bands", "shingles")},
+    ),
+    "clusters_full": (
+        dedup.dedup_index_path,
+        {"clusters_full": _DEDUP["clusters_full"]},
+    ),
+    "vector_index": (vector_index.vector_index_path, vector_index.VECTOR_INDEX_SCHEMAS),
+    "kmeans_centroids": (_kmeans_path, {"centroids": similarity.KMEANS_MODEL_SCHEMA}),
+    "term_index": (index.term_index_path, {"postings": index.TERM_INDEX_SCHEMA}),
+    "packed_corpus": (
+        curate.curate_manifest_path,
+        {"packed": curate.CURATE_MANIFEST_SCHEMA},
+    ),
+    "bpe_vocab": (bpe.bpe_vocab_path, {"vocab": bpe.BPE_VOCAB_SCHEMA}),
+    "dsir_scores": (dsir.dsir_scores_path, {"scores": dsir.DSIR_SCORES_SCHEMA}),
+    "old_grams": (spans.span_index_path, {"grams_old": spans.SPAN_INDEX_SCHEMA}),
+    "old_contexts": (
+        spans.spectrum_index_path,
+        {"contexts_old": spans.SPECTRUM_INDEX_SCHEMA},
+    ),
+    "lm_scores": (
+        text_analytics.lm_scores_path,
+        {"scores": text_analytics.LM_SCORES_SCHEMA},
+    ),
+}
+
+
+# Partition columns take their type from directory names. ``width`` is
+# declared BIGINT, the type its builder writes, where inference gives INT.
+WIDENED = {("contexts_old", "width"): LongType()}
+
+
+@pytest.mark.parametrize("name", sorted(STANDING))
+def test_declared_schema_matches_footer(spark, sf_smoke, name):
+    """Each published subdir's declared DDL is the schema Spark infers
+    for it: the footer's columns and types, then the partition columns
+    with the types their directory names infer to (WIDENED aside). A
+    declared column the files lack would read as NULLs."""
+    STANDING[name](spark, sf_smoke)
+    key, schemas = DECLARED[name]
+    for sub, ddl in schemas.items():
+        root = os.path.join(key(sf_smoke), sub)
+        parts = glob.glob(os.path.join(root, "**", "part-*.parquet"), recursive=True)
+        assert parts, f"{name}/{sub}: no data file to check the declared schema against"
+        inferred = spark.read.parquet(root).schema
+        expected = StructType(
+            [
+                StructField(f.name, WIDENED.get((sub, f.name), f.dataType), f.nullable)
+                for f in inferred
+            ]
+        )
+        assert StructType.fromDDL(ddl) == expected, (name, sub)

@@ -64,9 +64,10 @@ def test_nanos_events_read_like_micros(spark, sf_smoke, tmp_path):
 
 
 def test_construction_launches_no_schema_jobs(spark, sf_smoke):
-    """With warm assets, building the reference queries runs no Spark job
-    (every table read carries its declared schema); the events family
-    pays only its one ts footer probe."""
+    """With warm assets, building the reference queries and the asset
+    consumers runs no Spark job (every table and asset read carries its
+    declared schema); the events family pays only its one ts footer
+    probe."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -80,6 +81,8 @@ def test_construction_launches_no_schema_jobs(spark, sf_smoke):
         "q7_top_revenue_orders": 0,
         "wordcount": 0,
         "spam_train": 0,
+        "bpe_token_counts": 0,
+        "dsir_topk": 0,
         "events_tumbling_counts": 1,
     }
     sc = spark.sparkContext

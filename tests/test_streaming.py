@@ -167,6 +167,64 @@ def test_stream_queries_match_oracle(spark, sf_correct, name):
     assert_matches_oracle(q(spark, sf_correct), sql, sf_correct)
 
 
+@_pytest.mark.parametrize("cap", [2, 64])
+def test_contract_runs_one_wave_of_state_stores(spark, sf_smoke, monkeypatch, cap):
+    """Every micro-batch of a contract backfill (an events and a docs
+    contract) runs min(STREAM_STATE_PARTITIONS, defaultParallelism)
+    state-store instances, and the session's batch shuffle-partition
+    count comes back afterwards. The two caps take each side of the
+    min: below the core count, and above it."""
+    from bigdata_infra_cs489_spark.streaming import events_stream
+    from bigdata_infra_cs489_spark.streaming.docs_stream import q_stream_line_dedup
+
+    runs = []
+    run_to_memory = events_stream.run_to_memory
+
+    def recording(sdf, name, output_mode="complete"):
+        runs.append(run_to_memory(sdf, name, output_mode))
+        return runs[-1]
+
+    monkeypatch.setattr(events_stream, "run_to_memory", recording)
+    monkeypatch.setattr(events_stream, "STREAM_STATE_PARTITIONS", cap)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    events_stream.q_stream_dedup(spark, sf_smoke).collect()
+    q_stream_line_dedup(spark, sf_smoke).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    n = min(cap, spark.sparkContext.defaultParallelism)
+    assert len(runs) == 2
+    for q in runs:
+        assert q.recentProgress
+        for p in q.recentProgress:
+            assert p.stateOperators, (q.name, p.batchId)
+            for op in p.stateOperators:
+                assert (op.numShufflePartitions, op.numStateStoreInstances) == (
+                    n,
+                    n,
+                ), (q.name, p.batchId, op.operatorName)
+
+
+def test_contract_restores_shuffle_partitions_when_build_raises(spark):
+    from bigdata_infra_cs489_spark.streaming.events_stream import (
+        STREAM_STATE_PARTITIONS,
+        _run_contract,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+
+    def build():
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("injected build failure")
+
+    with _pytest.raises(RuntimeError, match="injected build failure"):
+        _run_contract(spark, build, "t_contract_raises", "append")
+    assert seen == [
+        str(min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism))
+    ]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
 def test_stream_partitioned_sink_layout_and_counts(spark, sf_smoke):
     """The streaming file sink lands Hive-partitioned parquet whose
     read-back equals the batch table."""
