@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import ppm
 from ..functions.text import tokenize
 from ..sources.tables import load
 from .assets import asset_path, ensure, read
@@ -247,14 +248,8 @@ def bpe_encode_stats(
         )
         .select(
             "*",
-            F.expr(
-                "CAST((n_subwords * 1000000L + n_words div 2)"
-                " div greatest(n_words, 1L) AS BIGINT)"
-            ).alias("fertility_micro"),
-            F.expr(
-                "CAST((n_chars * 1000000L + n_subwords div 2)"
-                " div greatest(n_subwords, 1L) AS BIGINT)"
-            ).alias("chars_per_subword_micro"),
+            ppm("n_subwords", "n_words").alias("fertility_micro"),
+            ppm("n_chars", "n_subwords").alias("chars_per_subword_micro"),
         )
     )
 
@@ -314,16 +309,10 @@ def bpe_vocab_coverage(
             F.lit(cap).cast("int").alias("vocab_cap"),
             "total_subword_occ",
             "covered_subword_occ",
-            F.expr(
-                "CAST((covered_subword_occ * 1000000L + total_subword_occ div 2)"
-                " div greatest(total_subword_occ, 1L) AS BIGINT)"
-            ).alias("coverage_ppm"),
+            ppm("covered_subword_occ", "total_subword_occ").alias("coverage_ppm"),
             "total_word_occ",
             "fully_covered_word_occ",
-            F.expr(
-                "CAST((fully_covered_word_occ * 1000000L + total_word_occ div 2)"
-                " div greatest(total_word_occ, 1L) AS BIGINT)"
-            ).alias("word_coverage_ppm"),
+            ppm("fully_covered_word_occ", "total_word_occ").alias("word_coverage_ppm"),
         )
     )
 
@@ -360,17 +349,8 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "*",
-            F.expr(
-                "CAST((n_subwords * 1000000L + n_words div 2)"
-                " div greatest(n_words, 1L) AS BIGINT)"
-            ).alias("fertility_micro"),
-            F.expr(
-                "CAST((n_chars * 1000000L + n_subwords div 2)"
-                " div greatest(n_subwords, 1L) AS BIGINT)"
-            ).alias("chars_per_subword_micro"),
-            F.expr(
-                "CAST((n_subwords * 1000000L + n_docs div 2)"
-                " div greatest(n_docs, 1L) AS BIGINT)"
-            ).alias("subwords_per_doc_micro"),
+            ppm("n_subwords", "n_words").alias("fertility_micro"),
+            ppm("n_chars", "n_subwords").alias("chars_per_subword_micro"),
+            ppm("n_subwords", "n_docs").alias("subwords_per_doc_micro"),
         )
     )

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numerics import floor_round
+from ..functions.numerics import floor_round, ppm
 from ..functions.text import tokenize
 from ..sources.tables import load
 from .assets import asset_path, ensure, read
@@ -1241,14 +1241,8 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_distinct_chunks",
         "dup_occurrences",
         "removed_occurrences",
-        F.expr(
-            "CAST((removed_occurrences * 1000000L + n_chunks div 2)"
-            " div greatest(n_chunks, 1L) AS BIGINT)"
-        ).alias("dup_chunk_ppm"),
-        F.expr(
-            "CAST((sum_len * 1000000L + n_chunks div 2)"
-            " div greatest(n_chunks, 1L) AS BIGINT)"
-        ).alias("mean_chunk_len_micro"),
+        ppm("removed_occurrences", "n_chunks").alias("dup_chunk_ppm"),
+        ppm("sum_len", "n_chunks").alias("mean_chunk_len_micro"),
     )
 
 
@@ -1337,10 +1331,7 @@ def near_dup_method_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "*",
-            F.expr(
-                "CAST((n_both * 1000000L + (n_a + n_b - n_both) div 2)"
-                " div greatest(n_a + n_b - n_both, 1L) AS BIGINT)"
-            ).alias("pair_jaccard_ppm"),
+            ppm("n_both", "n_a + n_b - n_both").alias("pair_jaccard_ppm"),
         )
     )
 
@@ -1528,9 +1519,6 @@ def lsh_banding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t_pct",
             "n_true_pairs",
             "n_caught",
-            F.expr(
-                "CAST((n_caught * 1000000L + n_true_pairs div 2)"
-                " div greatest(n_true_pairs, 1L) AS BIGINT)"
-            ).alias("recall_ppm"),
+            ppm("n_caught", "n_true_pairs").alias("recall_ppm"),
         )
     )

@@ -28,9 +28,10 @@ the pinned slices, and one narrow re-exchange on the partition id (the
 checkpoint boundary hides the range partitioning from Catalyst, so the
 window re-clusters by pid — same rows, same slices, narrow columns); no
 task ever materializes more than its slice. The intermediate is pinned
-with an eager ``localCheckpoint`` so the offsets leg and the main leg see
+with a lazy ``localCheckpoint`` so the offsets leg and the main leg see
 the same (sampled, hence job-dependent) range partitioning and the same
-``spark_partition_id`` values.
+``spark_partition_id`` values. Lazy is not free under AQE: building the
+pin runs the range shuffle at once (see ``_range_prefix``).
 """
 
 from __future__ import annotations
@@ -63,15 +64,13 @@ def _range_prefix(
         # some managed runtimes set the conf to a non-numeric value
         # (e.g. "auto"); fall back to the input's own parallelism
         npart = max(df.rdd.getNumPartitions(), 1)
-    # the pin is LAZY since r16: localCheckpoint(eager=False) converts
-    # the plan to one shared RDD immediately, so the offsets leg and the
-    # main leg reference the SAME materialization (spark_partition_id
-    # stays consistent — the RDD computes once, on first use, and is
-    # persisted), while the separate up-front materialization job the
-    # eager form paid folds into the consumer's own action. (r15 measured
-    # lazy-vs-eager as a wash when a driver collect still forced
-    # materialization; with the offsets in-plan the collect is gone and
-    # the saved job is real.)
+    # localCheckpoint(eager=False) converts the plan to one shared RDD
+    # immediately, so the offsets leg and the main leg reference the SAME
+    # materialization (spark_partition_id stays consistent). The pin is
+    # lazy only in its final stage: with AQE on, building the RDD runs
+    # every shuffle map stage below it, so the range partitioner's sample
+    # job and the range shuffle launch here, when the caller constructs
+    # its frame (2 jobs per call on a 200k-row input; 1 with AQE off).
     part = (
         df.repartitionByRange(npart, *order)
         .withColumn(_PID, F.spark_partition_id())

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numerics import floor_round
+from ..functions.numerics import floor_round, ppm
 
 from ..functions.text import TOKEN_SPLIT_RE
 from ..sources.tables import load
@@ -169,15 +169,7 @@ def gopher_rate_report(m: DataFrame) -> DataFrame:
     return tall.select(
         F.col("r.rule").alias("rule"),
         F.col("r.n_fail").alias("n_fail"),
-        # exact integer ppm via (f*1e6 + d div 2) div d: rounded division
-        # with NO float step anywhere (a double division + floor could
-        # flip at a representation boundary), so the twin can never
-        # diverge
-        F.expr(
-            "(r.n_fail * 1000000L + r.n_docs div 2) div greatest(r.n_docs, 1L)"
-        )
-        .cast("bigint")
-        .alias("fail_ppm"),
+        ppm("r.n_fail", "r.n_docs").alias("fail_ppm"),
     )
 
 
@@ -233,8 +225,5 @@ def quality_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality_ok",
         "gopher_ok",
         "n_docs",
-        F.expr(
-            "CAST((n_docs * 1000000L + row_total div 2)"
-            " div greatest(row_total, 1L) AS BIGINT)"
-        ).alias("bucket_ppm"),
+        ppm("n_docs", "row_total").alias("bucket_ppm"),
     )

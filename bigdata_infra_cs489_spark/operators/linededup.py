@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import ppm
 from ..functions.text import TOKEN_SPLIT_RE
 from ..sources.tables import load
 
@@ -125,10 +126,7 @@ def dup_line_report(lines: DataFrame) -> DataFrame:
         .alias("removed_occurrences"),
     ).select(
         "*",
-        F.expr(
-            "CAST((removed_occurrences * 1000000L + n_lines div 2)"
-            " div greatest(n_lines, 1L) AS BIGINT)"
-        ).alias("dup_line_ppm"),
+        ppm("removed_occurrences", "n_lines").alias("dup_line_ppm"),
     )
 
 

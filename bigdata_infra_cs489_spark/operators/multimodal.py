@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import ppm
 from ..sources.tables import load
 
 MEDIA_TYPES = ("image", "audio", "video")
@@ -914,8 +915,5 @@ def media_strict_coverage_core(m: DataFrame) -> DataFrame:
         "media_type",
         "status",
         "n_media",
-        F.expr(
-            "CAST((n_media * 1000000L + n_total div 2)"
-            " div greatest(n_total, 1L) AS BIGINT)"
-        ).alias("share_ppm"),
+        ppm("n_media", "n_total").alias("share_ppm"),
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import ppm
 from ..functions.text import tokenize
 from ..sources.tables import load
 from .ml import _feature_id, _score, _sgd_fold
@@ -129,8 +130,5 @@ def quality_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum(agree), F.lit(0)).cast("bigint").alias("n_agree"),
     ).select(
         "*",
-        F.expr(
-            "CAST((n_agree * 1000000L + n_docs div 2) div greatest(n_docs, 1L)"
-            " AS BIGINT)"
-        ).alias("accuracy_ppm"),
+        ppm("n_agree", "n_docs").alias("accuracy_ppm"),
     )

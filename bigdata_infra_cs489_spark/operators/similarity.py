@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numerics import floor_round
+from ..functions.numerics import floor_round, ppm
 
 from ..sources.tables import load
 from .assets import asset_path, ensure, read
@@ -1009,10 +1009,7 @@ def embedding_dedup_recall(
         "n_exact_pairs",
         "n_scoped_pairs",
         "missed_pairs",
-        F.expr(
-            "CAST((n_scoped_pairs * 1000000 + n_exact_pairs div 2)"
-            " div greatest(n_exact_pairs, 1) AS BIGINT)"
-        ).alias("recall_ppm"),
+        ppm("n_scoped_pairs", "n_exact_pairs").alias("recall_ppm"),
         "max_missed_cosine",
     )
 

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numerics import floor_round
+from ..functions.numerics import floor_round, ppm
 
 from ..functions.text import tokenize
 from ..sources.tables import load
@@ -556,10 +556,7 @@ def contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
         F.coalesce("contam_tokens", F.lit(0)).cast("bigint").alias("contam_tokens"),
-        F.expr(
-            "CAST((coalesce(contam_tokens, 0L) * 1000000L + n_tokens div 2)"
-            " div greatest(n_tokens, 1L) AS BIGINT)"
-        ).alias("contam_ppm"),
+        ppm("coalesce(contam_tokens, 0L)", "n_tokens").alias("contam_ppm"),
     )
 
 
@@ -697,10 +694,7 @@ def contamination_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("near_docs", F.lit(0)).cast("bigint").alias("near_docs"),
             F.coalesce("span_docs", F.lit(0)).cast("bigint").alias("span_docs"),
             F.coalesce("span_tokens", F.lit(0)).cast("bigint").alias("span_tokens"),
-            F.expr(
-                "CAST((coalesce(span_tokens, 0L) * 1000000L + tot div 2)"
-                " div greatest(tot, 1L) AS BIGINT)"
-            ).alias("span_token_ppm"),
+            ppm("coalesce(span_tokens, 0L)", "tot").alias("span_token_ppm"),
         )
     )
 
@@ -732,7 +726,11 @@ def _doubling_levels(cur: DataFrame):
     a cluster deployment bucket-partitions by doc_id and every doubling
     join is shuffle-free), never a global sort, and windows never cross
     document boundaries. Per-level frames pin with a lazy
-    localCheckpoint so per-level consumers never re-derive the chain."""
+    localCheckpoint so per-level consumers never re-derive the chain;
+    under AQE each pin runs the join shuffles below it as it is built,
+    so a consumer's construction launches the chain's map stages (all
+    22 construction jobs of incremental_repeat_spectrum come from its 9
+    pins)."""
     width = 1
     for lvl in range(REPEAT_LEVELS):
         cur = cur.localCheckpoint(eager=False)
@@ -820,10 +818,7 @@ def repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "*",
-            F.expr(
-                "CAST((repeated_positions * 1000000L + total_positions div 2)"
-                " div greatest(total_positions, 1L) AS BIGINT)"
-            ).alias("repeated_ppm"),
+            ppm("repeated_positions", "total_positions").alias("repeated_ppm"),
         )
         .orderBy("width")
     )
@@ -957,10 +952,7 @@ def incremental_repeat_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "*",
-            F.expr(
-                "CAST((dup_old_positions * 1000000L + new_positions div 2)"
-                " div greatest(new_positions, 1L) AS BIGINT)"
-            ).alias("dup_old_ppm"),
+            ppm("dup_old_positions", "new_positions").alias("dup_old_ppm"),
         )
         .orderBy("width")
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import ppm
 from ..sources.tables import load
 
 PROFILE_TABLE = "lineitem"
@@ -482,8 +483,5 @@ def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cohorts",
         "n_small_cohorts",
         "n_users_at_risk",
-        F.expr(
-            "CAST((n_users_at_risk * 1000000L + _n div 2) div greatest(_n, 1L)"
-            " AS BIGINT)"
-        ).alias("risk_ppm"),
+        ppm("n_users_at_risk", "_n").alias("risk_ppm"),
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numerics import floor_round
+from ..functions.numerics import floor_round, ppm
 from ..functions.text import tokenize
 from ..sources.tables import load
 
@@ -528,8 +528,5 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_true",
         "lang_pred",
         "n_docs",
-        F.expr(
-            "CAST((n_docs * 1000000L + row_total div 2)"
-            " div greatest(row_total, 1L) AS BIGINT)"
-        ).alias("row_ppm"),
+        ppm("n_docs", "row_total").alias("row_ppm"),
     )

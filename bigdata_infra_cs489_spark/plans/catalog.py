@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.numerics import duck_floor_round, duck_ppm
 from ..operators import relational as R
 from ..operators import text_analytics as T
 from .registry import _ORACLES, register
@@ -21,18 +22,6 @@ DUCK_TOKS = (
     "string_split_regex(lower(text), '[ \\t\\n\\x0B\\f\\r]+'), "
     "t -> regexp_replace(t, '(^[^a-z]+|[^a-z]+$)', '', 'g')), t -> len(t) > 0)"
 )
-
-
-def _fr(expr: str, scale: int = 6) -> str:
-    """Tie-stable fixed-point finish, DuckDB side — the twin of
-    functions/numerics.py::floor_round. Used instead of round(x, N)
-    wherever the argument is an EXACT integer (or half-integer) ratio:
-    those land exactly on .5-at-scale boundaries, where Spark and DuckDB
-    round() break decimal ties differently (7 real tie docs in sf1 DSIR).
-    floor(x*10^N + 0.5)/10^N is the same IEEE-754 op sequence on both
-    engines — bit-identical by construction, half-UP at exact ties."""
-    s = 10**scale
-    return f"floor(({expr}) * {s} + 0.5) / {s}"
 
 
 def _registered_oracle(name: str) -> str:
@@ -122,7 +111,7 @@ register(
            round(sum(l_extendedprice), 2) AS sum_base_price,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
            round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           floor((avg(l_quantity)) * 10000 + 0.5) / 10000 AS avg_qty,
+           {duck_floor_round("avg(l_quantity)", 4)} AS avg_qty,
            round(avg(l_extendedprice), 4) AS avg_price,
            round(avg(l_discount), 4) AS avg_disc,
            count(*) AS count_order
@@ -189,7 +178,7 @@ register(
     ),
     counts AS (SELECT lt, rt, count(*) AS cnt FROM bg GROUP BY lt, rt)
     SELECT lt AS left_token, rt AS right_token,
-           floor((cnt / sum(cnt) OVER (PARTITION BY lt)) * 1000000 + 0.5) / 1000000 AS rel_freq
+           {duck_floor_round("cnt / sum(cnt) OVER (PARTITION BY lt)")} AS rel_freq
     FROM counts
     UNION ALL
     SELECT lt, '*', round(CAST(sum(cnt) AS DOUBLE), 6)
@@ -946,7 +935,7 @@ register(
     lambda spark, sf: M.spam_model_auc(spark, sf),
     _sgd_with([("m", "TRUE", "d.docid")])
     + _SGD_APPLY_TAIL
-    + """
+    + f"""
     , auc_g AS (
       SELECT score, count(*) AS cnt,
              sum(CASE WHEN label = 'spam' THEN 1 ELSE 0 END) AS pos
@@ -962,12 +951,17 @@ register(
       FROM auc_r
     )
     SELECT n_pos, n_neg,
-           floor((CASE WHEN n_pos * n_neg > 0
-                 THEN (prs - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)
-                 END) * 1000000 + 0.5) / 1000000 AS auc,
-           floor(((1 - CASE WHEN n_pos * n_neg > 0
-                 THEN (prs - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)
-                 END) * 100) * 10000 + 0.5) / 10000 AS roca_pct
+           {duck_floor_round(
+               "CASE WHEN n_pos * n_neg > 0"
+               " THEN (prs - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)"
+               " END"
+           )} AS auc,
+           {duck_floor_round(
+               "(1 - CASE WHEN n_pos * n_neg > 0"
+               " THEN (prs - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)"
+               " END) * 100",
+               4,
+           )} AS roca_pct
     FROM auc_a
     """,
 )
@@ -1032,6 +1026,9 @@ register(
 # LSH candidate pair; the near-dup closure fragments below cluster it.
 # tools/sf1_pair_oracle.py slices this text verbatim, so every oracle that
 # uses it must contain it unchanged.
+_SET_JACCARD_SQL = duck_floor_round(
+    "len(list_intersect(sa.sh, sb.sh)) / len(list_distinct(list_concat(sa.sh, sb.sh)))"
+)
 DUCK_MINHASH_PAIR_CTES = f"""{DUCK_SHINGLES},
     sigs AS (
         SELECT doc_id, {DUCK_MINHASH_SIG} AS sig
@@ -1049,8 +1046,7 @@ DUCK_MINHASH_PAIR_CTES = f"""{DUCK_SHINGLES},
         WHERE a.doc_id < b.doc_id),
     pairs AS (
         SELECT doc_a, doc_b,
-               floor((len(list_intersect(sa.sh, sb.sh)) /
-                     len(list_distinct(list_concat(sa.sh, sb.sh)))) * 1000000 + 0.5) / 1000000 AS jaccard
+               {_SET_JACCARD_SQL} AS jaccard
         FROM cand
         JOIN sh sa ON sa.doc_id = doc_a
         JOIN sh sb ON sb.doc_id = doc_b)"""
@@ -1137,9 +1133,9 @@ register(
                a.n_sh AS na, b.n_sh AS nb, count(*) AS c
         FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
         GROUP BY doc_a, doc_b, na, nb)
-    SELECT doc_a, doc_b, floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000 AS jaccard
+    SELECT doc_a, doc_b, {duck_floor_round("c / (na + nb - c)")} AS jaccard
     FROM common
-    WHERE floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000 >= 0.5
+    WHERE {duck_floor_round("c / (na + nb - c)")} >= 0.5
     """,
 )
 
@@ -1732,13 +1728,17 @@ register(
            {_SCORES_SQL}
         FROM toks),
     best AS (SELECT *, {_BEST_SQL} AS best FROM scored)
-    SELECT doc_id, {_PRED_SQL} AS lang_pred, floor((best) * 1000000 + 0.5) / 1000000 AS lang_score
+    SELECT doc_id, {_PRED_SQL} AS lang_pred, {duck_floor_round("best")} AS lang_score
     FROM best
     """,
 )
 
 _EN_SQL = "[" + ", ".join(f"'{w}'" for w in TS.LANG_STOPWORDS["en"]) + "]"
 
+_QUALITY_SCORE_SQL = duck_floor_round(
+    "greatest(0.0, least(1.0, 0.5 + stop_hits / greatest(n_tokens, 1)"
+    " - (n_chars - ls) / greatest(n_chars, 1) * 5))"
+)
 _TEXT_QUALITY_SQL = f"""
     WITH t AS (SELECT doc_id, text, {DUCK_TOKS} AS toks FROM documents),
     m AS (
@@ -1749,15 +1749,14 @@ _TEXT_QUALITY_SQL = f"""
                len(list_filter(toks, t -> list_contains({_EN_SQL}, t))) AS stop_hits
         FROM t)
     SELECT doc_id, n_chars, n_tokens,
-           -- _fr form, not round(x, 6): all four are exact integer
-           -- ratios (tie class, see _fr above)
-           floor((CASE WHEN n_tokens > 0 THEN n_chars / n_tokens ELSE 0.0 END) * 1000000 + 0.5) / 1000000 
-               AS avg_token_len,
-           floor((stop_hits / greatest(n_tokens, 1)) * 1000000 + 0.5) / 1000000 AS stopword_ratio,
-           floor(((n_chars - ls) / greatest(n_chars, 1)) * 1000000 + 0.5) / 1000000 AS punct_ratio,
-           floor((greatest(0.0, least(1.0,
-               0.5 + stop_hits / greatest(n_tokens, 1)
-                   - (n_chars - ls) / greatest(n_chars, 1) * 5))) * 1000000 + 0.5) / 1000000 AS quality_score
+           -- floor-round, not round(x, 6): all four are exact integer
+           -- ratios (tie class, see functions/numerics.py)
+           {duck_floor_round(
+               "CASE WHEN n_tokens > 0 THEN n_chars / n_tokens ELSE 0.0 END"
+           )} AS avg_token_len,
+           {duck_floor_round("stop_hits / greatest(n_tokens, 1)")} AS stopword_ratio,
+           {duck_floor_round("(n_chars - ls) / greatest(n_chars, 1)")} AS punct_ratio,
+           {_QUALITY_SCORE_SQL} AS quality_score
     FROM m
 """
 
@@ -1862,9 +1861,9 @@ register(
              FROM bc GROUP BY doc_id)
     SELECT d.doc_id,
            CAST(coalesce(n_tok, 0) AS BIGINT) AS n_tokens,
-           floor((coalesce(n_distinct / n_tok, 0)) * 1000000 + 0.5) / 1000000 AS distinct_token_ratio,
-           floor((coalesce(max_tok / n_tok, 0)) * 1000000 + 0.5) / 1000000 AS top_token_frac,
-           floor((coalesce(max_bg / n_bg, 0)) * 1000000 + 0.5) / 1000000 AS top_bigram_frac
+           {duck_floor_round("coalesce(n_distinct / n_tok, 0)")} AS distinct_token_ratio,
+           {duck_floor_round("coalesce(max_tok / n_tok, 0)")} AS top_token_frac,
+           {duck_floor_round("coalesce(max_bg / n_bg, 0)")} AS top_bigram_frac
     FROM documents d
     LEFT JOIN tagg USING (doc_id)
     LEFT JOIN bagg ON bagg.doc_id = d.doc_id
@@ -1942,11 +1941,11 @@ register(
 register(
     "events_json_stats",
     lambda spark, sf: E.json_props_stats(spark, sf),
-    """
+    f"""
     SELECT event_type,
            count(*) AS n_events,
            CAST(sum(json_extract_string(props, '$.k')::INT) AS BIGINT) AS sum_k,
-           floor((avg(json_extract_string(props, '$.k')::INT)) * 10000 + 0.5) / 10000 AS avg_k,
+           {duck_floor_round("avg(json_extract_string(props, '$.k')::INT)", 4)} AS avg_k,
            min(json_extract_string(props, '$.k')::INT) AS min_k,
            max(json_extract_string(props, '$.k')::INT) AS max_k
     FROM events GROUP BY event_type
@@ -2454,10 +2453,10 @@ _TEMP_RATES_SQL = f"""
           FROM tw),
     r AS (SELECT lang, total_tokens,
                  CASE WHEN total_tokens = 0 THEN 0.0
-                      ELSE floor((total_tokens / CAST(g.grand AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                      ELSE {duck_floor_round("total_tokens / CAST(g.grand AS DOUBLE)")}
                  END AS p_raw,
                  CASE WHEN total_tokens = 0 THEN 0.0
-                      ELSE floor((wi / CAST(g.s AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                      ELSE {duck_floor_round("wi / CAST(g.s AS DOUBLE)")}
                  END AS p_temp
           FROM tw, g),
     w AS (SELECT *, CASE WHEN p_raw = 0 THEN 0.0 ELSE p_temp / p_raw END AS wgt
@@ -2636,7 +2635,7 @@ register(
            {_SCORES_SQL}
         FROM t),
     lang AS (
-        SELECT doc_id, floor((best) * 1000000 + 0.5) / 1000000 AS lang_score
+        SELECT doc_id, {duck_floor_round("best")} AS lang_score
         FROM (SELECT *, {_BEST_SQL} AS best FROM scored)
         WHERE {_PRED_SQL} = '{TS.CLEAN_LANG}'),
     m AS (
@@ -2648,14 +2647,9 @@ register(
         FROM t),
     qual AS (
         SELECT doc_id, n_tokens,
-               floor((greatest(0.0, least(1.0,
-                   0.5 + stop_hits / greatest(n_tokens, 1)
-                       - (n_chars - ls) / greatest(n_chars, 1) * 5))) * 1000000 + 0.5) / 1000000 AS quality_score
+               {_QUALITY_SCORE_SQL} AS quality_score
         FROM m
-        WHERE floor((greatest(0.0, least(1.0,
-                  0.5 + stop_hits / greatest(n_tokens, 1)
-                      - (n_chars - ls) / greatest(n_chars, 1) * 5))) * 1000000 + 0.5) / 1000000
-              >= {TS.CLEAN_MIN_QUALITY}
+        WHERE {_QUALITY_SCORE_SQL} >= {TS.CLEAN_MIN_QUALITY}
           AND n_tokens BETWEEN {TS.CLEAN_MIN_TOKENS} AND {TS.CLEAN_MAX_TOKENS}
     )
     SELECT canon.doc_id, qual.n_tokens, qual.quality_score, lang.lang_score
@@ -2712,7 +2706,7 @@ register(
              FROM ex JOIN b USING (s) GROUP BY doc_id)
     SELECT p.doc_id, p.n_shingles,
            coalesce(h.n_boiler, 0) AS n_boiler,
-           floor((CAST(coalesce(h.n_boiler, 0) AS DOUBLE) / p.n_shingles) * 1000000 + 0.5) / 1000000
+           {duck_floor_round("CAST(coalesce(h.n_boiler, 0) AS DOUBLE) / p.n_shingles")}
                AS boiler_frac
     FROM per_doc p LEFT JOIN hits h USING (doc_id)
     """,
@@ -3020,6 +3014,10 @@ register(
     """,
 )
 
+_EDIT_SIM_SQL = duck_floor_round(
+    "1.0 - levenshtein(da.text, db.text) / greatest(len(da.text), len(db.text), 1)"
+)
+
 register(
     "editdist_near_duplicates",
     D.q_edit_distance_near_duplicates,
@@ -3027,13 +3025,11 @@ register(
     WITH {DUCK_MINHASH_PAIR_CTES}
     SELECT doc_a, doc_b,
            levenshtein(da.text, db.text) AS edit_dist,
-           floor((1.0 - levenshtein(da.text, db.text)
-                 / greatest(len(da.text), len(db.text), 1)) * 1000000 + 0.5) / 1000000 AS edit_sim
+           {_EDIT_SIM_SQL} AS edit_sim
     FROM cand
     JOIN documents da ON da.doc_id = doc_a
     JOIN documents db ON db.doc_id = doc_b
-    WHERE floor((1.0 - levenshtein(da.text, db.text)
-          / greatest(len(da.text), len(db.text), 1)) * 1000000 + 0.5) / 1000000 >= {D.EDIT_SIM_MIN}
+    WHERE {_EDIT_SIM_SQL} >= {D.EDIT_SIM_MIN}
     """,
 )
 
@@ -3123,9 +3119,9 @@ register(
            count(DISTINCT lang) AS n_langs,
            count(DISTINCT md5(text)) AS n_unique_texts,
            CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           floor((avg(n_chars)) * 10000 + 0.5) / 10000 AS avg_chars,
-           floor((avg(n_tokens)) * 10000 + 0.5) / 10000 AS avg_tokens,
-           floor((avg(CASE WHEN n_tokens < 10 THEN 1.0 ELSE 0.0 END)) * 1000000 + 0.5) / 1000000
+           {duck_floor_round("avg(n_chars)", 4)} AS avg_chars,
+           {duck_floor_round("avg(n_tokens)", 4)} AS avg_tokens,
+           {duck_floor_round("avg(CASE WHEN n_tokens < 10 THEN 1.0 ELSE 0.0 END)")}
                AS short_doc_frac
     FROM t
     """,
@@ -3267,8 +3263,10 @@ register(
            {S.KNN_K} AS k,
            CAST(sum(CASE WHEN label = a_label THEN 1 ELSE 0 END) AS BIGINT)
                AS n_correct,
-           floor((sum(CASE WHEN label = a_label THEN 1 ELSE 0 END)
-                 / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS accuracy
+           {duck_floor_round(
+               "sum(CASE WHEN label = a_label THEN 1 ELSE 0 END)"
+               " / CAST(count(*) AS DOUBLE)"
+           )} AS accuracy
     FROM pred
     """,
 )
@@ -3405,10 +3403,11 @@ register(
 register(
     "source_quality_percentiles",
     AN.source_quality_percentiles,
-    """
+    f"""
     SELECT doc_id, source, CAST(len(text) AS INT) AS n_chars,
-           floor((percent_rank() OVER (PARTITION BY source
-                 ORDER BY len(text), doc_id)) * 1000000 + 0.5) / 1000000 AS pct_rank
+           {duck_floor_round(
+               "percent_rank() OVER (PARTITION BY source ORDER BY len(text), doc_id)"
+           )} AS pct_rank
     FROM documents
     """,
 )
@@ -3498,7 +3497,7 @@ register(
 register(
     "event_type_transitions",
     AN.event_type_transitions,
-    """
+    f"""
     WITH seq AS (
       SELECT event_type AS from_type,
              lead(event_type) OVER (PARTITION BY user_id
@@ -3510,7 +3509,7 @@ register(
       FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
     ),
     tot AS (SELECT from_type, sum(n) AS tot FROM trans GROUP BY 1)
-    SELECT t.from_type, t.to_type, t.n, floor((t.n / tt.tot) * 1000000 + 0.5) / 1000000 AS prob
+    SELECT t.from_type, t.to_type, t.n, {duck_floor_round("t.n / tt.tot")} AS prob
     FROM trans t JOIN tot tt USING (from_type)
     """,
 )
@@ -3605,8 +3604,10 @@ register(
       GROUP BY 1, 2)
     SELECT p.type_a, p.type_b, p.n_sessions,
            p.n_sessions * 1000000 // t.n_total AS support_ppm,
-           floor(((p.n_sessions * t.n_total)
-                 / (CAST(sa.sup AS DOUBLE) * sb.sup)) * 10000 + 0.5) / 10000 AS lift
+           {duck_floor_round(
+               "(p.n_sessions * t.n_total) / (CAST(sa.sup AS DOUBLE) * sb.sup)",
+               4,
+           )} AS lift
     FROM pairs p
     JOIN singles sa ON sa.event_type = p.type_a
     JOIN singles sb ON sb.event_type = p.type_b, tot t
@@ -3700,7 +3701,7 @@ register(
     )
     SELECT bin, count(*) AS n_docs,
            round(avg(p), 4) AS avg_pred_prob,
-           floor((avg(y)) * 10000 + 0.5) / 10000 AS spam_rate
+           {duck_floor_round("avg(y)", 4)} AS spam_rate
     FROM calib GROUP BY bin
     """,
 )
@@ -4094,9 +4095,11 @@ register(
     ),
     est AS (
       SELECT v.jaccard,
-             floor((len(list_filter(range(1, {D.NUM_HASHES} + 1),
-                       i -> sa.sig[i] = sb.sig[i]))
-                   / {D.NUM_HASHES}.0) * 1000000 + 0.5) / 1000000 AS agree
+             {duck_floor_round(
+                 f"len(list_filter(range(1, {D.NUM_HASHES} + 1),"
+                 " i -> sa.sig[i] = sb.sig[i]))"
+                 f" / {D.NUM_HASHES}.0"
+             )} AS agree
       FROM verified v
       JOIN sigs sa ON sa.doc_id = v.doc_a
       JOIN sigs sb ON sb.doc_id = v.doc_b
@@ -4215,7 +4218,7 @@ register(
                 FROM documents)
     SELECT a.doc_id, a.n_tokens,
            coalesce(c.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens,
-           floor((coalesce(c.dup_tokens, 0) / greatest(a.n_tokens, 1)) * 1000000 + 0.5) / 1000000
+           {duck_floor_round("coalesce(c.dup_tokens, 0) / greatest(a.n_tokens, 1)")}
                AS dup_fraction
     FROM alltoks a LEFT JOIN cov c USING (doc_id)
     """,
@@ -4307,8 +4310,9 @@ register(
            CAST(count(*) AS BIGINT) AS distinct_grams,
            CAST(sum(CASE WHEN first_bucket = bucket THEN 1 ELSE 0 END)
                 AS BIGINT) AS novel_grams,
-           floor((sum(CASE WHEN first_bucket = bucket THEN 1 ELSE 0 END)
-                 / count(*)) * 1000000 + 0.5) / 1000000 AS novelty_rate
+           {duck_floor_round(
+               "sum(CASE WHEN first_bucket = bucket THEN 1 ELSE 0 END) / count(*)"
+           )} AS novelty_rate
     FROM pb JOIN fb USING (gram)
     GROUP BY bucket
     """,
@@ -4405,7 +4409,7 @@ register(
                 FROM toks WHERE doc_id {_NEW})
     SELECT a.doc_id, a.n_tokens,
            coalesce(c.dup_old_tokens, CAST(0 AS BIGINT)) AS dup_old_tokens,
-           floor((coalesce(c.dup_old_tokens, 0) / greatest(a.n_tokens, 1)) * 1000000 + 0.5) / 1000000
+           {duck_floor_round("coalesce(c.dup_old_tokens, 0) / greatest(a.n_tokens, 1)")}
                AS dup_fraction
     FROM newtoks a LEFT JOIN cov c USING (doc_id)
     """,
@@ -4621,7 +4625,7 @@ DUCK_GOPHER_FLAGS = f"""
       FROM w)
     SELECT doc_id, n_words, word_chars, n_alpha_words, n_stopword_hits,
            n_lines, n_bullet_lines, n_ellipsis_lines, n_symbols,
-           floor((word_chars / greatest(n_words, 1)) * 1000000 + 0.5) / 1000000 AS mean_word_len,
+           {duck_floor_round("word_chars / greatest(n_words, 1)")} AS mean_word_len,
            n_words BETWEEN {DQ.GOPHER_MIN_WORDS} AND {DQ.GOPHER_MAX_WORDS}
                AS flag_word_count,
            (word_chars >= 3 * n_words AND word_chars <= 10 * n_words)
@@ -4675,8 +4679,7 @@ register(
     WITH m AS ({DUCK_GOPHER_FLAGS}),
     arms AS ({_GOPHER_RATE_ARMS})
     SELECT rule, n_fail,
-           CAST((n_fail * 1000000 + n_docs // 2) // greatest(n_docs, 1)
-                AS BIGINT) AS fail_ppm
+           {duck_ppm("n_fail", "n_docs")} AS fail_ppm
     FROM arms
     """,
 )
@@ -4811,9 +4814,7 @@ register(
            CAST(coalesce(sum(CASE WHEN n_occ > 1 THEN n_occ END), 0)
                 AS BIGINT) AS dup_occurrences,
            CAST(coalesce(sum(n_occ - 1), 0) AS BIGINT) AS removed_occurrences,
-           CAST((coalesce(sum(n_occ - 1), 0) * 1000000
-                 + coalesce(sum(n_occ), 0) // 2)
-                // greatest(coalesce(sum(n_occ), 0), 1) AS BIGINT)
+           {duck_ppm("coalesce(sum(n_occ - 1), 0)", "coalesce(sum(n_occ), 0)")}
                AS dup_line_ppm
     FROM g
     """,
@@ -4905,9 +4906,7 @@ register(
           AND e.doc_id < {D.CONTAM_EVAL_MAX_ID}),
     ver AS (
         SELECT cand.doc_id, cand.eval_id,
-               floor((len(list_intersect(sa.sh, sb.sh)) /
-                     len(list_distinct(list_concat(sa.sh, sb.sh)))) * 1000000 + 0.5) / 1000000
-                   AS jaccard
+               {_SET_JACCARD_SQL} AS jaccard
         FROM cand
         JOIN sh sa ON sa.doc_id = cand.doc_id
         JOIN sh sb ON sb.doc_id = cand.eval_id),
@@ -4984,7 +4983,7 @@ register(
     QM.quality_model_report,
     _sgd_with([("m", "TRUE", "d.docid")], ds_sql=_QM_DS_SQL)
     + _QM_SCORES_TAIL
-    + """
+    + f"""
     SELECT CAST(count(*) AS BIGINT) AS n_docs,
            CAST(coalesce(sum(CASE WHEN label = 'keep' THEN 1 END), 0)
                 AS BIGINT) AS n_keep_label,
@@ -4992,8 +4991,7 @@ register(
                 AS BIGINT) AS n_keep_pred,
            CAST(coalesce(sum(CASE WHEN label = pred THEN 1 END), 0)
                 AS BIGINT) AS n_agree,
-           CAST((coalesce(sum(CASE WHEN label = pred THEN 1 END), 0) * 1000000
-                 + count(*) // 2) // greatest(count(*), 1) AS BIGINT)
+           {duck_ppm("coalesce(sum(CASE WHEN label = pred THEN 1 END), 0)", "count(*)")}
                AS accuracy_ppm
     FROM q_scored""",
 )
@@ -5104,7 +5102,7 @@ register(
     SELECT CAST({S.TOP_K} AS INT) AS k,
            CAST({S.RP_SHORTLIST} AS INT) AS shortlist,
            CAST(count(*) AS BIGINT) AS n_overlap,
-           floor((count(*) / {S.TOP_K}) * 1000000 + 0.5) / 1000000 AS recall
+           {duck_floor_round(f"count(*) / {S.TOP_K}")} AS recall
     FROM rp_short JOIN exact_top USING (vec_id)
     """,
 )
@@ -5156,8 +5154,8 @@ _KANON_ARMS = "\n    UNION ALL ".join(
                AS n_small_cohorts,
            CAST(coalesce(sum(CASE WHEN c < {k} THEN c END), 0) AS BIGINT)
                AS n_users_at_risk,
-           CAST((coalesce(sum(CASE WHEN c < {k} THEN c END), 0) * 1000000
-                 + sum(c) // 2) // greatest(sum(c), 1) AS BIGINT) AS risk_ppm
+           {duck_ppm(f"coalesce(sum(CASE WHEN c < {k} THEN c END), 0)", "sum(c)")}
+               AS risk_ppm
     FROM cohorts"""
     for k in TO.K_ANON_THRESHOLDS
 )
@@ -5317,11 +5315,15 @@ register(
     shares AS (
         SELECT w.source, w.n_docs, w.total_tokens,
                CASE WHEN w.total_tokens > 0
-                    THEN floor((CAST(w.total_tokens AS DOUBLE)
-                               / CAST(tot.grand AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                    THEN {duck_floor_round(
+                             "CAST(w.total_tokens AS DOUBLE)"
+                             " / CAST(tot.grand AS DOUBLE)"
+                         )}
                     ELSE 0.0 END AS p_raw,
                CASE WHEN w.total_tokens > 0
-                    THEN floor((CAST(w.wi AS DOUBLE) / CAST(tot.s AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                    THEN {duck_floor_round(
+                             "CAST(w.wi AS DOUBLE) / CAST(tot.s AS DOUBLE)"
+                         )}
                     ELSE 0.0 END AS p_temp
         FROM w, tot)
     SELECT source, n_docs, total_tokens, p_raw, p_temp,
@@ -5463,8 +5465,7 @@ register(
     SELECT s.doc_id, s.n_tokens,
            CAST(coalesce(c.n_spans, 0) AS BIGINT) AS n_spans,
            CAST(coalesce(c.contam_tokens, 0) AS BIGINT) AS contam_tokens,
-           CAST((coalesce(c.contam_tokens, 0) * 1000000 + s.n_tokens // 2)
-                // greatest(s.n_tokens, 1) AS BIGINT) AS contam_ppm
+           {duck_ppm("coalesce(c.contam_tokens, 0)", "s.n_tokens")} AS contam_ppm
     FROM spine s LEFT JOIN cov c USING (doc_id)
     """,
 )
@@ -5506,10 +5507,8 @@ register(
                CAST(coalesce(sum(n_occ * chunk_len), 0) AS BIGINT) AS sum_len
         FROM g)
     SELECT n_chunks, n_distinct_chunks, dup_occurrences, removed_occurrences,
-           CAST((removed_occurrences * 1000000 + n_chunks // 2)
-                // greatest(n_chunks, 1) AS BIGINT) AS dup_chunk_ppm,
-           CAST((sum_len * 1000000 + n_chunks // 2)
-                // greatest(n_chunks, 1) AS BIGINT) AS mean_chunk_len_micro
+           {duck_ppm("removed_occurrences", "n_chunks")} AS dup_chunk_ppm,
+           {duck_ppm("sum_len", "n_chunks")} AS mean_chunk_len_micro
     FROM tot
     """,
 )
@@ -5646,7 +5645,7 @@ register(
                    a.n_sh AS na, b.n_sh AS nb, count(*) AS c
             FROM ng_ex a JOIN ng_ex b ON a.s = b.s AND a.doc_id < b.doc_id
             GROUP BY 1, 2, 3, 4)
-        WHERE floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000 >= 0.5),
+        WHERE {duck_floor_round("c / (na + nb - c)")} >= 0.5),
     tf AS (SELECT doc_id, tok, count(*) AS tf
            FROM (SELECT doc_id, unnest(toks) AS tok FROM toks)
            GROUP BY doc_id, tok),
@@ -5669,9 +5668,7 @@ register(
         SELECT doc_a, doc_b FROM cand
         JOIN documents da ON da.doc_id = doc_a
         JOIN documents db ON db.doc_id = doc_b
-        WHERE floor((1.0 - levenshtein(da.text, db.text)
-              / greatest(len(da.text), len(db.text), 1)) * 1000000 + 0.5) / 1000000
-              >= {D.EDIT_SIM_MIN}),
+        WHERE {_EDIT_SIM_SQL} >= {D.EDIT_SIM_MIN}),
     tagged AS (
         SELECT 'minhash' AS m, doc_a, doc_b FROM mh
         UNION ALL SELECT 'ngram', doc_a, doc_b FROM ng
@@ -5693,9 +5690,7 @@ register(
         FROM sizes a, sizes b WHERE a.m <= b.m)
     SELECT ma AS method_a, mb AS method_b, n_a, n_b,
            CAST(coalesce(i.n_both, 0) AS BIGINT) AS n_both,
-           CAST((coalesce(i.n_both, 0) * 1000000
-                 + (n_a + n_b - coalesce(i.n_both, 0)) // 2)
-                // greatest(n_a + n_b - coalesce(i.n_both, 0), 1) AS BIGINT)
+           {duck_ppm("coalesce(i.n_both, 0)", "n_a + n_b - coalesce(i.n_both, 0)")}
                AS pair_jaccard_ppm
     FROM grid LEFT JOIN inter i USING (ma, mb)
     """,
@@ -5806,13 +5801,9 @@ register(
            CAST(coalesce(e.n_words, 0) AS BIGINT) AS n_words,
            CAST(coalesce(e.n_subwords, 0) AS BIGINT) AS n_subwords,
            CAST(coalesce(e.n_chars, 0) AS BIGINT) AS n_chars,
-           CAST((coalesce(e.n_subwords, 0) * 1000000
-                 + coalesce(e.n_words, 0) // 2)
-                // greatest(coalesce(e.n_words, 0), 1) AS BIGINT)
+           {duck_ppm("coalesce(e.n_subwords, 0)", "coalesce(e.n_words, 0)")}
                AS fertility_micro,
-           CAST((coalesce(e.n_chars, 0) * 1000000
-                 + coalesce(e.n_subwords, 0) // 2)
-                // greatest(coalesce(e.n_subwords, 0), 1) AS BIGINT)
+           {duck_ppm("coalesce(e.n_chars, 0)", "coalesce(e.n_subwords, 0)")}
                AS chars_per_subword_micro
     FROM (SELECT doc_id FROM documents) d
     LEFT JOIN enc e USING (doc_id)
@@ -5848,8 +5839,7 @@ register(
                    round(coalesce((SELECT max(cosine) FROM mis), 0.0), 6)
                        AS max_missed_cosine)
     SELECT n_exact_pairs, n_scoped_pairs, missed_pairs,
-           CAST((n_scoped_pairs * 1000000 + n_exact_pairs // 2)
-                // greatest(n_exact_pairs, 1) AS BIGINT) AS recall_ppm,
+           {duck_ppm("n_scoped_pairs", "n_exact_pairs")} AS recall_ppm,
            max_missed_cosine
     FROM tot
     """,
@@ -5906,8 +5896,7 @@ register(
     tot AS (SELECT lang AS lang_true, CAST(count(*) AS BIGINT) AS row_total
             FROM documents GROUP BY 1)
     SELECT c.lang_true, c.lang_pred, c.n_docs,
-           CAST((c.n_docs * 1000000 + t.row_total // 2)
-                // greatest(t.row_total, 1) AS BIGINT) AS row_ppm
+           {duck_ppm("c.n_docs", "t.row_total")} AS row_ppm
     FROM cells c JOIN tot t USING (lang_true)
     """,
 )
@@ -5992,14 +5981,10 @@ register(
               FROM bpe_w{BP.N_MERGES}, tv)
     SELECT CAST({BP.BPE_VOCAB_CAP} AS INT) AS vocab_cap,
            sub.total_subword_occ, sub.covered_subword_occ,
-           CAST((sub.covered_subword_occ * 1000000
-                 + sub.total_subword_occ // 2)
-                // greatest(sub.total_subword_occ, 1) AS BIGINT)
+           {duck_ppm("sub.covered_subword_occ", "sub.total_subword_occ")}
                AS coverage_ppm,
            words.total_word_occ, words.fully_covered_word_occ,
-           CAST((words.fully_covered_word_occ * 1000000
-                 + words.total_word_occ // 2)
-                // greatest(words.total_word_occ, 1) AS BIGINT)
+           {duck_ppm("words.fully_covered_word_occ", "words.total_word_occ")}
                AS word_coverage_ppm
     FROM sub, words
     """,
@@ -6050,8 +6035,7 @@ register(
            CAST((sum_micro + n_docs // 2) // n_docs AS BIGINT)
                AS mean_nll_micro,
            head_docs, middle_docs, tail_docs,
-           CAST((head_docs * 1000000 + n_docs // 2)
-                // greatest(n_docs, 1) AS BIGINT) AS head_ppm
+           {duck_ppm("head_docs", "n_docs")} AS head_ppm
     FROM agg
     """,
 )
@@ -6090,8 +6074,7 @@ register(
     tot AS (SELECT bucket, CAST(count(*) AS BIGINT) AS row_total
             FROM j GROUP BY 1)
     SELECT c.bucket, c.quality_ok, c.gopher_ok, c.n_docs,
-           CAST((c.n_docs * 1000000 + t.row_total // 2)
-                // greatest(t.row_total, 1) AS BIGINT) AS bucket_ppm
+           {duck_ppm("c.n_docs", "t.row_total")} AS bucket_ppm
     FROM cells c JOIN tot t USING (bucket)
     """,
 )
@@ -6131,14 +6114,14 @@ register(
     ng_ex AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS s FROM sh),
     tp AS (
         SELECT doc_a, doc_b,
-               CAST(floor((floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000) * 1000000 + 0.5)
+               CAST(floor(({duck_floor_round("c / (na + nb - c)")}) * 1000000 + 0.5)
                     AS BIGINT) AS j_micro
         FROM (
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                    a.n_sh AS na, b.n_sh AS nb, count(*) AS c
             FROM ng_ex a JOIN ng_ex b ON a.s = b.s AND a.doc_id < b.doc_id
             GROUP BY 1, 2, 3, 4)
-        WHERE floor((c / (na + nb - c)) * 1000000 + 0.5) / 1000000
+        WHERE {duck_floor_round("c / (na + nb - c)")}
               >= {min(D.LSH_RECALL_THRESHOLDS) / 100.0}),
     marked AS (
         SELECT tp.j_micro,
@@ -6149,8 +6132,7 @@ register(
     SELECT CAST(t_pct AS INT) AS t_pct,
            CAST(count(*) AS BIGINT) AS n_true_pairs,
            CAST(sum(hit) AS BIGINT) AS n_caught,
-           CAST((sum(hit) * 1000000 + count(*) // 2)
-                // greatest(count(*), 1) AS BIGINT) AS recall_ppm
+           {duck_ppm("sum(hit)", "count(*)")} AS recall_ppm
     FROM marked, spine
     WHERE j_micro >= t_pct * 10000
     GROUP BY t_pct
@@ -6277,8 +6259,7 @@ register(
     tot AS (SELECT media_type, CAST(count(*) AS BIGINT) AS n_total
             FROM k GROUP BY media_type)
     SELECT p.media_type, p.status, p.n_media,
-           CAST((p.n_media * 1000000 + t.n_total // 2)
-                // greatest(t.n_total, 1) AS BIGINT) AS share_ppm
+           {duck_ppm("p.n_media", "t.n_total")} AS share_ppm
     FROM per p JOIN tot t USING (media_type)
     """,
 )
@@ -6454,13 +6435,10 @@ register(
         FROM es JOIN documents d USING (doc_id)
         GROUP BY d.lang)
     SELECT lang, n_docs, n_words, n_subwords, n_chars,
-           CAST((n_subwords * 1000000 + n_words // 2)
-                // greatest(n_words, 1) AS BIGINT) AS fertility_micro,
-           CAST((n_chars * 1000000 + n_subwords // 2)
-                // greatest(n_subwords, 1) AS BIGINT)
+           {duck_ppm("n_subwords", "n_words")} AS fertility_micro,
+           {duck_ppm("n_chars", "n_subwords")}
                AS chars_per_subword_micro,
-           CAST((n_subwords * 1000000 + n_docs // 2)
-                // greatest(n_docs, 1) AS BIGINT) AS subwords_per_doc_micro
+           {duck_ppm("n_subwords", "n_docs")} AS subwords_per_doc_micro
     FROM per
     """,
 )
@@ -6498,10 +6476,9 @@ def _repeat_spectrum_oracle() -> str:
            CAST(count(*) AS BIGINT) AS distinct_contexts,
            CAST(coalesce(sum(CASE WHEN c > 1 THEN c END), 0) AS BIGINT)
                AS repeated_positions,
-           CAST((coalesce(sum(CASE WHEN c > 1 THEN c END), 0) * 1000000
-                 + coalesce(sum(c), 0) // 2)
-                // greatest(coalesce(sum(c), 0), 1) AS BIGINT)
-               AS repeated_ppm
+           {duck_ppm(
+               "coalesce(sum(CASE WHEN c > 1 THEN c END), 0)", "coalesce(sum(c), 0)"
+           )} AS repeated_ppm
     FROM (SELECT id, count(*) AS c FROM t{lvl} GROUP BY id)""")
         width *= 2
     return "WITH " + ",\n    ".join(ctes) + "\n" + "\n    UNION ALL".join(stats)
@@ -6561,10 +6538,9 @@ def _incremental_repeat_spectrum_oracle() -> str:
     return (
         "WITH "
         + ",\n    ".join(ctes)
-        + "\nSELECT width, new_positions, dup_old_positions,"
-        "\n       CAST((dup_old_positions * 1000000 + new_positions // 2)"
-        "\n            // greatest(new_positions, 1) AS BIGINT) AS dup_old_ppm"
-        + f"\nFROM ({body})"
+        + "\nSELECT width, new_positions, dup_old_positions,\n       "
+        + duck_ppm("dup_old_positions", "new_positions")
+        + f" AS dup_old_ppm\nFROM ({body})"
     )
 
 
@@ -6619,9 +6595,7 @@ def _contamination_scorecard_oracle() -> str:
         WHERE c.doc_id >= {m} AND e.doc_id < {m}),
     ver AS (
         SELECT cand.doc_id, cand.eval_id,
-               floor((len(list_intersect(sa.sh, sb.sh)) /
-                     len(list_distinct(list_concat(sa.sh, sb.sh))))
-                     * 1000000 + 0.5) / 1000000 AS jaccard
+               {_SET_JACCARD_SQL} AS jaccard
         FROM cand
         JOIN sh sa ON sa.doc_id = cand.doc_id
         JOIN sh sb ON sb.doc_id = cand.eval_id),
@@ -6666,8 +6640,7 @@ def _contamination_scorecard_oracle() -> str:
            CAST(coalesce(n.near_docs, 0) AS BIGINT) AS near_docs,
            CAST(coalesce(s.span_docs, 0) AS BIGINT) AS span_docs,
            CAST(coalesce(s.span_tokens, 0) AS BIGINT) AS span_tokens,
-           CAST((coalesce(s.span_tokens, 0) * 1000000 + t.tot // 2)
-                // greatest(t.tot, 1) AS BIGINT) AS span_token_ppm
+           {duck_ppm("coalesce(s.span_tokens, 0)", "t.tot")} AS span_token_ppm
     FROM spine sp
     LEFT JOIN exact x USING (suite)
     LEFT JOIN nearleg n USING (suite)

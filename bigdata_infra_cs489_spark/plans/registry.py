@@ -7,7 +7,10 @@ records a weaker rows-only check — keep that set minimal.
 
 Conventions that keep the cross-engine value hash stable:
 - identical output column names on both sides (driver sorts columns by name);
-- doubles rounded (money 2dp, ratios 4dp) on both sides;
+- doubles rounded (money 2dp, ratios 4dp) on both sides; exact integer
+  ratios finish with the tie-stable fixed-point forms (floor-round,
+  integer ppm), whose Spark column and DuckDB SQL twin both come from
+  functions/numerics.py, the one owner of both engines' finishes;
 - timestamps rendered as 'yyyy-MM-dd' / 'yyyy-MM' strings on both sides;
 - top-k queries carry deterministic tie-break orderings on both sides.
 """

@@ -129,7 +129,7 @@ def q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_contract(
         spark,
         lambda: line_dedup_stream(spark, sf_dir, standing),
-        "stream_line_dedup_tbl",
+        "line_dedup",
         "complete",
     )
 
@@ -170,6 +170,6 @@ def q_stream_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    drift = _run_contract(spark, lambda: buckets, "stream_token_drift_tbl", "complete")
+    drift = _run_contract(spark, lambda: buckets, "token_drift", "complete")
     new = {int(r["bucket"]): int(r["n"]) for r in drift.collect()}
     return drift_card_from_counts(spark, old, new)

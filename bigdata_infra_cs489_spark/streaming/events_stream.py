@@ -18,6 +18,10 @@ directory without a long-running job.
 
 from __future__ import annotations
 
+import itertools
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -220,8 +224,6 @@ def run_to_memory(sdf: DataFrame, name: str, output_mode: str = "complete"):
     return q
 
 
-_SINK_SEQ = __import__("itertools").count()
-
 # Upper bound on the state-store instances of a driver-contract backfill.
 # Each shuffle partition of a stateful stream is a state-store instance
 # with its own per-batch commit and snapshot; on local[32], 32 instances
@@ -229,10 +231,19 @@ _SINK_SEQ = __import__("itertools").count()
 STREAM_STATE_PARTITIONS = 8
 
 
-def _run_contract(spark: SparkSession, build, name: str, mode: str) -> DataFrame:
-    """Run a stream built by ``build()`` to completion into the memory
-    table ``name`` and return that table, restoring the session's batch
+_SINK_SEQ = itertools.count()
+
+
+def _run_contract(spark: SparkSession, build, kind: str, mode: str) -> DataFrame:
+    """Run a stream built by ``build()`` to completion into a memory sink
+    and return its result, restoring the session's batch
     shuffle-partition setting after.
+
+    The sink is named ``drv_stream_<kind>_<n>``, unique per call. Its
+    temp view is dropped once the result frame is resolved: the frame
+    keeps the sink's rows alive, while a view left in the session would
+    pin every call's whole output in driver memory for the session's
+    life.
 
     The backfill runs ``min(STREAM_STATE_PARTITIONS, defaultParallelism)``
     state-store instances, so every micro-batch is one wave of cores: on
@@ -242,6 +253,7 @@ def _run_contract(spark: SparkSession, build, name: str, mode: str) -> DataFrame
     ``stream_running_counts`` at sf0.1. The count is sticky per
     checkpoint; every contract starts from a fresh temporary one, so no
     earlier run's count is read back."""
+    name = f"drv_stream_{kind}_{next(_SINK_SEQ)}"
     old = spark.conf.get("spark.sql.shuffle.partitions")
     n = min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
@@ -249,7 +261,36 @@ def _run_contract(spark: SparkSession, build, name: str, mode: str) -> DataFrame
         run_to_memory(build(), name, mode)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+_WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
+
+
+def sink_dir(sf_dir: str, name: str) -> str:
+    """The file-sink directory of contract ``name`` for one fixture scale
+    factor. Per scale factor: a sweep at sf0.01 and a bench at sf0.1 may
+    overlap in separate processes, and sharing one directory would let
+    one run's fresh-sink rmtree delete the other's live checkpoint
+    mid-stream."""
+    sf_tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(_WAREHOUSE, f"{name}_{sf_tag}")
+
+
+def _fresh_sink_dirs(sf_dir: str, name: str) -> tuple[str, str]:
+    """(sink, checkpoint) directories of ``name``, emptied: each contract
+    call demonstrates (and verifies) one complete backfill, not
+    incremental resume — tests cover resume."""
+    out = sink_dir(sf_dir, name)
+    chk = out + "_chk"
+    for p in (out, chk):
+        shutil.rmtree(p, ignore_errors=True)
+    return out, chk
 
 
 def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,18 +299,16 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DataFrame — the streaming plan itself hash-checks against the
     same DuckDB oracle as its batch twin, so watermarking/window assembly
     can't silently drift from batch semantics."""
-    name = f"drv_stream_tumble_{next(_SINK_SEQ)}"
     return _run_contract(
-        spark, lambda: tumbling_counts_stream(spark, sf_dir), name, "complete"
+        spark, lambda: tumbling_counts_stream(spark, sf_dir), "tumble", "complete"
     )
 
 
 def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: sliding windows to completion; hash-checks
     against the same oracle shape as the batch sliding_counts."""
-    name = f"drv_stream_slide_{next(_SINK_SEQ)}"
     return _run_contract(
-        spark, lambda: sliding_counts_stream(spark, sf_dir), name, "complete"
+        spark, lambda: sliding_counts_stream(spark, sf_dir), "slide", "complete"
     )
 
 
@@ -279,9 +318,8 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the next event is >= gap after the last one (the batch sessionize
     splits on strictly-greater; identical on any data without an
     exact-gap-length silence, asserted equal in tests/test_streaming.py)."""
-    name = f"drv_stream_sess_{next(_SINK_SEQ)}"
     return _run_contract(
-        spark, lambda: session_windows_stream(spark, sf_dir), name, "complete"
+        spark, lambda: session_windows_stream(spark, sf_dir), "sess", "complete"
     )
 
 
@@ -291,9 +329,8 @@ def q_stream_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     max per user is the final state however the input was batched, and
     THAT is batch-expressible (count + max event time per user), so the
     custom stateful operator gets a real hash-checked oracle."""
-    name = f"drv_stream_run_{next(_SINK_SEQ)}"
     updates = _run_contract(
-        spark, lambda: running_user_counts_stream(spark, sf_dir), name, "update"
+        spark, lambda: running_user_counts_stream(spark, sf_dir), "run", "update"
     )
     return updates.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -307,9 +344,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — the machinery (state keyed on event_id, watermark eviction)
     still runs end-to-end, and the replayed-duplicate positive case lives
     in tests/test_streaming.py."""
-    name = f"drv_stream_dedup_{next(_SINK_SEQ)}"
     out = _run_contract(
-        spark, lambda: dedup_events_stream(spark, sf_dir), name, "append"
+        spark, lambda: dedup_events_stream(spark, sf_dir), "dedup", "append"
     )
     # render ts per the cross-engine convention (every other contract
     # query ships timestamps as strings; a raw Timestamp cell's pandas
@@ -335,11 +371,10 @@ def q_stream_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F2.col("id") % len(SEGMENTS) + 1).cast("int"),
         ).alias("segment"),
     )
-    name = f"drv_stream_enrich_{next(_SINK_SEQ)}"
     return _run_contract(
         spark,
         lambda: enriched_events_stream(spark, sf_dir, dim),
-        name,
+        "enrich",
         "append",
     )
 
@@ -347,9 +382,8 @@ def q_stream_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_error_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry for the watermarked stream-stream interval
     join; output is id pairs only, so the oracle is engine-portable."""
-    name = f"drv_stream_ssj_{next(_SINK_SEQ)}"
     return _run_contract(
-        spark, lambda: error_click_join_stream(spark, sf_dir), name, "append"
+        spark, lambda: error_click_join_stream(spark, sf_dir), "ssj", "append"
     )
 
 
@@ -363,23 +397,7 @@ def q_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a plain SQL oracle. At scale this is how a stream lands in a
     partitioned table queryable mid-ingest; the checkpoint makes restarts
     resume instead of duplicating."""
-    import os
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    # per-scale-factor sink: a sweep at sf0.01 and a bench at sf0.1 may
-    # overlap in separate processes; sharing one directory would let one
-    # run's fresh-sink rmtree delete the other's live checkpoint mid-stream
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(base, f"stream_sink_events_{sf_tag}")
-    chk = out + "_chk"
-    # fresh sink per call: this query demonstrates (and verifies) one
-    # complete backfill, not incremental resume — tests cover resume
-    for p in (out, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    out, chk = _fresh_sink_dirs(sf_dir, "stream_sink_events")
     ev = stream_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -417,20 +435,7 @@ def q_stream_upsert_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final snapshot hash-checks against the batch argmax oracle, so
     upsert semantics (ts, event_id tie-break) can't drift from batch.
     """
-    import os
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(base, f"stream_upsert_user_state_{sf_tag}")
-    chk = out + "_chk"
-    for p in (out, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    out, chk = _fresh_sink_dirs(sf_dir, "stream_upsert_user_state")
 
     state = {"path": None}
 
@@ -463,8 +468,6 @@ def upsert_user_state(bdf: DataFrame, state: dict, out: str, bid: int) -> None:
     write snapshot version ``bid``. Factored out of the stream so tests
     can drive a multi-batch sequence directly (the fixture backfill is a
     single availableNow batch)."""
-    import os
-
     spark = bdf.sparkSession
     batch_state = bdf.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -4,8 +4,8 @@
 The round-12 sf1 campaign proved that round(x, N) over an EXACT integer
 (or half-integer) ratio diverges cross-engine at exact .5-at-scale ties
 (DSIR: 7 real docs at sf1); round 13 migrated every such finish to the
-floor-micro form (functions/numerics.py::floor_round and
-plans/catalog.py::_fr — floor(x*10^N + 0.5)/10^N, identical IEEE ops on
+floor-micro form (functions/numerics.py::floor_round and its DuckDB
+twin duck_floor_round — floor(x*10^N + 0.5)/10^N, identical IEEE ops on
 both engines). This test pins the migration: every round( occurrence
 left in the assembled oracle SQL must match a SANCTIONED category —
 inexact-argument finishes where an exact decimal tie is unreachable.
@@ -106,7 +106,8 @@ def test_no_unsanctioned_round_finish():
             offenders.append((name, line))
     assert offenders == [], (
         "round() finishes outside the sanctioned (inexact-argument) "
-        "categories — use the floor-micro form (_fr / floor_round) for "
+        "categories — use the floor-micro form (duck_floor_round / "
+        "floor_round) for "
         f"exact-ratio finishes or extend the audited allowlist: {offenders}"
     )
 

@@ -225,6 +225,22 @@ def test_contract_restores_shuffle_partitions_when_build_raises(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_contract_drops_its_sink_view(spark, sf_smoke):
+    """A contract call leaves no memory-sink temp view in the session (a
+    view would pin the call's whole output in driver memory), and the
+    frame it returns still collects after the drop."""
+    from bigdata_infra_cs489_spark.sources.tables import load
+    from bigdata_infra_cs489_spark.streaming.events_stream import q_stream_dedup
+
+    outs = [q_stream_dedup(spark, sf_smoke) for _ in range(3)]
+    left = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("drv_stream_")
+    ]
+    assert left == []
+    n = load(spark, sf_smoke, "events").count()
+    assert [len(o.collect()) for o in outs] == [n, n, n]
+
+
 def test_stream_partitioned_sink_layout_and_counts(spark, sf_smoke):
     """The streaming file sink lands Hive-partitioned parquet whose
     read-back equals the batch table."""
@@ -235,6 +251,7 @@ def test_stream_partitioned_sink_layout_and_counts(spark, sf_smoke):
     from bigdata_infra_cs489_spark.sources.tables import load
     from bigdata_infra_cs489_spark.streaming.events_stream import (
         q_stream_partitioned_sink,
+        sink_dir,
     )
 
     got = sorted(
@@ -253,12 +270,7 @@ def test_stream_partitioned_sink_layout_and_counts(spark, sf_smoke):
         )
     )
     assert got == want
-    sf_tag = os.path.basename(os.path.normpath(sf_smoke))
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse",
-        f"stream_sink_events_{sf_tag}",
-    )
+    out = sink_dir(sf_smoke, "stream_sink_events")
     parts = [d for d in os.listdir(out) if d.startswith("event_type=")]
     assert len(parts) > 1  # Hive-style partition directories
 
